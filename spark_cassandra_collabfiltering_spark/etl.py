@@ -2,9 +2,10 @@
 
 Reference pipeline (CollabFilterCassandraDriver.java:86-103): read CSV,
 filter lines by "I,"/"V," prefix, parse fields 1-3, attach a timeuuid,
-bulk-write each split to its Cassandra table. Quirks fixed per SURVEY
-§1.3: one scan feeds both splits (the reference re-reads the CSV per
-split), and types are clean (int user/product, double rating).
+bulk-write each split to its Cassandra table. Types are clean (int
+user/product, double rating; SURVEY §1.3). Like the reference, each
+split's write is its own job that re-scans the CSV: the CSV is scanned
+twice per load.
 """
 
 from __future__ import annotations
@@ -57,8 +58,12 @@ def to_rating_rows(df: DataFrame) -> DataFrame:
 def populate_tables(
     spark: SparkSession, csv_path: str, storage: Storage
 ) -> tuple[DataFrame, DataFrame]:
-    """Load the CSV once, split by tag, persist both tables
+    """Split the CSV by tag and persist both tables
     (≙ populateTables, CollabFilterCassandraDriver.java:86-92).
+
+    One reader plan feeds both splits, but each ``storage.write`` is a
+    separate job that scans the CSV again, as the reference's two
+    ``loadCsvtoTable`` calls do.
 
     Returns the (training, validation) DataFrames re-read from storage so
     downstream consumers scan the persisted tables exactly like the

@@ -1387,6 +1387,12 @@ def ppjoin_pairs(
     from pyspark.sql import Window
 
     t_pct = int(round(threshold * 100))
+    if t_pct < 1:
+        # the prefix, band and size filters divide by the integer
+        # percent, which rounds to 0 at thresholds up to 0.005
+        raise ValueError(
+            f"ppjoin_pairs: threshold must round to at least 0.01, got {threshold}"
+        )
     c = F.col(text_col)
     grams = F.array_distinct(
         F.transform(

@@ -37,3 +37,18 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_SMOKE
+
+
+@pytest.fixture
+def no_checkpoint_dir(spark):
+    """Run the test with no checkpoint dir on the shared context and
+    put the previous one back afterwards. ``SparkContext.setCheckpointDir``
+    cannot unset it, and a dir left set would make every later ALS fit
+    write reliable checkpoints (checkpointInterval applies whenever one
+    is set)."""
+    jsc = spark.sparkContext._jsc.sc()
+    set_dir = getattr(jsc, "checkpointDir_$eq")  # the Scala var's setter
+    saved = jsc.checkpointDir()
+    set_dir(spark.sparkContext._jvm.scala.Option.apply(None))
+    yield
+    set_dir(saved)

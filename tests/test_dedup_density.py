@@ -264,3 +264,14 @@ def test_ppjoin_band_key_exact_on_length_diverse_corpus(spark):
         ).collect()
     )
     assert got == want and want  # no recall loss, non-trivial answer
+
+
+def test_ppjoin_rejects_threshold_that_rounds_to_zero_percent(spark):
+    import pytest
+
+    df = spark.createDataFrame([(1, "abcdefgh"), (2, "abcdefgx")], "doc_id long, text string")
+    for bad in (0.0, 0.004, 0.005):
+        with pytest.raises(ValueError, match="threshold"):
+            dd.ppjoin_pairs(df, "doc_id", "text", n=4, threshold=bad)
+    # 0.01 is the smallest accepted threshold; the pair shares 4 of 6 grams
+    assert dd.ppjoin_pairs(df, "doc_id", "text", n=4, threshold=0.01).count() == 1

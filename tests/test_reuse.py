@@ -12,14 +12,12 @@ from spark_cassandra_collabfiltering_spark.operators import dedup as dd
 from spark_cassandra_collabfiltering_spark.operators.reuse import shared_subtree
 
 
-def test_reliable_checkpoint_requires_dir(spark):
-    df = spark.range(10)
-    if spark.sparkContext.getCheckpointDir() is None:
-        with pytest.raises(ValueError, match="setCheckpointDir"):
-            shared_subtree(df, reliable_checkpoint=True)
+def test_reliable_checkpoint_requires_dir(spark, no_checkpoint_dir):
+    with pytest.raises(ValueError, match="setCheckpointDir"):
+        shared_subtree(spark.range(10), reliable_checkpoint=True)
 
 
-def test_reliable_checkpoint_matches_local(spark, tmp_path):
+def test_reliable_checkpoint_matches_local(spark, tmp_path, no_checkpoint_dir):
     docs = spark.createDataFrame(
         [(i, ("abcdefgh" * 4) + str(i % 3) * 5) for i in range(30)],
         ["doc_id", "text"],

@@ -47,7 +47,9 @@ def _cc_pairs(spark):
     )
 
 
-def test_connected_components_reliable_checkpoint_agrees(spark, tmp_path):
+def test_connected_components_reliable_checkpoint_agrees(
+    spark, tmp_path, no_checkpoint_dir
+):
     local = {
         (r["node"], r["cluster_id"])
         for r in dd.connected_components(_cc_pairs(spark)).collect()
