@@ -2,7 +2,15 @@
 headline queries — the plan-quality evidence (pushdown, pruning, join
 strategy, codegen) at a glance.
 
-Usage: python scripts/dump_plans.py [sf_dir]
+Usage: python scripts/dump_plans.py [sf_dir [query ...]]
+
+With query names, print each one's full ``explain("formatted")`` to
+stdout instead of writing PLANS.md.
+
+FLAT=1 patches DataFrame.localCheckpoint / checkpoint to identity
+BEFORE building, so subtrees that normally hide inside a
+lazy-checkpoint LogicalRDD (e.g. the ppjoin candidate join) appear in
+the plan. Display only — the shipped queries keep their checkpoints.
 """
 
 from __future__ import annotations
@@ -192,6 +200,7 @@ def main() -> None:
     from spark_cassandra_collabfiltering_spark.plans.queries import QUERIES
 
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+    names = sys.argv[2:]
     spark = (
         SparkSession.builder.master("local[4]")
         .config("spark.sql.shuffle.partitions", "8")
@@ -200,6 +209,19 @@ def main() -> None:
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
+    if os.environ.get("FLAT"):
+        # patch the CLASSIC class — pyspark.sql.DataFrame is the
+        # abstract base in Spark 4 and sessions hand out the classic
+        # subclass, whose own method would shadow a base-class patch
+        from pyspark.sql.classic.dataframe import DataFrame
+
+        DataFrame.localCheckpoint = lambda self, eager=True: self  # type: ignore[method-assign]
+        DataFrame.checkpoint = lambda self, eager=True: self  # type: ignore[method-assign]
+    if names:
+        for name in names:
+            print(f"## {name}\n")
+            QUERIES[name].builder(spark, sf_dir).explain("formatted")
+        return
     out = [HEADER]
     for name in SHOWN:
         df = QUERIES[name].builder(spark, sf_dir)

@@ -83,7 +83,6 @@ def nb_classify(
     text_col: str = "text",
     train_buckets: int = 2,
     train_bucket: int = 0,
-    materialize: bool = False,
     top_k: int = 1,
 ) -> DataFrame:
     """Train a multinomial Naive Bayes classifier on the md5-bucket
@@ -122,11 +121,7 @@ def nb_classify(
     # fusion and per-consumer column pruning, which costs more than
     # the duplicated train tokenize at bench scale. At corpus scale
     # you train once and PERSIST the model to the lake across scoring
-    # runs (that, not an in-plan checkpoint, is the real reuse story);
-    # ``materialize`` additionally pins it in executor memory for
-    # repeated scoring in one session.
-    if materialize:
-        counts = counts.cache()
+    # runs (that, not an in-plan checkpoint, is the real reuse story).
     # per-class scalars: doc prior numerator, token total. C rows.
     cls = (
         train.groupBy(label_col)
@@ -220,14 +215,12 @@ def nb_confusion(
     text_col: str = "text",
     train_buckets: int = 2,
     train_bucket: int = 0,
-    materialize: bool = False,
 ) -> DataFrame:
     """Confusion matrix of :func:`nb_classify` over the held-out split:
     (actual, predicted, n_docs) — the C x C quality readout that makes
     the classifier's behavior (not just its shape) driver-visible."""
     pred = nb_classify(
-        docs, label_col, id_col, text_col, train_buckets, train_bucket,
-        materialize,
+        docs, label_col, id_col, text_col, train_buckets, train_bucket
     )
     return (
         pred.groupBy("actual", "predicted")
@@ -259,7 +252,6 @@ def bigram_lm_xent(
     train_filter,
     id_col: str = "doc_id",
     text_col: str = "text",
-    reliable_checkpoint: bool = False,
 ) -> DataFrame:
     """Per-document cross-entropy under an add-one-smoothed bigram LM
     trained on the ``train_filter`` slice of the same frame — the
@@ -292,7 +284,7 @@ def bigram_lm_xent(
     c_uv = tb.groupBy("prev", "cur").agg(
         F.count(F.lit(1)).cast("bigint").alias("c_uv")
     )
-    c_uv = shared_subtree(c_uv, reliable_checkpoint)
+    c_uv = shared_subtree(c_uv)
     c_u = c_uv.groupBy("prev").agg(F.sum("c_uv").cast("bigint").alias("c_u"))
     vocab_n = c_uv.select("cur").distinct().agg(
         (F.count(F.lit(1)) + 1).cast("bigint").alias("v")
@@ -325,7 +317,6 @@ def bigram_lm_xent_grouped(
     group_col: str = "source",
     id_col: str = "doc_id",
     text_col: str = "text",
-    reliable_checkpoint: bool = False,
 ) -> DataFrame:
     """GROUPED in-plan model training (r6): one add-one-smoothed
     bigram LM per ``group_col`` value, every model trained in the SAME
@@ -355,8 +346,7 @@ def bigram_lm_xent_grouped(
     c_uv = shared_subtree(
         tb.groupBy(group_col, "prev", "cur").agg(
             F.count(F.lit(1)).cast("bigint").alias("c_uv")
-        ),
-        reliable_checkpoint,
+        )
     )
     c_u = c_uv.groupBy(group_col, "prev").agg(
         F.sum("c_uv").cast("bigint").alias("c_u")
@@ -401,7 +391,6 @@ def nb_reliability(
     text_col: str = "text",
     train_buckets: int = 2,
     train_bucket: int = 0,
-    reliable_checkpoint: bool = False,
 ) -> DataFrame:
     """RELIABILITY readout for the NB classifier: bucket held-out docs
     by the winner's MARGIN over the runner-up (the model's own
@@ -419,8 +408,7 @@ def nb_reliability(
         nb_classify(
             docs, label_col, id_col, text_col, train_buckets, train_bucket,
             top_k=2,
-        ),
-        reliable_checkpoint,
+        )
     )  # rank-1 and rank-2 arms share one scoring run
     a = top2.filter(F.col("rk") == 1).select(
         id_col, "actual", "predicted", F.col("score_e3").alias("_s1")
@@ -470,7 +458,6 @@ def nb_binary_auc(
     train_buckets: int = 2,
     train_bucket: int = 0,
     bucket_bits: int = 16,
-    reliable_checkpoint: bool = False,
 ) -> DataFrame:
     """ROC-AUC of the trained NB model as a one-vs-rest detector for
     ``pos_label``, in EXACT integers (Mann-Whitney U): per held-out
@@ -498,8 +485,7 @@ def nb_binary_auc(
         nb_classify(
             docs, label_col, id_col, text_col, train_buckets, train_bucket,
             top_k=1_000_000_000,
-        ),
-        reliable_checkpoint,
+        )
     )  # pos + best-other both read it —
     # share one scoring run instead of doubling the whole NB lineage
     # (diamond-reuse discipline; plan audit measured 120 parquet-scan

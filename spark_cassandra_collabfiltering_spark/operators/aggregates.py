@@ -20,6 +20,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from spark_cassandra_collabfiltering_spark.operators.reuse import shared_subtree
+
 
 def global_mean(df: DataFrame, col: str, alias: str = "mean") -> Column | DataFrame:
     """A2: the reference's global mean as a one-row hash-aggregate."""
@@ -1295,7 +1297,7 @@ def kmv_overlap_pairs(
     # twice, two anti-joins) — share one computation instead of
     # re-deriving the distinct+window per reference (the diamond-reuse
     # discipline; state is <= k rows/group, so the checkpoint is tiny)
-    state = state.localCheckpoint(eager=False)
+    state = shared_subtree(state)
     sa = state.select(F.col(group_col).alias("ga"), "h")
     sb = state.select(F.col(group_col).alias("gb"), "h")
     # every (a < b) group pair — from the bounded group dim, so even

@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from spark_cassandra_collabfiltering_spark.operators.reuse import shared_subtree
 from spark_cassandra_collabfiltering_spark.operators.width import cpu_spread_width
 
 from spark_cassandra_collabfiltering_spark.operators.relational import (
@@ -320,12 +321,10 @@ def domain_mix_sample(
     identity per row anyway. Output is the selected (key, domain)
     rows."""
     # the drawn corpus is referenced by the stats agg AND both phase-2
-    # arms (keep-all + boundary); a lazy local checkpoint computes the
+    # arms (keep-all + boundary); a lazy checkpoint computes the
     # scan+draw once instead of three times (the graph_triangles
-    # diamond-reuse rule; lazy keeps plan construction job-free)
-    base = _draw_bucketed(df, domain_col, key_col, range_bits).localCheckpoint(
-        eager=False
-    )
+    # diamond-reuse rule)
+    base = shared_subtree(_draw_bucketed(df, domain_col, key_col, range_bits))
     stats = _prefix_counts(base, domain_col)
     quota: Column = F.lit(0)
     for d, q in quotas.items():
@@ -420,9 +419,7 @@ def temperature_mix_sample(
     selected rows' md5 draws), pinning exactly WHICH rows were
     chosen, not just how many."""
     # shared-scan discipline: see domain_mix_sample
-    base = _draw_bucketed(df, domain_col, key_col, range_bits).localCheckpoint(
-        eager=False
-    )
+    base = shared_subtree(_draw_bucketed(df, domain_col, key_col, range_bits))
     stats = _prefix_counts(base, domain_col)
     totals = stats.groupBy(domain_col).agg(
         F.sum("_cnt").cast("bigint").alias("_n")

@@ -357,7 +357,6 @@ def minhash_dedup_pairs(
     prefilter_matches: int = 4,
     max_band_bucket: int | None = None,
     oversize: str = "drop",
-    reliable_checkpoint: bool = False,
 ) -> DataFrame:
     """Full minhash-LSH near-dup pipeline: shingle → k-permutation
     signatures → band buckets → candidate pairs → signature-agreement
@@ -395,11 +394,8 @@ def minhash_dedup_pairs(
     # the signature table is referenced four times (both sides of the
     # band self-join, both prefilter probes); the k permutation
     # transforms re-run per reference even over the cached sets — a
-    # lazy local checkpoint computes them once (diamond-reuse rule)
-    sigs = shared_subtree(
-        minhash_signature_table(sets, id_col, n_hashes=n_hashes),
-        reliable_checkpoint,
-    )
+    # lazy checkpoint computes them once (diamond-reuse rule)
+    sigs = shared_subtree(minhash_signature_table(sets, id_col, n_hashes=n_hashes))
     cands = lsh_candidate_pairs(
         sigs, id_col, n_hashes=n_hashes, bands=bands,
         max_band_bucket=max_band_bucket, oversize=oversize,
@@ -467,7 +463,6 @@ def connected_components(
     id_a: str = "id_a",
     id_b: str = "id_b",
     max_iter: int = 20,
-    reliable_checkpoint: bool = False,
 ) -> DataFrame:
     """Connected components over an undirected pair graph via min-label
     propagation: every node starts labeled with itself; each round a
@@ -486,35 +481,18 @@ def connected_components(
     # full lineage, so after k rounds the plan nests k joins deep and
     # planning/execution memory blows up — checkpointing truncates the
     # DAG to the materialized partitions each round (the standard move
-    # for iterative DataFrame algorithms).
-    #
-    # localCheckpoint stores blocks on executors: fastest, but an
-    # executor loss discards them and fails the iteration — fine on
-    # local[n], fragile on a real cluster. reliable_checkpoint=True
-    # switches to fault-tolerant checkpoint() into
-    # SparkContext.setCheckpointDir (HDFS/S3 on a cluster), surviving
-    # executor loss at the cost of a write per round.
-    def ckpt(df: DataFrame) -> DataFrame:
-        if reliable_checkpoint:
-            sc = df.sparkSession.sparkContext
-            # ValueError, not assert: stripped under `python -O`, and a
-            # missing checkpoint dir must never silently degrade.
-            if sc.getCheckpointDir() is None:
-                raise ValueError(
-                    "reliable_checkpoint=True requires "
-                    "SparkContext.setCheckpointDir(<fault-tolerant path>)"
-                )
-            return df.checkpoint(eager=True)
-        return df.localCheckpoint(eager=True)
-
-    edges = ckpt(
+    # for iterative DataFrame algorithms). Local or reliable follows
+    # the checkpoint dir (operators/reuse.py).
+    edges = shared_subtree(
         pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b"))
         .unionByName(pairs.select(F.col(id_b).alias("a"), F.col(id_a).alias("b")))
-        .distinct()
+        .distinct(),
+        eager=True,
     )
-    labels = ckpt(
+    labels = shared_subtree(
         edges.select(F.col("a").alias("node")).distinct()
-        .select("node", F.col("node").alias("label"))
+        .select("node", F.col("node").alias("label")),
+        eager=True,
     )
     converged = False
     for _ in range(max_iter):
@@ -527,7 +505,7 @@ def connected_components(
         # convergence check is a filter+count over the partitions the
         # checkpoint just materialized — the r9 shape re-joined
         # new_labels with labels, an extra join job per round
-        stepped = ckpt(
+        stepped = shared_subtree(
             labels.join(neighbor_min, labels["node"] == neighbor_min["a"], "left")
             .select(
                 "node",
@@ -535,7 +513,8 @@ def connected_components(
                     F.col("label"), F.coalesce(F.col("nbr_label"), F.col("label"))
                 ).alias("label"),
                 F.col("label").alias("_prev"),
-            )
+            ),
+            eager=True,
         )
         changed = stepped.filter(F.col("label") != F.col("_prev")).count()
         labels = stepped.select("node", "label")
@@ -932,11 +911,11 @@ def duplicate_spans(
         _chain("_hb"),
         lambda a, b: F.struct(a.alias("ga"), b.alias("gb")),
     )
-    grams = staged.select(
-        id_col, F.posexplode(gram_keys).alias("pos", "_g")
-    ).select(
-        id_col, "pos", F.col("_g.ga").alias("_ga"), F.col("_g.gb").alias("_gb")
-    ).localCheckpoint(eager=False)
+    grams = shared_subtree(
+        staged.select(id_col, F.posexplode(gram_keys).alias("pos", "_g")).select(
+            id_col, "pos", F.col("_g.ga").alias("_ga"), F.col("_g.gb").alias("_gb")
+        )
+    )
     # diamond reuse: the gram table feeds BOTH the frequency agg and
     # the position join-back — checkpointing materializes the tokenize+
     # hash scan once instead of twice (the in-engine analog of the
@@ -1196,9 +1175,6 @@ def connected_components_bigstar(
     Output: (node, cluster_id), identical to connected_components
     (equality on random graphs is property-tested; the registry row
     hash-matches the same recursive-CTE oracle)."""
-    def ckpt(df: DataFrame) -> DataFrame:
-        return df.localCheckpoint(eager=True)
-
     und = (
         pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
         .unionByName(
@@ -1208,7 +1184,7 @@ def connected_components_bigstar(
         .distinct()
     )
     all_nodes = und.select(F.col("u").alias("node")).distinct()
-    edges = ckpt(und)
+    edges = shared_subtree(und, eager=True)
 
     def star_min(e: DataFrame) -> DataFrame:
         # m(u) = min over N(u) ∪ {u}
@@ -1236,12 +1212,13 @@ def connected_components_bigstar(
             .filter(F.col("a") != F.col("b"))
             .distinct()
         )
-        new_edges = ckpt(
+        new_edges = shared_subtree(
             rewritten.select(F.col("a").alias("u"), F.col("b").alias("v"))
             .unionByName(
                 rewritten.select(F.col("b").alias("u"), F.col("a").alias("v"))
             )
-            .distinct()
+            .distinct(),
+            eager=True,
         )
         # convergence = edge-set equality; both frames are distinct, so
         # equal counts + (new ⊆ old) ⟺ equal — one count plus at most
@@ -1311,7 +1288,6 @@ def ppjoin_pairs(
     threshold: float = 0.40,
     hot_min_df: int = 64,
     hot_vocab_cap: int = 1024,
-    reliable_checkpoint: bool = False,
 ) -> DataFrame:
     """EXACT similarity join via prefix filtering (the PPJoin family,
     Xiao et al. 2008 — prefix + size + positional filters as of r6):
@@ -1420,7 +1396,7 @@ def ppjoin_pairs(
             F.xxhash64(F.lit(0x9E3779B9), "_s").alias("shb"),
         )
     )
-    g = shared_subtree(g, reliable_checkpoint)  # feeds df-agg, prefix, both verify sides
+    g = shared_subtree(g)  # feeds df-agg, prefix, both verify sides
     sizes = g.groupBy("doc").agg(F.count(F.lit(1)).cast("long").alias("sz"))
     dfreq = g.groupBy("sha", "shb").agg(
         F.count(F.lit(1)).cast("long").alias("_df")
@@ -1514,7 +1490,7 @@ def ppjoin_pairs(
         .filter(F.col("_ub") >= alpha)
         .select("id_a", "id_b", "_sa", "_sb")
     )
-    cands = shared_subtree(cands, reliable_checkpoint)  # feeds all three tiers
+    cands = shared_subtree(cands)  # feeds all three tiers
     nwords = (hot_vocab_cap + 63) // 64
     zero_mask = F.expr(f"array_repeat(0L, {nwords})")
 
@@ -1530,7 +1506,7 @@ def ppjoin_pairs(
         )
         .select("sha", "shb", "_hidx")
     )
-    hot = shared_subtree(hot, reliable_checkpoint)  # <= hot_vocab_cap rows; reused 2x
+    hot = shared_subtree(hot)  # <= hot_vocab_cap rows; reused 2x
     # per-doc fixed-width bitmap: two-level agg (map-side combine on
     # (doc, word)), then the word list becomes a dense array
     words = (

@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from spark_cassandra_collabfiltering_spark.operators.reuse import shared_subtree
+
 SCALE_E12 = 10**12
 
 
@@ -66,12 +68,11 @@ def pagerank(
     # the node list; left lazy, Spark re-derives them (and whatever
     # expensive subtree produced `edges` — e.g. a co-occurrence
     # self-join) once PER ITERATION (measured: 44 parquet scans in the
-    # 5-iteration registry plan). A LAZY local checkpoint makes each a
-    # single shared RDD computed once at first action while keeping
-    # plan construction job-free; on a real cluster swap in reliable
-    # checkpointing per the connected_components note.
-    e2 = edges.join(deg, "src").localCheckpoint(eager=False)
-    nodes = deg.select(F.col("src").alias("node")).localCheckpoint(eager=False)
+    # 5-iteration registry plan). A lazy checkpoint makes each a
+    # single shared RDD computed once; its shuffle stages run here, at
+    # plan construction, under AQE (operators/reuse.py).
+    e2 = shared_subtree(edges.join(deg, "src"))
+    nodes = shared_subtree(deg.select(F.col("src").alias("node")))
     if seeds is not None:
         nodes = nodes.join(
             F.broadcast(seeds.select(F.col(seeds.columns[0]).alias("node"))
@@ -250,11 +251,12 @@ def partition_modularity(
         F.col(edges.columns[0]).alias("_a"), F.col(edges.columns[1]).alias("_b")
     )
     # the tagged edge list feeds m, the within-count, and both degree
-    # arms — share it (diamond-reuse rule; lazy keeps plans job-free)
-    tagged = (
+    # arms — share it (diamond-reuse rule; the joins' shuffle stages
+    # run at this call under AQE, see operators/reuse.py)
+    tagged = shared_subtree(
         e.join(lab.withColumnRenamed("_n", "_a").withColumnRenamed("_l", "_la"), "_a")
         .join(lab.withColumnRenamed("_n", "_b").withColumnRenamed("_l", "_lb"), "_b")
-    ).localCheckpoint(eager=False)
+    )
     m_df = tagged.agg(F.count(F.lit(1)).cast("bigint").alias("_m"))
     # per-label within-edges and degree sums (each undirected edge
     # contributes 1 degree to each endpoint's label)

@@ -916,7 +916,7 @@ def _merge_pair_expr(syms: Column, a: str, b: str) -> Column:
 
 
 def bpe_train(
-    vocab: DataFrame, n_merges: int = 10, reliable_checkpoint: bool = False
+    vocab: DataFrame, n_merges: int = 10
 ) -> tuple[list[tuple[str, str]], DataFrame]:
     """Byte-pair-encoding tokenizer training over a distributed
     weighted vocabulary: ``n_merges`` rounds of (count adjacent pairs
@@ -927,13 +927,13 @@ def bpe_train(
     Scale shape per round: one row-local pair build + one hash-agg +
     a ONE-ROW driver read (the argmax pair — the only thing the
     driver ever sees), then a row-local fold applies the merge. The
-    symbol table is localCheckpoint'd per round so the plan stays
+    symbol table is checkpointed per round so the plan stays
     shallow across rounds (the connected-components discipline).
     Stops early when no pair repeats.
 
     Returns (merge list in order, final symbol table).
     """
-    symtab = shared_subtree(bpe_symbols(vocab), reliable_checkpoint)
+    symtab = shared_subtree(bpe_symbols(vocab))
     merges: list[tuple[str, str]] = []
     for _ in range(n_merges):
         best = (
@@ -951,8 +951,7 @@ def bpe_train(
         a, b = best[0]["sym_a"], best[0]["sym_b"]
         merges.append((a, b))
         symtab = shared_subtree(
-            symtab.withColumn("syms", _merge_pair_expr(F.col("syms"), a, b)),
-            reliable_checkpoint,
+            symtab.withColumn("syms", _merge_pair_expr(F.col("syms"), a, b))
         )
     return merges, symtab
 
@@ -1061,7 +1060,6 @@ def lexical_topk(
     id_col: str = "doc_id",
     text_col: str = "text",
     max_df_fraction: float | None = None,
-    materialize: bool = False,
 ) -> DataFrame:
     """Lexical (sparse / inverted-index) retrieval: TF-IDF dot-product
     top-k of corpus docs for each query doc — the lexical arm a
@@ -1097,8 +1095,6 @@ def lexical_topk(
         return words.groupBy(out_id, "term").agg(F.count(F.lit(1)).alias("tf"))
 
     cp = postings(corpus, "doc_id")
-    if materialize:
-        cp = cp.cache()  # 3 consumers; see bm25_topk's trade note
     dfreq = cp.groupBy("term").agg(F.count(F.lit(1)).alias("df_docs"))
     if max_df_fraction is not None:
         ndocs = corpus.agg(F.count(F.lit(1)).alias("n_docs"))
@@ -1153,7 +1149,6 @@ def bm25_topk(
     k1_e2: int = 120,
     b_e2: int = 75,
     max_df_fraction: float | None = None,
-    materialize: bool = False,
 ) -> DataFrame:
     """BM25 lexical retrieval (Robertson-Walker Okapi ranking) over the
     same inverted POSTING-LIST join as :func:`lexical_topk`, in EXACT
@@ -1201,11 +1196,8 @@ def bm25_topk(
     # 32-partition plan four times, costing more than four cheap
     # serial tokenizes). At corpus scale the real answer is PERSISTING
     # the inverted index to the lake once and amortizing it across
-    # query batches; ``materialize`` pins it in executor memory for
-    # that repeated-scoring usage.
+    # query batches.
     cp = postings(corpus, "doc_id")
-    if materialize:
-        cp = cp.cache()
     dl = cp.groupBy("doc_id").agg(F.sum("tf").cast("bigint").alias("dl"))
     stats = dl.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),

@@ -39,6 +39,7 @@ from spark_cassandra_collabfiltering_spark.operators import (
     width as wd,
     windows as win,
 )
+from spark_cassandra_collabfiltering_spark.operators.reuse import shared_subtree
 
 
 @dataclass
@@ -541,7 +542,7 @@ def q_rmse_item_mean(spark, sf_dir):
     # stage was 1.5 s of the query's 2.0 s). Predictions are the same
     # sum/count per product and the squared errors accumulate in exact
     # decimal, so the rounded RMSE is bit-identical (oracle-pinned).
-    r = ratings_df(spark, sf_dir).localCheckpoint(eager=False)
+    r = shared_subtree(ratings_df(spark, sf_dir))
     means = r.groupBy("product").agg(
         F.sum("rating").alias("_s"), F.count(F.lit(1)).alias("_n")
     )
@@ -3439,11 +3440,11 @@ def q_cf_als(spark, sf_dir):
     # feeds three separate actions — ALS.fit, model.transform(val),
     # and the final val⋈preds — and re-executed for each (measured:
     # the three largest stages of the r9 profile were this subtree,
-    # not the solver). A lazy local checkpoint computes it once; the
+    # not the solver). A lazy checkpoint computes it once; the
     # materialized partitions are the same physical output, so the
     # seeded per-partition randomSplit draws identical rows (verified:
     # identical 4517 rows + float predictions at sf0.01).
-    ratings = ratings.localCheckpoint(eager=False)
+    ratings = shared_subtree(ratings)
     train, val = ratings.randomSplit([0.9, 0.1], seed=42)
     model = cf.train(train, max_iter=10)
     preds = cf.predict(model, val)
@@ -4710,7 +4711,7 @@ def q_text_bpe_pairs(spark, sf_dir):
     "Full BPE tokenizer training, 10 merge rounds over the corpus "
     "vocabulary: per round ONE pair-count aggregate + a one-row "
     "driver argmax + a row-local fold applying the merge everywhere "
-    "(localCheckpoint per round keeps plans shallow — the connected-"
+    "(a checkpoint per round keeps plans shallow — the connected-"
     "components discipline). Deterministic tie-breaks make the merge "
     "sequence reproducible; the classic-example merge order is "
     "pinned in tests/test_bpe.py. Non-SQL-expressible (iterative "
@@ -4950,12 +4951,11 @@ def q_graph_triangles(spark, sf_dir):
     # twice, both wedge arms, the closing semi-join, the final left
     # join); as a plain plan subtree Spark recomputes the expensive
     # co-occurrence self-join for each reference (12 parquet scans,
-    # zero reused exchanges — measured 4.8 s at sf0.1). A LAZY local
-    # checkpoint turns it into ONE shared RDD computed once at first
-    # action (1.9 s) — lazy, so plan-building stays job-free for the
-    # plan guards; on a real cluster use reliable checkpoint/persist
-    # per the connected_components note.
-    return gr.triangle_counts(edges.localCheckpoint(eager=False))
+    # zero reused exchanges — measured 4.8 s at sf0.1). A lazy
+    # checkpoint turns it into ONE shared RDD computed once (1.9 s);
+    # under AQE its shuffle stages run while the plan is built, not at
+    # the first action (operators/reuse.py).
+    return gr.triangle_counts(shared_subtree(edges))
 
 
 # ===========================================================================
@@ -5292,25 +5292,25 @@ def _dedup_recall_oracle_sql(
 def q_dedup_recall_matrix(spark, sf_dir):
     d = _doc_subset(spark, sf_dir)
     # each arm is referenced 2-3 times below (its own count + the
-    # hit-join counts); lazy local checkpoints make each a single
-    # shared computation instead of re-running the quadratic truth
-    # join / signature pipeline per reference (the graph_triangles
-    # diamond-reuse rule), while keeping plan construction job-free
-    truth = dd.ngram_jaccard_pairs(d, "doc_id", "text", n=4, threshold=0.40).select(
-        "id_a", "id_b"
-    ).localCheckpoint(eager=False)
+    # hit-join counts); lazy checkpoints make each a single shared
+    # computation instead of re-running the quadratic truth join /
+    # signature pipeline per reference (the graph_triangles
+    # diamond-reuse rule); their shuffle stages run while the plan is
+    # built (operators/reuse.py)
+    truth = shared_subtree(
+        dd.ngram_jaccard_pairs(d, "doc_id", "text", n=4, threshold=0.40)
+        .select("id_a", "id_b")
+    )
     sets = dd.doc_shingle_sets(
         d.repartition(F.col("doc_id")), "doc_id", "text", n=4
     )
-    sigs = dd.minhash_signature_table(sets, "doc_id", n_hashes=16).localCheckpoint(
-        eager=False
-    )
-    cands = dd.lsh_candidate_pairs(
+    sigs = shared_subtree(dd.minhash_signature_table(sets, "doc_id", n_hashes=16))
+    cands = shared_subtree(dd.lsh_candidate_pairs(
         sigs, "doc_id", n_hashes=16, bands=8, max_band_bucket=64, oversize="star"
-    ).localCheckpoint(eager=False)
-    prob = dd.signature_prefilter(
+    ))
+    prob = shared_subtree(dd.signature_prefilter(
         cands, sigs, "doc_id", n_hashes=16, min_matches=4
-    ).localCheckpoint(eager=False)
+    ))
     one = lambda df2, alias: df2.agg(F.count(F.lit(1)).cast("bigint").alias(alias))  # noqa: E731
     row = (
         one(truth, "n_true")
@@ -6062,9 +6062,9 @@ def q_cf_ndcg_als(spark, sf_dir):
     # aggregate feeds the fit action and the two eval references —
     # compute it once (md5 split is per-row deterministic, so rows are
     # identical either way)
-    ratings = ratings.localCheckpoint(eager=False)
+    ratings = shared_subtree(ratings)
     train, val = rk.hash_split_pairs(ratings)
-    val = val.localCheckpoint(eager=False)
+    val = shared_subtree(val)
     model = cf.train(train, max_iter=10)
     recs = (
         model.recommendForAllUsers(10)
@@ -6289,7 +6289,7 @@ def _itemknn_pipeline(spark, sf_dir, user_subset_mod: int | None = None):
     # the per-item counts, the scoring join, the seen anti-join) and
     # val twice (hits + per-user denominator); as plain subtrees each
     # reference re-runs the lineitem⋈orders scan + md5 split + cap
-    # window. Lazy local checkpoints compute each ONCE at first action
+    # window. Lazy checkpoints compute each ONCE
     # (the diamond-reuse rule used by graph_triangles/ppjoin; values
     # are deterministic md5/integer arithmetic, so results are
     # identical either way).
@@ -6300,7 +6300,7 @@ def _itemknn_pipeline(spark, sf_dir, user_subset_mod: int | None = None):
     # one job with independent, concurrently-scheduled stages. The
     # filters below recover exactly the original row sets (the tag is
     # a literal), so every downstream value is unchanged.
-    tagged = (
+    tagged = shared_subtree(
         capped.select("u", "i", F.lit(False).alias("_v"))
         .unionByName(
             val.select(
@@ -6309,7 +6309,6 @@ def _itemknn_pipeline(spark, sf_dir, user_subset_mod: int | None = None):
                 F.lit(True).alias("_v"),
             )
         )
-        .localCheckpoint(eager=False)
     )
     capped = tagged.filter(~F.col("_v")).select("u", "i")
     val = tagged.filter(F.col("_v")).select(
@@ -8186,7 +8185,7 @@ def q_j12_min_cost_supplier(spark, sf_dir):
     "Important parts by value share (TPC-H Q11 shape): per-part "
     "inventory value with a HAVING against a fraction of the GLOBAL "
     "total — the grouped agg feeds both the row stream and the "
-    "one-row global (sum, count), shared via a lazy localCheckpoint "
+    "one-row global (sum, count), shared via a lazy checkpoint "
     "so the fact scan runs once; the one-row scalar broadcast-joins "
     "back (BNLJ on a 1-row side, the tfidf corpus-count shape). "
     "Q11's literal fraction is SF-scaled in the spec (0.0001/SF) "
@@ -8204,10 +8203,9 @@ def q_g13_important_parts(spark, sf_dir):
             * F.col("l_quantity").cast("long")
         ).alias("_vc"),
     )
-    v = (
+    v = shared_subtree(
         li.groupBy(F.col("l_partkey").alias("partkey"))
         .agg(F.sum("_vc").cast("long").alias("value_cents"))
-        .localCheckpoint(eager=False)
     )
     total = v.agg(
         F.sum("value_cents").alias("_total"), F.count(F.lit(1)).alias("_n")
@@ -8247,7 +8245,7 @@ def q_j13_top_revenue_supplier(spark, sf_dir):
         (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1996-04-01").cast("timestamp"))
     )
-    rev = (
+    rev = shared_subtree(
         li.select(
             "l_suppkey",
             (
@@ -8257,7 +8255,6 @@ def q_j13_top_revenue_supplier(spark, sf_dir):
         )
         .groupBy("l_suppkey")
         .agg(F.sum("_rev").cast("long").alias("total_e6"))
-        .localCheckpoint(eager=False)
     )
     mx = rev.agg(F.max("total_e6").alias("_mx"))
     s = t(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
@@ -8296,14 +8293,13 @@ def q_j13_top_revenue_supplier(spark, sf_dir):
     "Balances in exact integer cents.",
 )
 def q_sub4_dormant_customers(spark, sf_dir):
-    pos = (
+    pos = shared_subtree(
         t(spark, sf_dir, "customer")
         .filter(F.col("c_acctbal") > 0.0)
         .select(
             "c_custkey", "c_nationkey",
             F.round(F.col("c_acctbal") * 100, 0).cast("long").alias("bal_cents"),
         )
-        .localCheckpoint(eager=False)
     )
     g = pos.agg(
         F.sum("bal_cents").alias("_total"), F.count(F.lit(1)).alias("_n")
@@ -8463,13 +8459,13 @@ def q_sub5_promotion_suppliers(spark, sf_dir):
 def q_j16_waiting_suppliers(spark, sf_dir):
     li = t(spark, sf_dir, "lineitem")
     ok, ln = F.col("l_orderkey").cast("string"), F.col("l_linenumber").cast("string")
-    lx = li.select(
+    lx = shared_subtree(li.select(
         "l_orderkey", "l_suppkey",
         (rel.md5_draw60(F.concat(F.lit("c:"), ok, F.lit(":"), ln)) % 30)
             .alias("commit_off"),
         (rel.md5_draw60(F.concat(F.lit("r:"), ok, F.lit(":"), ln)) % 30)
             .alias("receipt_off"),
-    ).localCheckpoint(eager=False)  # feeds the probe side + both order aggs
+    ))  # feeds the probe side + both order aggs
     late = lx.filter(F.col("receipt_off") > F.col("commit_off"))
     ord_flags = (
         lx.groupBy("l_orderkey")
@@ -8950,7 +8946,7 @@ def q_o3_returned_item_customers(spark, sf_dir):
 )
 def q_g17_small_quantity_revenue(spark, sf_dir):
     pdim = t(spark, sf_dir, "part").filter(F.col("p_brand") == "Brand#3").select("p_partkey")
-    pl = (
+    pl = shared_subtree(
         t(spark, sf_dir, "lineitem")
         .select(
             "l_partkey",
@@ -8958,7 +8954,6 @@ def q_g17_small_quantity_revenue(spark, sf_dir):
             F.round(F.col("l_extendedprice") * 100, 0).cast("long").alias("_cents"),
         )
         .join(F.broadcast(pdim), F.col("l_partkey") == F.col("p_partkey"))
-        .localCheckpoint(eager=False)
     )
     stats = pl.groupBy("l_partkey").agg(
         F.count(F.lit(1)).cast("long").alias("_n"),
@@ -9250,7 +9245,7 @@ def _nb_f1_oracle() -> str:
 )
 def q_ml_nb_f1(spark, sf_dir):
     conf = tmod.nb_confusion(t(spark, sf_dir, "documents"), label_col="lang")
-    conf = conf.localCheckpoint(eager=False)  # C x C grain, three references
+    conf = shared_subtree(conf)  # C x C grain, three references
     cls = (
         conf.select(F.col("actual").alias("label"))
         .unionByName(conf.select(F.col("predicted").alias("label")))

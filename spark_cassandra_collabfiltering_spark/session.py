@@ -109,8 +109,9 @@ def cluster_conf(
       balloon).
 
     Separately from confs: call ``sc.setCheckpointDir(<reliable fs>)``
-    on the cluster so iterative ops (operators/dedup.py
-    connected_components) can run with ``reliable_checkpoint=True``.
+    on the cluster to make every reuse point (operators/reuse.py) and
+    every ALS fit write fault-tolerant checkpoints there instead of
+    executor-local ones.
     """
     return {
         "spark.sql.shuffle.partitions": str(total_cores * 2),

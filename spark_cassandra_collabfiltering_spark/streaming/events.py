@@ -25,6 +25,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from spark_cassandra_collabfiltering_spark.operators.reuse import shared_subtree
+
 EVENT_SCHEMA = T.StructType(
     [
         T.StructField("event_id", T.LongType(), True),
@@ -363,7 +365,7 @@ def run_foreach_batch_upsert(
         else:
             merged = deduped
         # materialize before overwriting the path we just read
-        merged.localCheckpoint(eager=True).write.mode("overwrite").parquet(target_path)
+        shared_subtree(merged, eager=True).write.mode("overwrite").parquet(target_path)
 
     w = stream_df.writeStream.foreachBatch(apply_batch).outputMode("update")
     if checkpoint is not None:
@@ -403,7 +405,7 @@ def run_foreach_batch_rollup(
             merged = merge_rollup(target.unionByName(batch_partials), factor=1)
         else:
             merged = batch_partials
-        merged.localCheckpoint(eager=True).write.mode("overwrite").parquet(target_path)
+        shared_subtree(merged, eager=True).write.mode("overwrite").parquet(target_path)
 
     q = (
         event_stream.writeStream.foreachBatch(apply_batch)

@@ -43,9 +43,10 @@ def sf_dir() -> str:
 def no_checkpoint_dir(spark):
     """Run the test with no checkpoint dir on the shared context and
     put the previous one back afterwards. ``SparkContext.setCheckpointDir``
-    cannot unset it, and a dir left set would make every later ALS fit
-    write reliable checkpoints (checkpointInterval applies whenever one
-    is set)."""
+    cannot unset it, and a dir left set would switch every later test's
+    reuse points (operators/reuse.py) to reliable checkpoints and make
+    every ALS fit write them too (checkpointInterval applies whenever
+    one is set)."""
     jsc = spark.sparkContext._jsc.sc()
     set_dir = getattr(jsc, "checkpointDir_$eq")  # the Scala var's setter
     saved = jsc.checkpointDir()

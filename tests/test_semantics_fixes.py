@@ -3,8 +3,9 @@
 - except_rows must implement SQL EXCEPT (DISTINCT) on MULTISET inputs
   (the r1 exceptAll().distinct() form yielded {x} for A={x,x}, B={x}).
 - except_all_rows is the separately-named EXCEPT ALL.
-- connected_components: reliable-checkpoint mode must agree with the
-  localCheckpoint mode; non-convergence within max_iter must raise.
+- connected_components: with a checkpoint dir set (reliable
+  checkpoints) it must agree with the localCheckpoint run;
+  non-convergence within max_iter must raise.
 - run_foreach_batch_upsert must NOT swallow a corrupt/unreadable
   existing target by overwriting it with just the current micro-batch.
 """
@@ -47,7 +48,7 @@ def _cc_pairs(spark):
     )
 
 
-def test_connected_components_reliable_checkpoint_agrees(
+def test_connected_components_reliable_mode_agrees(
     spark, tmp_path, no_checkpoint_dir
 ):
     local = {
@@ -57,9 +58,7 @@ def test_connected_components_reliable_checkpoint_agrees(
     spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
     reliable = {
         (r["node"], r["cluster_id"])
-        for r in dd.connected_components(
-            _cc_pairs(spark), reliable_checkpoint=True
-        ).collect()
+        for r in dd.connected_components(_cc_pairs(spark)).collect()
     }
     assert local == reliable
     assert {c for _, c in local} == {1, 10}
@@ -74,43 +73,6 @@ def test_connected_components_nonconvergence_raises(spark):
     # RuntimeError, not assert: must survive `python -O`
     with pytest.raises(RuntimeError, match="did not converge"):
         dd.connected_components(pairs, max_iter=1)
-
-
-@pytest.mark.slow
-def test_connected_components_reliable_without_ckpt_dir_raises():
-    """The no-checkpoint-dir guard, exercised in a SUBPROCESS with its
-    own fresh SparkContext: the session-scoped context shared by this
-    suite may already have a checkpoint dir (another test sets one), so
-    an in-process check would silently skip depending on test order —
-    this way the ValueError path is covered in every full-suite run."""
-    import subprocess
-
-    code = """
-import sys
-sys.path.insert(0, {repo!r})
-from pyspark.sql import SparkSession
-from spark_cassandra_collabfiltering_spark.operators import dedup as dd
-spark = (
-    SparkSession.builder.master("local[2]")
-    .appName("ckpt-guard")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-)
-assert spark.sparkContext.getCheckpointDir() is None
-pairs = spark.createDataFrame([(1, 2), (2, 3)], ["id_a", "id_b"])
-try:
-    dd.connected_components(pairs, reliable_checkpoint=True)
-except ValueError as exc:
-    assert "setCheckpointDir" in str(exc), exc
-    print("GUARD_OK")
-else:
-    print("GUARD_MISSED")
-""".format(repo=os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    proc = subprocess.run(
-        [sys.executable, "-c", code], capture_output=True, text=True, timeout=300
-    )
-    assert "GUARD_OK" in proc.stdout, (proc.stdout, proc.stderr[-2000:])
 
 
 def test_ann_vectorized_scorer_agrees_with_expression_path(spark):
