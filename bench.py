@@ -99,6 +99,8 @@ HEADLINE = [
 def make_spark():
     from pyspark.sql import SparkSession
 
+    from spark_cassandra_collabfiltering_spark.session import CODEGEN_CACHE_ENTRIES
+
     return (
         SparkSession.builder.master(f"local[{CPUS}]")
         .appName("spark_cassandra_collabfiltering-bench")
@@ -109,6 +111,7 @@ def make_spark():
         .config("spark.driver.extraJavaOptions", "-Xss16m")
         .config("spark.executor.extraJavaOptions", "-Xss16m")
         .config("spark.ui.enabled", "false")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .getOrCreate()
     )
 

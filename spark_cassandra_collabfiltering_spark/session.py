@@ -9,6 +9,18 @@ session is the modern ``SparkSession`` with scale-oriented defaults:
 - Arrow on (vectorized Python interchange for the few Pandas UDF paths)
 - shuffle partitions sized to the local parallelism instead of the
   200 default (on a real cluster this is set per-deploy; AQE coalesces)
+- the generated-class cache (``spark.sql.codegen.cache.maxEntries``)
+  raised from 100 to ``CODEGEN_CACHE_ENTRIES`` = 1000, sized from
+  measured working sets: one pass of the perfbench registry workload
+  needs about 184 distinct classes, and bench.py's 25-query HEADLINE
+  suite at sf0.001 about 583 in its first pass plus 63 and 30 plan
+  variants in the next two. At 100 no class survives until its next
+  use, so every rebuild of the same plan recompiles it with Janino and
+  re-JITs it. The conf is static: it takes effect only when set before
+  the JVM starts, so bench.py's ``make_spark`` sets the same constant,
+  and an ``extra_conf`` for an already-running session cannot. Vanilla
+  sessions (``scripts/check_oracle.py --vanilla``) leave it at 100 on
+  purpose; it changes no result, only compile time.
 
 All knobs are plain Spark configs so the same code runs unchanged on a
 1000-executor cluster — only ``master`` and sizing configs change.
@@ -21,6 +33,7 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "4"))
+CODEGEN_CACHE_ENTRIES = 1000
 
 
 def get_spark(
@@ -52,6 +65,7 @@ def get_spark(
         .config("spark.sql.python.filterPushdown.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         # Single-JVM local mode: driver memory IS the executor heap for
         # all N task threads. Spark's 1g default starves wide hash
         # aggregates (the item-kNN wedge agg OOMed at sf1 under it);

@@ -27,6 +27,7 @@ import shutil
 from abc import ABC, abstractmethod
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TESTDATA_TABLES = (
     "region",
@@ -42,9 +43,45 @@ TESTDATA_TABLES = (
 )
 
 
+# Runtime confs that change the schema Spark infers from a parquet footer.
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+# (real path, inode, size, mtime_ns, inference confs) -> inferred schema.
+# Holds schemas only, never data: a rewritten file gets a new key.
+_schemas: dict[tuple, StructType] = {}
+
+
 def read_testdata(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
-    """Scan one driver-provided testdata parquet table."""
-    return spark.read.parquet(os.path.join(sf_dir, f"{table}.parquet"))
+    """Scan one testdata parquet table.
+
+    Inferring a parquet schema runs a Spark job that reads the footer,
+    and every query build re-reads the same few files. So the schema
+    inferred for a regular file is kept, keyed on the file's identity
+    (real path, inode, size, mtime) and the confs that shape inference,
+    and later reads pass it with ``.schema(...)``, which fires no job.
+    Directories and missing paths are read as before, unmemoized.
+    """
+    path = os.path.join(sf_dir, f"{table}.parquet")
+    if not os.path.isfile(path):
+        return spark.read.parquet(path)
+    st = os.stat(path)
+    key = (
+        os.path.realpath(path),
+        st.st_ino,
+        st.st_size,
+        st.st_mtime_ns,
+        tuple(spark.conf.get(k) for k in _INFERENCE_CONFS),
+    )
+    schema = _schemas.get(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    _schemas[key] = df.schema
+    return df
 
 
 def register_testdata_views(spark: SparkSession, sf_dir: str) -> list[str]:

@@ -118,3 +118,47 @@ def test_hopping_assigns_each_event_to_two_windows(spark):
     base = int(dt.datetime(2024, 1, 1, 12, 0, 0).timestamp())
     assert starts == [base, base + 300]
     assert "ev_hopping_agg" in QUERIES
+
+
+def test_canonicalize_from_clusters_keeps_best_quality_member(spark):
+    """The registry's canonicalize step on a hand-built cluster map over
+    sf0.001 documents: each cluster keeps its highest-``quality_e6``
+    member, ties to the smallest id. Expected values come from the
+    text_quality oracle in DuckDB, not from the Spark builder."""
+    from conftest import SF_SMOKE
+
+    from spark_cassandra_collabfiltering_spark.plans.oracle import duckdb_conn
+    from spark_cassandra_collabfiltering_spark.plans.queries import (
+        QUERIES,
+        _canonicalize_from_clusters,
+    )
+
+    conn = duckdb_conn(SF_SMOKE)
+    try:
+        quality = dict(
+            conn.sql(f"SELECT doc_id, quality_e6 FROM ({QUERIES['text_quality'].oracle})").fetchall()
+        )
+    finally:
+        conn.close()
+    members = {
+        0: [0, 1, 2],  # best is not the smallest id
+        5: [5, 17, 269],  # 17 and 269 tie at the top
+        27: [27, 307, 436],  # all three tie
+    }
+    assert max(quality[n] for n in members[0]) != quality[0]
+    assert quality[17] == quality[269] > quality[5]
+    assert quality[27] == quality[307] == quality[436]
+
+    clusters = spark.createDataFrame(
+        [(n, c) for c, ns in members.items() for n in ns], ["node", "cluster_id"]
+    )
+    got = {
+        r.cluster_id: (r.keep_id, r.keep_score, r.n_members)
+        for r in _canonicalize_from_clusters(spark, SF_SMOKE, clusters).collect()
+    }
+    want = {}
+    for c, ns in members.items():
+        keep = min(ns, key=lambda n: (-quality[n], n))
+        want[c] = (keep, quality[keep], len(ns))
+    assert got == want
+    assert got[5][0] == 17 and got[27][0] == 27
