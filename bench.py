@@ -24,75 +24,35 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
-# Headline set: the reference's core pipeline (RMSE analog + ALS) plus
-# one representative per operator family (scan+agg, star join, window,
-# dedup/LSH, ANN, text, event sessionization). r4 adds the two
-# mandated-extension paths that previously had no tracked perf series:
-# approximate ANN (sign-LSH bucketed top-k) and curation
-# (contamination check via broadcast n-gram join). Totals therefore
-# jump vs r1-r3 BY CONSTRUCTION; BASELINE.md carries the r4 comparable
-# per-query series and the widened band. r5 adds two more tracked
-# series the same way (totals widen BY CONSTRUCTION again; the
-# legacy-11/13 subtotals stay the round-over-round comparables):
-# URL canonicalization (scan-local web dedup) and degree-oriented
-# triangle counting (graph clustering structure). r5-cont3 adds BM25
-# (the lexical-retrieval arm's posting-list join — the hybrid-search
-# workhorse) the same way. r5-cont4 adds the two in-engine TRAINED
-# model paths: the Naive Bayes classifier gate (train + score both in
-# the measured plan) and the bigram-LM perplexity filter — the
-# legacy-11/13/16 subtotals stay the round-over-round comparables.
-# r5-cont5 adds trigram-index substring search (candidate-intersection
-# + verify vs the raw LIKE scan it replaces) and multi-touch
-# attribution (the bucketized windowed join + exact cent shares).
+# Headline set, one line per series on why it is tracked. Series were
+# added round by round, so suite totals are not comparable across
+# rounds; BASELINE.md keeps the per-query comparables.
 HEADLINE = [
-    "g1_pricing_summary",
-    "j6_multiway_revenue",
-    "j8_asof_click_attribution",
-    "a3_rmse_item_mean",
-    "w1_topk_per_user",
-    "dedup_minhash_lsh",
-    "text_winnowing",
-    "ann_bruteforce_topk",
-    "ann_lsh_topk",
-    "text_quality",
-    "curation_contamination",
-    "ev_sessionize",
-    "cf_als_pipeline",
-    "curation_url_canonical",
-    "graph_triangles",
-    "lex_bm25_topk",
-    "ml_nb_confusion",
-    "text_lm_perplexity",
-    "lex_trigram_search",
-    "j10_multitouch_attribution",
-    # r5-cont6 adds the Q13 outer-join count-distribution (the classic
-    # skew-benchmark agg) and the bottom-k rank-quantile sketch (the
-    # deterministic KLL slot) as tracked series — totals widen BY
-    # CONSTRUCTION; the legacy-11/13/16/18/20 subtotals stay the
-    # round-over-round comparables.
-    "g14_custdist",
-    "sketch_bottomk_quantiles",
-    # r6 adds the EXACT-similarity join arm (VERDICT r5 #5): PPJoin
-    # was the most expensive registered query with no tracked series —
-    # the prefix-filter calibration now gets a perf line beside
-    # dedup_minhash_lsh's lossy arm. Totals widen BY CONSTRUCTION
-    # (this is the suite's priciest member); the legacy subtotals stay
-    # the comparables.
-    "dedup_ppjoin",
-    # r7 adds the itemknn recommender's bounded-subset twin (VERDICT
-    # r6 #4: the full cf_ndcg_itemknn was the heaviest registered
-    # query with no tracked series — 23-39 s at sf0.1). The _sub
-    # series runs the IDENTICAL wedge-join pipeline on a
-    # deterministic 25% user draw, exact-oracled. Totals widen BY
-    # CONSTRUCTION; the legacy subtotals stay the comparables.
-    "cf_ndcg_itemknn_sub",
-    # r9 adds the Zipfian-vocabulary ppjoin arm (VERDICT r8 #6): the
-    # dedup_ppjoin series is output-bound on the dense shared-vocab
-    # corpus (sf1 answer grows 544×), so this twin runs the IDENTICAL
-    # operator on a sparse-duplicate corpus with linear true-pair
-    # growth — the series that measures the algorithm. Totals widen
-    # BY CONSTRUCTION; the legacy subtotals stay the comparables.
-    "dedup_ppjoin_zipf",
+    "g1_pricing_summary",  # scan + aggregate
+    "j6_multiway_revenue",  # star join
+    "j8_asof_click_attribution",  # as-of join
+    "a3_rmse_item_mean",  # the reference's RMSE analog
+    "w1_topk_per_user",  # window top-k
+    "dedup_minhash_lsh",  # lossy near-duplicate dedup (LSH)
+    "text_winnowing",  # text fingerprinting
+    "ann_bruteforce_topk",  # exact vector search
+    "ann_lsh_topk",  # approximate vector search (sign-LSH buckets)
+    "text_quality",  # text quality heuristics
+    "curation_contamination",  # broadcast n-gram join contamination check
+    "ev_sessionize",  # event sessionization
+    "cf_als_pipeline",  # the reference's ALS pipeline
+    "curation_url_canonical",  # scan-local web dedup
+    "graph_triangles",  # degree-oriented triangle counting
+    "lex_bm25_topk",  # lexical retrieval's posting-list join
+    "ml_nb_confusion",  # in-engine trained Naive Bayes gate
+    "text_lm_perplexity",  # in-engine trained bigram LM filter
+    "lex_trigram_search",  # trigram-index substring search vs raw LIKE
+    "j10_multitouch_attribution",  # bucketized windowed join, exact cents
+    "g14_custdist",  # TPC-H Q13 outer-join count distribution (skew)
+    "sketch_bottomk_quantiles",  # bottom-k rank-quantile sketch
+    "dedup_ppjoin",  # exact-similarity join, the priciest member
+    "cf_ndcg_itemknn_sub",  # itemknn wedge join on a 25% user draw
+    "dedup_ppjoin_zipf",  # ppjoin on a sparse-duplicate corpus (scales linearly)
 ]
 
 

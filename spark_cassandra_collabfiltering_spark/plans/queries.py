@@ -4185,7 +4185,7 @@ def _zorder_oracle_sql(bits: int = 8) -> str:
     "the multi-dimension data-skipping layout (Delta/Iceberg OPTIMIZE "
     "ZORDER BY): range-bucket each dim with exact integer arithmetic, "
     "interleave the bucket bits. Sorting/compacting by this key "
-    "(lake.write_zordered) makes every output file a small "
+    "(lake.txn_compact(zorder_dims=...)) makes every output file a small "
     "hyper-rectangle of the dim space, so parquet min/max footers "
     "prune files for predicates on ANY keyed dimension. All JVM "
     "shift/mask built-ins, scan-local, zero shuffle; the oracle "

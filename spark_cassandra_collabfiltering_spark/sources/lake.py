@@ -1,5 +1,6 @@
-"""Lake-layout writers/readers beyond the plain parquet directory:
-partitioned datasets, bucketed tables, JSON lines.
+"""Lake layouts beyond the plain parquet directory: partitioned
+datasets, bucketed tables, the z-order clustering key, and the
+``txn_*`` transaction log (the repo's one versioned table format).
 
 Scale rationale (the 100 TB story):
 
@@ -12,9 +13,11 @@ Scale rationale (the 100 TB story):
   bucket count join with NO exchange on either side — the shuffle is
   amortized into the layout. This is the batch analog of co-located
   storage; `assert_no_shuffle_join` in tests proves the plan.
-- **JSONL** is the interchange format for document pipelines; always
-  read with an explicit schema (schema inference is a full extra scan
-  and types drift).
+- **Z-order** (`zorder_key`) interleaves several dimensions into one
+  sort key, so per-file min/max stats prune on any of them;
+  ``txn_compact(zorder_dims=...)`` lays a table out on it.
+- **The transaction log** (`txn_*`): atomic commits, time travel,
+  compaction, stats pruning, change feed, vacuum (see its section).
 """
 
 from __future__ import annotations
@@ -62,22 +65,6 @@ def read_table(spark: SparkSession, table: str) -> DataFrame:
     return spark.table(table)
 
 
-def write_jsonl(df: DataFrame, path: str, mode: str = "error") -> None:
-    """One JSON object per line (the document-pipeline interchange
-    format). Compression/partitioning compose like any file sink.
-    Default mode is Spark's fail-fast ``"error"`` — a corpus sink must
-    not silently wipe existing shards on path reuse; overwrite is an
-    explicit opt-in."""
-    df.write.mode(mode).json(path)
-
-
-def read_jsonl(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
-    """Schema'd JSONL scan. The explicit schema keeps the read a single
-    pass (no inference scan) and pins types; corrupt lines surface in
-    ``_corrupt_record`` under the default PERMISSIVE mode."""
-    return spark.read.schema(schema).json(path)
-
-
 def zorder_key(
     dims: list[tuple["str | F.Column", int, int]], bits: int = 8
 ) -> "F.Column":
@@ -119,460 +106,9 @@ def zorder_key(
     return key
 
 
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    dims: list[tuple[str, int, int]],
-    bits: int = 8,
-    n_files: int = 8,
-    mode: str = "overwrite",
-) -> None:
-    """Sort-by-z-key parquet layout: compute the Morton key, RANGE
-    repartition on it (contiguous key ranges per output file — the
-    compaction step of OPTIMIZE ZORDER), sort within partitions, drop
-    the key, write. Each resulting file covers a small hyper-rectangle
-    of the dim space, so min/max footer stats skip files for
-    single-dim AND multi-dim predicates. One shuffle total (the range
-    exchange), the same cost as any global sort compaction."""
-    keyed = df.withColumn("_zkey", zorder_key(dims, bits=bits))
-    (
-        keyed.repartitionByRange(n_files, "_zkey")
-        .sortWithinPartitions("_zkey")
-        .drop("_zkey")
-        .write.mode(mode)
-        .parquet(path)
-    )
-
-
-# --- Versioned snapshots (time travel, manifest-based) ---------------------
-
-def write_snapshot(df: DataFrame, root: str) -> int:
-    """Append a new immutable SNAPSHOT of ``df`` under ``root`` and
-    return its version number — the minimal manifest-based time-travel
-    layout (the idea behind Delta/Iceberg snapshots, format-agnostic):
-    data lives in ``root/v=<N>/`` (written once, never mutated) and a
-    tiny JSON manifest at ``root/_manifest.json`` names the latest
-    committed version. Readers resolve the manifest FIRST, so a
-    half-written snapshot directory is invisible until its manifest
-    commit — the atomicity contract object stores give a single small
-    file PUT.
-
-    Not a transaction log (no concurrent writers, no schema history) —
-    those are what the real table formats add; the read-at-version
-    capability and write-isolation shape are what pipelines need for
-    reproducible training snapshots ("train on corpus v12").
-    """
-    import json
-    import os
-
-    manifest = os.path.join(root, "_manifest.json")
-    version = 0
-    if os.path.exists(manifest):
-        with open(manifest) as fh:
-            version = json.load(fh)["latest"] + 1
-    df.write.mode("error").parquet(os.path.join(root, f"v={version}"))
-    tmp = manifest + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump({"latest": version}, fh)
-    os.replace(tmp, manifest)  # atomic manifest commit
-    return version
-
-
-def read_snapshot(
-    spark: SparkSession, root: str, version: int | None = None
-) -> DataFrame:
-    """Read a committed snapshot: the latest per the manifest, or any
-    pinned historical ``version`` (time travel)."""
-    import json
-    import os
-
-    with open(os.path.join(root, "_manifest.json")) as fh:
-        latest = json.load(fh)["latest"]
-    if version is None:
-        version = latest
-    if not 0 <= version <= latest:
-        raise ValueError(f"version {version} not in [0, {latest}]")
-    return spark.read.parquet(os.path.join(root, f"v={version}"))
-
-
-def compact_snapshot(
-    spark: SparkSession,
-    root: str,
-    target_rows_per_file: int,
-    version: int | None = None,
-) -> int:
-    """Rewrite a snapshot's data into right-sized files and commit the
-    result as a NEW snapshot version — the small-file compaction every
-    long-running ingest needs (streaming/incremental writers emit one
-    file per micro-batch per partition; a 100 TB table accumulates
-    millions of kilobyte files, and scan planning starts to cost more
-    than the scan: every file is an open + a footer read + a split).
-
-    Layout-only by construction: the new version holds byte-identical
-    ROWS (no filter, no projection, no re-encoding of values), only
-    regrouped into ``ceil(rows / target_rows_per_file)`` files via a
-    round-robin repartition. Because snapshots are immutable and the
-    manifest commit is atomic, readers pinned to the old version are
-    untouched and concurrent readers of "latest" switch atomically —
-    compaction never blocks reads (the Delta/Iceberg OPTIMIZE
-    contract). In a real deployment rows-per-file is derived from the
-    table's average row width against the 128 MB scan-split sweet
-    spot; the knob here is rows to keep the test deterministic.
-
-    Returns the new version number.
-    """
-    src = read_snapshot(spark, root, version)
-    n = src.count()
-    files = max(1, -(-n // target_rows_per_file))
-    return write_snapshot(src.repartition(files), root)
-
-
-# --- File-level min/max statistics + data skipping --------------------------
-
-def write_snapshot_stats(
-    spark: SparkSession, root: str, version: int, stats_cols: list[str]
-) -> dict:
-    """Collect per-FILE min/max for ``stats_cols`` over a committed
-    snapshot and persist them as an immutable sidecar
-    (``root/v=<N>/_stats.json``) — the manifest-level statistics that
-    let a reader prune whole files WITHOUT opening them (Iceberg
-    manifest stats / Delta add-file stats). Parquet footers already
-    hold min/max, but footer pruning still costs one open + footer
-    read PER FILE; at millions of files the listing itself is the
-    bottleneck, which is exactly what manifest-side stats remove.
-
-    One columnar scan of the snapshot (only ``stats_cols`` read),
-    grouped by ``input_file_name`` — a tiny agg whose output is
-    O(files x cols). The sidecar is written once per immutable
-    snapshot version, so stats can never drift from data.
-    """
-    import json
-    import os
-
-    from pyspark.sql import functions as F
-
-    path = os.path.join(root, f"v={version}")
-    aggs = []
-    for c in stats_cols:
-        aggs += [F.min(c).alias(f"min_{c}"), F.max(c).alias(f"max_{c}")]
-    rows = (
-        spark.read.parquet(path)
-        .groupBy(F.element_at(F.split(F.input_file_name(), "/"), -1).alias("_f"))
-        .agg(*aggs)
-        .collect()
-    )
-    stats = {
-        r["_f"]: {
-            c: [_stat_val(r[f"min_{c}"]), _stat_val(r[f"max_{c}"])]
-            for c in stats_cols
-        }
-        for r in rows
-    }
-    tmp = os.path.join(path, "_stats.json.tmp")
-    with open(tmp, "w") as fh:
-        json.dump({"cols": stats_cols, "files": stats}, fh)
-    os.replace(tmp, os.path.join(path, "_stats.json"))
-    return stats
-
-
-def prune_files(
-    root: str, version: int, col: str, lo, hi
-) -> "tuple[list[str], int]":
-    """Manifest-level data skipping: the file names of snapshot
-    ``version`` whose [min, max] range for ``col`` overlaps [lo, hi]
-    (inclusive), plus the total file count. Pure manifest arithmetic —
-    no file is opened. A file with NULL min/max (all-null chunk) is
-    kept (NULL-safe: pruning must never drop a file it cannot prove
-    irrelevant)."""
-    import json
-    import os
-
-    with open(os.path.join(root, f"v={version}", "_stats.json")) as fh:
-        st = json.load(fh)
-    if col not in st["cols"]:
-        raise ValueError(f"no stats recorded for column {col!r}")
-    lo, hi = _stat_val(lo), _stat_val(hi)  # like-for-like vs the stats
-    keep = []
-    for fname, cols in st["files"].items():
-        mn, mx = cols[col]
-        if mn is None or mx is None or (mx >= lo and mn <= hi):
-            keep.append(fname)
-    return sorted(keep), len(st["files"])
-
-
-def read_snapshot_pruned(
-    spark: SparkSession, root: str, col: str, lo, hi, version: int | None = None
-) -> "tuple[DataFrame, int, int]":
-    """Range read over a snapshot with manifest-level file skipping:
-    resolve the version, prune files by sidecar min/max, scan ONLY the
-    surviving files, and re-apply the predicate (stats prune at file
-    granularity; the residual filter is still pushed to the parquet
-    reader for row-group pruning inside survivors — the standard
-    two-level skipping stack). Returns (df, files_read, files_total).
-    """
-    import json
-    import os
-
-    from pyspark.sql import functions as F
-
-    if version is None:
-        with open(os.path.join(root, "_manifest.json")) as fh:
-            version = json.load(fh)["latest"]
-    keep, total = prune_files(root, version, col, lo, hi)
-    base = os.path.join(root, f"v={version}")
-    if not keep:  # nothing can match; empty frame with the right schema
-        df = spark.read.parquet(base).filter(F.lit(False))
-        return df, 0, total
-    paths = [os.path.join(base, f) for f in keep]
-    df = spark.read.parquet(*paths).filter(
-        (F.col(col) >= F.lit(lo)) & (F.col(col) <= F.lit(hi))
-    )
-    return df, len(keep), total
-
-
 # ---------------------------------------------------------------------------
-# Manifest-level Bloom filters — point-lookup file skipping
-# ---------------------------------------------------------------------------
-# Min/max sidecar stats (write_snapshot_stats) skip files for RANGE
-# predicates; a point lookup on a high-cardinality key (doc_id, user
-# id) gains nothing from them when every file's [min, max] spans the
-# id space. The Bloom sidecar closes that gap: one small bitmap per
-# file answers "might this file contain key k?" at plan time, no file
-# opened — the Iceberg/Delta bloom-filter-index shape. Hashing is
-# md5-derived on BOTH sides (Spark builds the bitmap with F.md5; the
-# planner tests membership with hashlib.md5), so the sidecar is
-# engine-portable and the driver-side test needs no JVM.
-
-_BLOOM_BITS_LOG2 = 14  # m = 16384 bits = 256 longs/file (~1% FP @ n<=2k keys)
-_BLOOM_HASHES = 5
-
-
-def _bloom_pos_py(value: str, i: int, m: int) -> int:
-    import hashlib
-
-    return int(hashlib.md5(f"{i}:{value}".encode()).hexdigest()[:15], 16) % m
-
-
-def write_snapshot_bloom(
-    spark: SparkSession,
-    root: str,
-    version: int,
-    key_col: str,
-    bits_log2: int = _BLOOM_BITS_LOG2,
-    n_hashes: int = _BLOOM_HASHES,
-) -> dict:
-    """Build a per-FILE Bloom filter over ``key_col`` for a committed
-    snapshot and persist it as an immutable sidecar
-    (``root/v=<N>/_bloom.json``). The build is one columnar scan of
-    (file, key): each key explodes to its n_hashes bit positions, a
-    (file, word) bit_or aggregate folds them into 64-bit words, and
-    the driver collects the SPARSE word map — O(files x m/64) longs,
-    never row-scaled. Written once per immutable version (same
-    no-drift contract as _stats.json). Hash = md5 of "i:<key as
-    string>" truncated to 60 bits — reproducible in any engine or in
-    plain Python, which is what lets prune_files_bloom test
-    membership driver-side at plan time."""
-    import json
-    import os
-
-    from pyspark.sql import functions as F
-
-    m = 1 << bits_log2
-    path = os.path.join(root, f"v={version}")
-    k = F.col(key_col).cast("string")
-    positions = F.array(
-        *[
-            F.conv(
-                F.substring(F.md5(F.concat(F.lit(f"{i}:"), k)), 1, 15), 16, 10
-            ).cast("bigint")
-            % m
-            for i in range(n_hashes)
-        ]
-    )
-    rows = (
-        spark.read.parquet(path)
-        .filter(F.col(key_col).isNotNull())
-        .select(
-            F.element_at(F.split(F.input_file_name(), "/"), -1).alias("_f"),
-            F.explode(positions).alias("_pos"),
-        )
-        .select(
-            "_f",
-            F.shiftright(F.col("_pos"), 6).cast("int").alias("word"),
-            F.expr("shiftleft(1L, cast(_pos % 64 as int))").alias("mask"),
-        )
-        .groupBy("_f", "word")
-        .agg(F.bit_or("mask").alias("bits"))
-        .collect()
-    )
-    files: dict[str, dict[str, int]] = {}
-    for r in rows:
-        files.setdefault(r["_f"], {})[str(int(r["word"]))] = int(r["bits"])
-    sidecar = {
-        "col": key_col,
-        "bits_log2": bits_log2,
-        "n_hashes": n_hashes,
-        "files": files,
-    }
-    tmp = os.path.join(path, "_bloom.json.tmp")
-    with open(tmp, "w") as fh:
-        json.dump(sidecar, fh)
-    os.replace(tmp, os.path.join(path, "_bloom.json"))
-    return sidecar
-
-
-def prune_files_bloom(
-    root: str, version: int, value
-) -> "tuple[list[str], int]":
-    """Point-lookup data skipping: file names of snapshot ``version``
-    whose Bloom filter MIGHT contain ``value``, plus the total file
-    count. Pure sidecar arithmetic, no file opened, no JVM. Bloom
-    semantics: no false negatives (a kept list always covers every
-    true match); false positives only cost a wasted file read. A file
-    absent from the sidecar is kept (skip only on proof)."""
-    import json
-    import os
-
-    base = os.path.join(root, f"v={version}")
-    with open(os.path.join(base, "_bloom.json")) as fh:
-        st = json.load(fh)
-    m = 1 << st["bits_log2"]
-    pos = [_bloom_pos_py(str(value), i, m) for i in range(st["n_hashes"])]
-    # Enumerate the ON-DISK data files, not the sidecar map: a file the
-    # sidecar build skipped (e.g. all-NULL keys) has no proof of
-    # absence and must be kept, and files_total must count it.
-    on_disk = sorted(
-        f for f in os.listdir(base)
-        if f.endswith(".parquet") and not f.startswith(("_", "."))
-    )
-    keep = []
-    for fname in on_disk:
-        words = st["files"].get(fname)
-        if words is None:
-            keep.append(fname)  # no sidecar entry → skip only on proof
-            continue
-        ok = True
-        for p in pos:
-            w = words.get(str(p >> 6), 0)
-            if not (w >> (p % 64)) & 1:
-                ok = False
-                break
-        if ok:
-            keep.append(fname)
-    return keep, len(on_disk)
-
-
-def read_snapshot_point(
-    spark: SparkSession,
-    root: str,
-    key_col: str,
-    value,
-    version: int | None = None,
-) -> "tuple[DataFrame, int, int]":
-    """Point lookup over a snapshot with Bloom file skipping: resolve
-    the version, keep only files whose Bloom might contain the key,
-    scan the survivors, re-apply the equality predicate (pushed to the
-    parquet reader for row-group pruning inside survivors — the same
-    two-level stack as read_snapshot_pruned). Returns
-    (df, files_read, files_total)."""
-    import json
-    import os
-
-    from pyspark.sql import functions as F
-
-    if version is None:
-        with open(os.path.join(root, "_manifest.json")) as fh:
-            version = json.load(fh)["latest"]
-    keep, total = prune_files_bloom(root, version, value)
-    base = os.path.join(root, f"v={version}")
-    if not keep:
-        df = spark.read.parquet(base).filter(F.lit(False))
-        return df, 0, total
-    paths = [os.path.join(base, f) for f in keep]
-    df = spark.read.parquet(*paths).filter(F.col(key_col) == F.lit(value))
-    return df, len(keep), total
-
-
-def snapshot_diff(
-    spark: SparkSession, root: str, v_old: int, v_new: int
-) -> DataFrame:
-    """Row-level DIFF between two committed snapshot versions — the
-    "what changed between yesterday's and today's table" audit query a
-    versioned lake owes its users. Multiset semantics via exceptAll
-    both ways (a row present twice in old and once in new yields one
-    'removed'), tagged 'added' / 'removed'; unchanged rows never
-    appear. Cost is two hash-aggregate-shaped anti-diffs over the two
-    snapshots — no driver-side materialization; at scale both sides
-    shuffle once on the full row hash. Returns the union with a
-    leading ``_op`` column."""
-    from pyspark.sql import functions as F
-
-    old = read_snapshot(spark, root, version=v_old)
-    new = read_snapshot(spark, root, version=v_new)
-    added = new.exceptAll(old).select(F.lit("added").alias("_op"), "*")
-    removed = old.exceptAll(new).select(F.lit("removed").alias("_op"), "*")
-    return added.unionByName(removed)
-
-
-def write_sorted(
-    df: DataFrame, path: str, col: str, n_files: int = 8, mode: str = "error"
-) -> None:
-    """Globally SORTED layout: range-repartition on ``col`` (sampled
-    boundaries — Spark's distributed sort, no single reducer) then
-    sort within each partition before writing. Files end up covering
-    DISJOINT, ordered ranges of ``col``, so parquet min/max footers —
-    and the manifest stats sidecar — become maximally selective: a
-    range predicate touches the minimal file set, and downstream
-    merge-style consumers read pre-sorted runs. This is the
-    single-dimension complement of the z-order layout (use zorder for
-    multi-dim predicates, sorted for one hot dimension)."""
-    from pyspark.sql import functions as F
-
-    (
-        df.repartitionByRange(n_files, F.col(col))
-        .sortWithinPartitions(col)
-        .write.mode(mode)
-        .parquet(path)
-    )
-
-
-def vacuum_snapshots(root: str, keep_last: int = 2) -> list[int]:
-    """RETENTION: delete committed snapshot versions older than the
-    newest ``keep_last`` — the storage-lifecycle half of the
-    immutable-snapshot design (write_snapshot never deletes; without
-    retention the lake grows forever). The manifest tracks only
-    ``latest``, so the on-disk ``v=<N>`` directories ARE the version
-    list; vacuum removes whole old version dirs (data + stats/bloom
-    sidecars go atomically by construction — they live inside the
-    dir) and never touches the newest ``keep_last``, in particular
-    never the manifest's latest. Time travel to a vacuumed version
-    then fails at the missing directory — Delta's VACUUM contract.
-    Returns the deleted version numbers."""
-    import json
-    import os
-    import re
-    import shutil
-
-    if keep_last < 1:
-        raise ValueError("keep_last must be >= 1")
-    with open(os.path.join(root, "_manifest.json")) as fh:
-        latest = json.load(fh)["latest"]
-    versions = sorted(
-        int(m.group(1))
-        for d in os.listdir(root)
-        if (m := re.fullmatch(r"v=(\d+)", d)) and os.path.isdir(os.path.join(root, d))
-    )
-    committed = [v for v in versions if v <= latest]  # uncommitted dirs stay
-    drop = committed[:-keep_last]
-    for v in drop:
-        shutil.rmtree(os.path.join(root, f"v={v}"), ignore_errors=True)
-    return drop
-
-
-# ---------------------------------------------------------------------------
-# Transaction log with optimistic concurrency (r7) — the ACID layer the
-# manifest lake lacked (VERDICT r6 "What's missing" #3). The protocol
-# is the Delta/Iceberg commit shape re-expressed over the one primitive
+# Transaction log with optimistic concurrency. The protocol is the
+# Delta/Iceberg commit shape re-expressed over the one primitive
 # every object store and POSIX FS gives you: atomic create-if-absent
 # (O_CREAT|O_EXCL here; a conditional PUT on S3/GCS).
 #
@@ -1109,6 +645,36 @@ def _stat_val(v):
     if v is None or isinstance(v, (int, float, str, bool)):
         return v
     return None
+
+
+def _files_in_range(files: list, stats: dict, bounds: dict) -> list:
+    """The file-skip rule of every txn_* range read: keep each of
+    ``files`` unless its commit-embedded [min, max] for some column of
+    ``bounds`` ({stats column: (lo, hi)}) PROVABLY misses that range.
+    Skip only on proof: a file with no stats for the column, or a None
+    min/max (all-null chunk, NaN), is kept, and a bound that
+    _stat_val turns into None (absent, NaN, Decimal) leaves that side
+    unbounded."""
+    canon = {c: (_stat_val(lo), _stat_val(hi)) for c, (lo, hi) in bounds.items()}
+    keep = []
+    for f in files:
+        st = stats.get(f, {})
+        for c, (lo, hi) in canon.items():
+            mn, mx = st.get(c) or (None, None)
+            if mn is None or mx is None:
+                continue
+            if (hi is not None and mn > hi) or (lo is not None and mx < lo):
+                break
+        else:
+            keep.append(f)
+    return keep
+
+
+def _require_range(lo, hi) -> None:
+    """A range read needs both bounds: ``col >= NULL`` is never true,
+    so a None bound would return a silent empty result."""
+    if lo is None or hi is None:
+        raise ValueError(f"range bounds must not be None, got {lo!r}..{hi!r}")
 
 
 def _collect_file_stats(
@@ -2351,8 +1917,9 @@ def txn_compact(
     appends rebase straight past it (file-granularity conflicts, the
     property that lets maintenance run continuously under live ingest
     at cluster scale). ``sort_cols`` clusters the rewrite
-    (OPTIMIZE ... ZORDER's single-dimension analog; compose with
-    lake.zorder_key for multi-column interleave): a range repartition
+    (OPTIMIZE ... ZORDER's single-dimension analog; ``zorder_dims``,
+    a list of zorder_key (column, lo, hi) dims, is the multi-column
+    interleave): a range repartition
     into ``n_files`` files plus a within-partition sort, so the
     rewritten files carry DISJOINT min/max stats on the sort key —
     after many interleaved appends this is what restores
@@ -3441,12 +3008,14 @@ def txn_read_pruned(
     [min, max] for ``col`` provably misses [lo, hi] are never opened —
     pure log arithmetic, no parquet footer reads (the skip at millions
     of files is the LISTING, which is what add-file stats remove).
-    Skip-only-on-proof: a live file with no recorded stats, or a NULL
-    min/max (all-null chunk), is always scanned. The residual filter is
-    still pushed to the parquet reader for row-group pruning inside
-    survivors. Returns (df, files_read, files_total)."""
+    Skip-only-on-proof (_files_in_range): a live file with no recorded
+    stats, or a NULL min/max (all-null chunk), is always scanned. The
+    residual filter on the caller's own bounds is still pushed to the
+    parquet reader for row-group pruning inside survivors. A None bound
+    raises ValueError. Returns (df, files_read, files_total)."""
     from pyspark.sql import functions as F
 
+    _require_range(lo, hi)
     latest = txn_latest_version(root)
     if latest is None:
         raise FileNotFoundError(f"no committed versions under {root}")
@@ -3456,16 +3025,7 @@ def txn_read_pruned(
     files, _, stats = _replay(root, version)[:3]
     # stats are keyed by PHYSICAL column name; the caller speaks logical
     pcol = _cm_phys(_cm_mapping(_table_schema_json(root, version)), col)
-    lo, hi = _stat_val(lo), _stat_val(hi)  # like-for-like vs the stats
-    keep = []
-    for f in files:
-        rng = stats.get(f, {}).get(pcol)
-        if rng is None:
-            keep.append(f)  # no proof -> must scan
-            continue
-        mn, mx = rng
-        if mn is None or mx is None or (mx >= lo and mn <= hi):
-            keep.append(f)
+    keep = _files_in_range(files, stats, {pcol: (lo, hi)})
     if not keep:  # nothing can match; empty frame with the right schema
         df = _read_files(spark, root, version, files).filter(F.lit(False))
     else:
@@ -3505,12 +3065,14 @@ def txn_read_pruned_derived(
     raw event timestamp' skips whole date partitions without the
     caller ever naming the partition column. Pure log arithmetic, no
     footer opened; the exact source-range filter is still applied to
-    survivors. Returns (df, files_read, files_total)."""
+    survivors. A None bound raises ValueError. Returns (df, files_read,
+    files_total)."""
     import json
     import re
 
     from pyspark.sql import functions as F
 
+    _require_range(lo, hi)
     latest = txn_latest_version(root)
     if latest is None:
         raise FileNotFoundError(f"no committed versions under {root}")
@@ -3558,17 +3120,10 @@ def txn_read_pruned_derived(
             f"bounds {lo!r}..{hi!r} do not cast to {src_type.simpleString()}"
         )
     gvals = [r["_g"] for r in bounds]
-    glo, ghi = _stat_val(min(gvals)), _stat_val(max(gvals))
-    pg = _cm_phys(mapping, g)
-    keep = []
-    for f in state.files:
-        rng = state.stats.get(f, {}).get(pg)
-        if rng is None:
-            keep.append(f)  # no proof -> must scan
-            continue
-        mn, mx = rng
-        if mn is None or mx is None or (mx >= glo and mn <= ghi):
-            keep.append(f)
+    keep = _files_in_range(
+        state.files, state.stats,
+        {_cm_phys(mapping, g): (min(gvals), max(gvals))},
+    )
     if not keep:
         df = _read_files(spark, root, version, state.files).filter(
             F.lit(False)
@@ -4331,9 +3886,11 @@ def txn_table_read_pruned(
 ) -> "tuple[DataFrame, int, int]":
     """Range read over one catalog table with commit-embedded data
     skipping — same skip-only-on-proof contract as the single-table
-    txn_read_pruned. Returns (df, files_read, files_total)."""
+    txn_read_pruned (_files_in_range); a None bound raises ValueError.
+    Returns (df, files_read, files_total)."""
     from pyspark.sql import functions as F
 
+    _require_range(lo, hi)
     latest = txn_latest_version(cat_root)
     if latest is None:
         raise FileNotFoundError(f"no committed versions under {cat_root}")
@@ -4343,16 +3900,7 @@ def txn_table_read_pruned(
     t = state.get(table)
     if t is None or not t["files"]:
         raise ValueError(f"table {table!r} is empty at version {version}")
-    lo_c, hi_c = _stat_val(lo), _stat_val(hi)
-    keep = []
-    for f in t["files"]:
-        rng = t["stats"].get(f, {}).get(col)
-        if rng is None:
-            keep.append(f)
-            continue
-        mn, mx = rng
-        if mn is None or mx is None or (mx >= lo_c and mn <= hi_c):
-            keep.append(f)
+    keep = _files_in_range(t["files"], t["stats"], {col: (lo, hi)})
     if not keep:
         df = spark.read.parquet(*t["files"]).filter(F.lit(False))
     else:

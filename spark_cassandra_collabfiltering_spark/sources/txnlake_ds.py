@@ -210,34 +210,14 @@ def _prunable_bound(filters) -> dict:
 
 
 def _prune_files(files, stats, mapping, filters):
-    """File-level pruning through commit-embedded [min, max] stats:
-    drop a file only when some pushed bound PROVES it empty (no
-    stats -> must keep). Shared by the single-table and catalog
+    """File-level pruning through commit-embedded [min, max] stats,
+    under the lake's one skip-only-on-proof rule
+    (lake._files_in_range). Shared by the single-table and catalog
     pushdown readers."""
     bounds = _prunable_bound(filters)
-    if not bounds:
-        return files
-    keep = []
-    for f in files:
-        st = stats.get(f, {})
-        ok = True
-        for col, (lo, hi) in bounds.items():
-            rng = st.get(mapping.get(col, col))
-            if rng is None:
-                continue  # no proof -> must keep
-            mn, mx = rng
-            lo_c = lake._stat_val(lo) if lo is not None else None
-            hi_c = lake._stat_val(hi) if hi is not None else None
-            if mn is None or mx is None:
-                continue
-            if (hi_c is not None and mn > hi_c) or (
-                lo_c is not None and mx < lo_c
-            ):
-                ok = False
-                break
-        if ok:
-            keep.append(f)
-    return keep
+    return lake._files_in_range(
+        files, stats, {mapping.get(c, c): b for c, b in bounds.items()}
+    )
 
 
 class TxnLakeReader(DataSourceReader):

@@ -4,9 +4,6 @@
   promises more payload bytes than remain in the file (truncated tail)
   as corrupt_reason='truncated_payload' with the byte count actually
   present — never yield it as a silently-short clean row.
-- prune_files_bloom must enumerate the ON-DISK parquet files of the
-  version dir, keep any file absent from the bloom sidecar (skip only
-  on proof), and count files_total from the disk listing.
 - nb_binary_auc must return the defined sentinel auc_e6 = -1 (not an
   empty/NULL result) when a single training class empties the
   best-other join or when n_pos/n_neg is zero; nb_reliability must
@@ -20,7 +17,6 @@
 
 from __future__ import annotations
 
-import json
 import os
 import sys
 
@@ -30,7 +26,6 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from spark_cassandra_collabfiltering_spark.operators import aggregates as ag  # noqa: E402
 from spark_cassandra_collabfiltering_spark.ml import textmodels as tm  # noqa: E402
-from spark_cassandra_collabfiltering_spark.sources import lake  # noqa: E402
 from spark_cassandra_collabfiltering_spark.sources.warc_source import (  # noqa: E402
     parse_warc_bytes,
 )
@@ -94,40 +89,6 @@ def test_committed_fixture_has_truncated_plant():
     reasons = [r["corrupt_reason"] for r in rows]
     assert "truncated_payload" in reasons
     assert "bad_content_length" in reasons
-
-
-# ---------------------------------------------------------------------------
-# Bloom pruning keeps files absent from the sidecar
-# ---------------------------------------------------------------------------
-
-def test_prune_files_bloom_keeps_unlisted_files(spark, tmp_path):
-    root = str(tmp_path / "lake")
-    df = spark.createDataFrame(
-        [(i, f"k{i % 5}") for i in range(50)], ["id", "key"]
-    ).repartition(4)
-    v = lake.write_snapshot(df, root)
-    base = os.path.join(root, f"v={v}")
-    lake.write_snapshot_bloom(spark, root, v, "key")
-    sidecar = os.path.join(base, "_bloom.json")
-    on_disk = sorted(
-        f for f in os.listdir(base)
-        if f.endswith(".parquet") and not f.startswith(("_", "."))
-    )
-    # drop one data file's entry from the sidecar — simulates a file
-    # the build skipped (e.g. all-NULL keys)
-    with open(sidecar) as fh:
-        st = json.load(fh)
-    victim = sorted(st["files"])[0]
-    del st["files"][victim]
-    with open(sidecar, "w") as fh:
-        json.dump(st, fh)
-    keep, total = lake.prune_files_bloom(root, v, "k0")
-    assert total == len(on_disk)  # counted from disk, not the sidecar map
-    assert victim in keep  # no proof of absence -> kept
-    # and a value matching nothing still keeps the unlisted file
-    keep2, total2 = lake.prune_files_bloom(root, v, "definitely-absent")
-    assert victim in keep2
-    assert total2 == len(on_disk)
 
 
 # ---------------------------------------------------------------------------

@@ -1,5 +1,5 @@
 """Lake-layout tests: partition pruning, bucketed co-located joins
-(plan-asserted: no exchange), JSONL round-trip."""
+(plan-asserted: no exchange), z-order clustering, schema merge."""
 
 from __future__ import annotations
 
@@ -135,25 +135,13 @@ def test_bucketed_ratings_prejoin_single_exchange(spark, tmp_path):
         spark.sql("DROP TABLE IF EXISTS ord_r")
 
 
-def test_jsonl_roundtrip(spark, tmp_path):
-    path = str(tmp_path / "docs.jsonl")
-    docs = load_table(spark, SF_SMOKE, "documents").select(
-        "doc_id", "text", "lang"
-    )
-    lake.write_jsonl(docs, path)
-    back = lake.read_jsonl(spark, path, docs.schema)
-    a = {r["doc_id"]: (r["text"], r["lang"]) for r in docs.collect()}
-    b = {r["doc_id"]: (r["text"], r["lang"]) for r in back.collect()}
-    assert a == b and len(a) > 0
-
-
 def test_zorder_layout_clusters_both_dims(spark, tmp_path):
-    """write_zordered must leave every file covering a SMALL rectangle of
-    (partkey, suppkey) space: both dims clustered, unlike a plain sort
-    which clusters only its leading column and leaves the other at
-    full span per file."""
-    import glob as _glob
-
+    """txn_compact(zorder_dims=...) must leave every file covering a
+    SMALL rectangle of (partkey, suppkey) space: both dims clustered,
+    unlike a sort_cols compaction, which clusters only its leading
+    column and leaves the other at full span per file. Both layouts
+    rewrite the same multi-file appends; spans come from the rewritten
+    files' add-file stats."""
     li = load_table(spark, SF_SMOKE, "lineitem").select(
         "l_orderkey", "l_partkey", "l_suppkey"
     )
@@ -168,35 +156,33 @@ def test_zorder_layout_clusters_both_dims(spark, tmp_path):
         ("l_partkey", lo_hi["l_partkey"][0], lo_hi["l_partkey"][1]),
         ("l_suppkey", lo_hi["l_suppkey"][0], lo_hi["l_suppkey"][1]),
     ]
+    cols = ["l_partkey", "l_suppkey"]
 
-    zpath = str(tmp_path / "zordered")
-    lake.write_zordered(li, zpath, dims, bits=6, n_files=8)
+    def compacted(name, **layout):
+        root = str(tmp_path / name)
+        for part in (0, 1):  # two multi-file appends of disjoint halves
+            lake.txn_write(
+                li.filter(F.col("l_orderkey") % 2 == part).repartition(4), root
+            )
+        v = lake.txn_compact(spark, root, n_files=8, stats_cols=cols, **layout)
+        return root, lake._replay(root, v)
 
-    spath = str(tmp_path / "sorted")
-    (
-        li.repartitionByRange(8, "l_partkey")
-        .sortWithinPartitions("l_partkey")
-        .write.mode("overwrite")
-        .parquet(spath)
-    )
+    zroot, zstate = compacted("zordered", zorder_dims=dims)
+    _, sstate = compacted("sorted", sort_cols=["l_partkey"])
 
-    def mean_ranges(path):
-        files = _glob.glob(path + "/part-*.parquet")
-        assert len(files) >= 4, files
-        spans = {"l_partkey": [], "l_suppkey": []}
-        for f in files:
-            row = spark.read.parquet(f).agg(
-                F.min("l_partkey"), F.max("l_partkey"),
-                F.min("l_suppkey"), F.max("l_suppkey"),
-            ).first()
-            spans["l_partkey"].append(row[1] - row[0])
-            spans["l_suppkey"].append(row[3] - row[2])
+    def mean_ranges(state):
+        assert len(state.files) >= 4, state.files
+        spans = {c: [] for c in cols}
+        for f in state.files:
+            for c in cols:
+                mn, mx = state.stats[f][c]
+                spans[c].append(mx - mn)
         return {c: sum(v) / len(v) for c, v in spans.items()}
 
     full_pk = lo_hi["l_partkey"][1] - lo_hi["l_partkey"][0]
     full_sk = lo_hi["l_suppkey"][1] - lo_hi["l_suppkey"][0]
-    z = mean_ranges(zpath)
-    s = mean_ranges(spath)
+    z = mean_ranges(zstate)
+    s = mean_ranges(sstate)
     # z-order: BOTH dims clustered well below full span per file
     assert z["l_partkey"] < 0.6 * full_pk, z
     assert z["l_suppkey"] < 0.8 * full_sk, z
@@ -205,39 +191,7 @@ def test_zorder_layout_clusters_both_dims(spark, tmp_path):
     # and z-order's non-leading-dim clustering beats the plain sort's
     assert z["l_suppkey"] < s["l_suppkey"], (z, s)
     # row preservation
-    back = spark.read.parquet(zpath)
-    assert back.count() == li.count()
-
-
-def test_snapshot_time_travel(spark, tmp_path):
-    """Manifest-based snapshots: latest resolves through the manifest,
-    any historical version stays readable and immutable, and an
-    uncommitted directory is invisible to readers."""
-    from spark_cassandra_collabfiltering_spark.sources import lake
-
-    root = str(tmp_path / "snaps")
-    v0 = lake.write_snapshot(
-        spark.createDataFrame([(1, "a"), (2, "b")], "id bigint, s string"), root
-    )
-    v1 = lake.write_snapshot(
-        spark.createDataFrame([(1, "a"), (3, "c")], "id bigint, s string"), root
-    )
-    assert (v0, v1) == (0, 1)
-    latest = {tuple(r) for r in lake.read_snapshot(spark, root).collect()}
-    assert latest == {(1, "a"), (3, "c")}
-    pinned = {tuple(r) for r in lake.read_snapshot(spark, root, version=0).collect()}
-    assert pinned == {(1, "a"), (2, "b")}
-    # a data dir without a manifest commit must be invisible
-    spark.createDataFrame([(9, "x")], "id bigint, s string").write.parquet(
-        f"{root}/v=2"
-    )
-    assert lake.read_snapshot(spark, root).collect() == lake.read_snapshot(
-        spark, root, version=1
-    ).collect()
-    import pytest
-
-    with pytest.raises(ValueError):
-        lake.read_snapshot(spark, root, version=2)
+    assert lake.txn_read(spark, zroot).count() == li.count()
 
 
 def test_schema_evolution_merge(spark, tmp_path):
@@ -255,197 +209,6 @@ def test_schema_evolution_merge(spark, tmp_path):
     rows = {r.id: (r.s, r.score) for r in merged.collect()}
     assert rows == {1: ("a", None), 2: ("b", 9.5)}
     assert set(merged.columns) == {"id", "s", "score", "batch"}
-
-
-def test_compact_snapshot_rows_identical_fewer_files(spark, tmp_path):
-    import glob
-    import os
-
-    root = str(tmp_path / "snaps")
-    df = spark.range(1000).select(
-        F.col("id"), (F.col("id") % 7).alias("k"), F.md5(F.col("id").cast("string")).alias("payload")
-    )
-    v0 = lake.write_snapshot(df.repartition(64), root)  # small-file mess
-    before = glob.glob(os.path.join(root, f"v={v0}", "*.parquet"))
-    assert len(before) >= 32
-
-    v1 = lake.compact_snapshot(spark, root, target_rows_per_file=500)
-    after = glob.glob(os.path.join(root, f"v={v1}", "*.parquet"))
-    assert len(after) == 2  # ceil(1000/500)
-
-    # layout-only: byte-identical rows, old version untouched (time travel)
-    a = {tuple(r) for r in lake.read_snapshot(spark, root, version=v0).collect()}
-    b = {tuple(r) for r in lake.read_snapshot(spark, root, version=v1).collect()}
-    assert a == b and len(a) == 1000
-    assert lake.read_snapshot(spark, root).count() == 1000  # latest = compacted
-
-
-def test_manifest_stats_prune_files_and_match_full_scan(spark, tmp_path):
-    root = str(tmp_path / "skip")
-    df = spark.range(10_000).select(
-        F.col("id"), (F.col("id") * 3 % 1000).alias("other")
-    )
-    # range-clustered on id -> disjoint per-file id ranges
-    v = lake.write_snapshot(df.repartitionByRange(10, "id"), root)
-    lake.write_snapshot_stats(spark, root, v, ["id", "other"])
-
-    got, read, total = lake.read_snapshot_pruned(spark, root, "id", 2000, 2999)
-    # repartitionByRange boundaries come from reservoir sampling, so the
-    # 1000-wide probe touches the covering file plus up to one neighbor
-    # per side of boundary jitter — skipping >=7 of 10 files is the
-    # contract, exact boundary placement is not.
-    assert total == 10 and read <= 3
-    expect = {r.id for r in df.filter((F.col("id") >= 2000) & (F.col("id") <= 2999)).collect()}
-    assert {r.id for r in got.collect()} == expect
-
-    # unclustered column: stats exist but every file overlaps -> no skip,
-    # still correct (skipping is an optimization, never a filter)
-    got2, read2, _ = lake.read_snapshot_pruned(spark, root, "other", 10, 20)
-    assert read2 == 10
-    assert got2.count() == df.filter((F.col("other") >= 10) & (F.col("other") <= 20)).count()
-
-
-def test_manifest_stats_empty_prune_returns_empty_with_schema(spark, tmp_path):
-    root = str(tmp_path / "skip2")
-    v = lake.write_snapshot(spark.range(100).repartitionByRange(4, "id"), root)
-    lake.write_snapshot_stats(spark, root, v, ["id"])
-    got, read, total = lake.read_snapshot_pruned(spark, root, "id", 10_000, 20_000)
-    assert (read, total) == (0, 4)
-    assert got.count() == 0 and got.schema.fieldNames() == ["id"]
-
-
-def test_zorder_layout_skips_on_both_dims(spark, tmp_path):
-    root = str(tmp_path / "zskip")
-    df = spark.range(20_000).select(
-        (F.col("id") % 141).alias("x"), (F.col("id") * 7 % 139).alias("y")
-    )
-    keyed = df.withColumn("_zkey", lake.zorder_key([("x", 0, 140), ("y", 0, 138)], bits=8))
-    v = lake.write_snapshot(
-        keyed.repartitionByRange(16, "_zkey").sortWithinPartitions("_zkey").drop("_zkey"),
-        root,
-    )
-    lake.write_snapshot_stats(spark, root, v, ["x", "y"])
-    # narrow filters on EITHER dimension skip files under a z-layout
-    _, rx, total = lake.read_snapshot_pruned(spark, root, "x", 0, 8)
-    _, ry, _ = lake.read_snapshot_pruned(spark, root, "y", 0, 8)
-    assert total == 16 and rx < 16 and ry < 16
-
-
-def test_bloom_sidecar_point_lookup_skips_files(spark, tmp_path):
-    """Bloom file skipping: hash-partitioned files hold disjoint key
-    sets, so a point lookup must read strictly fewer files than the
-    snapshot has — and still return exactly the matching rows (no
-    false negatives, the Bloom contract)."""
-    root = str(tmp_path / "snap")
-    df = spark.range(0, 2000).selectExpr("id", "id * 7 AS payload")
-    v = lake.write_snapshot(df.repartition(8, "id"), root)
-    side = lake.write_snapshot_bloom(spark, root, v, "id")
-    assert side["col"] == "id" and len(side["files"]) == 8
-
-    got, files_read, files_total = lake.read_snapshot_point(
-        spark, root, "id", 1234
-    )
-    rows = got.collect()
-    assert [(r.id, r.payload) for r in rows] == [(1234, 1234 * 7)]
-    assert files_total == 8
-    assert 1 <= files_read < files_total  # skipped most files, kept truth
-
-    # absent key: overwhelmingly likely to prune everything at this FP
-    # rate; correctness holds either way — zero rows back
-    got2, files_read2, _ = lake.read_snapshot_point(
-        spark, root, "id", 99_999_999
-    )
-    assert got2.collect() == []
-    assert files_read2 <= 1  # 5 hashes @ ~1% FP: >1 surviving file ~ never
-
-
-def test_bloom_membership_hash_matches_spark(spark):
-    """The driver-side hashlib membership test must agree bit-for-bit
-    with the Spark-side build hash, else pruning would drop true
-    matches. Rebuild the position set both ways for a key sample."""
-    from pyspark.sql import functions as F
-
-    m = 1 << 14
-    ks = spark.createDataFrame([(k,) for k in [0, 1, 17, 123456789]], "k bigint")
-    for i in range(5):
-        expr = F.conv(
-            F.substring(F.md5(F.concat(F.lit(f"{i}:"), F.col("k").cast("string"))), 1, 15),
-            16, 10,
-        ).cast("bigint") % m
-        got = {r.k: r.p for r in ks.select("k", expr.alias("p")).collect()}
-        for k, p in got.items():
-            assert p == lake._bloom_pos_py(str(k), i, m), (k, i)
-
-
-def test_snapshot_diff_multiset_semantics(spark, tmp_path):
-    root = str(tmp_path / "snapdiff")
-    v0 = lake.write_snapshot(
-        spark.createDataFrame(
-            [(1, "a"), (2, "b"), (2, "b"), (3, "c")], "id bigint, s string"
-        ),
-        root,
-    )
-    v1 = lake.write_snapshot(
-        spark.createDataFrame(
-            [(1, "a"), (2, "b"), (4, "d")], "id bigint, s string"
-        ),
-        root,
-    )
-    got = sorted(
-        (r._op, r.id, r.s) for r in lake.snapshot_diff(spark, root, v0, v1).collect()
-    )
-    # one of the two (2,b) copies removed; (3,c) removed; (4,d) added
-    assert got == [
-        ("added", 4, "d"),
-        ("removed", 2, "b"),
-        ("removed", 3, "c"),
-    ]
-
-
-def test_write_sorted_files_cover_disjoint_ordered_ranges(spark, tmp_path):
-    import glob
-    import os
-
-    path = str(tmp_path / "sorted")
-    df = spark.range(0, 4000).selectExpr(
-        "cast(id * 2654435761 % 4096 as bigint) AS k", "id AS payload"
-    )
-    lake.write_sorted(df, path, "k", n_files=8)
-    files = sorted(glob.glob(os.path.join(path, "*.parquet")))
-    assert len(files) >= 6  # range partitioner may merge near-empty edges
-    ranges = []
-    for f in files:
-        vals = [r.k for r in spark.read.parquet(f).select("k").collect()]
-        assert vals == sorted(vals)  # sorted inside each file
-        if vals:
-            ranges.append((min(vals), max(vals)))
-    ranges.sort()
-    for (lo1, hi1), (lo2, hi2) in zip(ranges, ranges[1:]):
-        assert hi1 <= lo2  # disjoint, ordered coverage across files
-    # round trip: nothing lost
-    assert spark.read.parquet(path).count() == 4000
-
-
-def test_vacuum_snapshots_retains_newest_and_latest(spark, tmp_path):
-    import os
-
-    root = str(tmp_path / "vac")
-    for i in range(4):
-        lake.write_snapshot(
-            spark.createDataFrame([(i,)], "id bigint"), root
-        )
-    dropped = lake.vacuum_snapshots(root, keep_last=2)
-    assert dropped == [0, 1]
-    assert not os.path.isdir(f"{root}/v=0") and not os.path.isdir(f"{root}/v=1")
-    # latest + previous still readable; vacuumed time travel fails
-    assert [r.id for r in lake.read_snapshot(spark, root).collect()] == [3]
-    assert [r.id for r in lake.read_snapshot(spark, root, version=2).collect()] == [2]
-    import pytest as _pytest
-
-    with _pytest.raises(Exception):
-        lake.read_snapshot(spark, root, version=0).collect()
-    with _pytest.raises(ValueError):
-        lake.vacuum_snapshots(root, keep_last=0)
 
 
 def test_dynamic_partition_pruning_on_dim_filter(spark, tmp_path):

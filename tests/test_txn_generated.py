@@ -151,6 +151,10 @@ def test_derived_pruning_via_stats_without_partitioning(spark, tmp_path):
     )
     assert nread < ntotal
     assert df.count() == 24
+    with pytest.raises(ValueError, match="must not be None"):
+        lake.txn_read_pruned_derived(
+            spark, root, "ts", None, "2026-01-09 23:59:59"
+        )
 
 
 def test_derived_pruning_refuses_unrecognized_derivations(spark, tmp_path):

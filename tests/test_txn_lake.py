@@ -7,6 +7,7 @@ object store gives (atomic create-if-absent)."""
 import json
 import os
 import threading
+from decimal import Decimal
 
 import pytest
 
@@ -356,6 +357,25 @@ def test_stats_pruning_skips_provably_irrelevant_files(spark, tmp_path):
     # a range missing every file opens none but keeps the schema
     df, nread, _ = lake.txn_read_pruned(spark, root, "id", 500, 600)
     assert nread == 0 and df.count() == 0 and df.columns == ["id", "v"]
+    # a bound the stats cannot order (Decimal, NaN) is no proof: that
+    # side stays unbounded, and the rows are exactly the filtered ones
+    df, nread, _ = lake.txn_read_pruned(
+        spark, root, "id", Decimal(100), Decimal(105)
+    )
+    assert nread == 3 and _ids(df) == list(range(100, 106))
+    df, nread, _ = lake.txn_read_pruned(spark, root, "id", 100, float("nan"))
+    full = lake.txn_read(spark, root).filter(
+        "id >= 100 AND id <= CAST('NaN' AS DOUBLE)"
+    )
+    assert nread == 2 and _ids(df) == _ids(full) == [
+        *range(100, 110), *range(200, 210)
+    ]
+    # a None bound is an error, never a silent empty result
+    bare = str(tmp_path / "bare")
+    lake.txn_write(_rows(spark, 0, 10), bare)  # no stats
+    for r in (root, bare):
+        with pytest.raises(ValueError):
+            lake.txn_read_pruned(spark, r, "id", None, 5)
 
 
 def test_files_without_stats_are_always_scanned(spark, tmp_path):

@@ -6,6 +6,7 @@ others — the catalog's single O_EXCL log entry IS the atomic point,
 and a catalog version pins a CONSISTENT cross-table snapshot."""
 
 import os
+from decimal import Decimal
 
 import pytest
 
@@ -190,6 +191,17 @@ def test_table_read_pruned_skips_on_catalog_stats(spark, tmp_path):
     )
     assert (nread, ntotal) == (1, 3)
     assert _ids(df) == list(range(100, 105))
+    # a Decimal bound is no proof: every file read, rows exact
+    df, nread, _ = lake.txn_table_read_pruned(
+        spark, cat, "corpus", "doc_id", Decimal(100), Decimal(104)
+    )
+    assert nread == 3 and _ids(df) == list(range(100, 105))
+    # a None bound is an error, with stats and without
+    bare = str(tmp_path / "bare")
+    lake.txn_multi_write(bare, {"corpus": _corpus(spark, 0, 5)})
+    for c in (cat, bare):
+        with pytest.raises(ValueError):
+            lake.txn_table_read_pruned(spark, c, "corpus", "doc_id", None, 4)
 
 
 def test_multi_sink_publishes_each_epoch_atomically(spark, tmp_path):
