@@ -57,22 +57,12 @@ HEADLINE = [
 
 
 def make_spark():
-    from pyspark.sql import SparkSession
+    from spark_cassandra_collabfiltering_spark.session import get_spark
 
-    from spark_cassandra_collabfiltering_spark.session import CODEGEN_CACHE_ENTRIES
-
-    return (
-        SparkSession.builder.master(f"local[{CPUS}]")
-        .appName("spark_cassandra_collabfiltering-bench")
-        .config("spark.sql.shuffle.partitions", str(CPUS))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        .config("spark.driver.extraJavaOptions", "-Xss16m")
-        .config("spark.executor.extraJavaOptions", "-Xss16m")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
-        .getOrCreate()
+    return get_spark(
+        app_name="spark_cassandra_collabfiltering-bench",
+        master=f"local[{CPUS}]",
+        shuffle_partitions=CPUS,
     )
 
 

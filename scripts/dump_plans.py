@@ -195,19 +195,12 @@ column pruning (`ReadSchema`). Things to notice:
 
 
 def main() -> None:
-    from pyspark.sql import SparkSession
-
     from spark_cassandra_collabfiltering_spark.plans.queries import QUERIES
+    from spark_cassandra_collabfiltering_spark.session import get_spark
 
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     names = sys.argv[2:]
-    spark = (
-        SparkSession.builder.master("local[4]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = get_spark(master="local[4]", shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
     if os.environ.get("FLAT"):
         # patch the CLASSIC class — pyspark.sql.DataFrame is the

@@ -72,7 +72,7 @@ def populate_tables(
     raw = read_ratings_csv(spark, csv_path)
     for tag, table in ((TRAINING_TAG, RATINGS_TABLE), (VALIDATION_TAG, VALIDATION_TABLE)):
         storage.truncate(spark, table)
-        storage.write(to_rating_rows(tag_filter(raw, tag)), table, mode="overwrite")
+        storage.write(to_rating_rows(tag_filter(raw, tag)), table)
     return (
         storage.read(spark, RATINGS_TABLE),
         storage.read(spark, VALIDATION_TABLE),

@@ -5,7 +5,6 @@ from spark_cassandra_collabfiltering_spark.ml.collabfilter import (
     ALS_ITERATIONS,
     predict,
     recommend_top_k,
-    rmse,
     train,
     validate,
 )
@@ -18,6 +17,5 @@ __all__ = [
     "train",
     "predict",
     "validate",
-    "rmse",
     "recommend_top_k",
 ]

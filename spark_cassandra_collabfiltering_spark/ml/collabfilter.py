@@ -5,7 +5,11 @@ lambda=0.01 (CollabFilterCassandra8.java:28-30,35), scores validation
 (user, product) pairs with ``model.predict`` (:39-43 — inner-join
 semantics on the factor matrices, J3), and computes
 RMSE = sqrt(mean((actual-pred)²)) over the inner join of actuals and
-predictions on (user, product) (:45-57 — J1/A1-A3).
+predictions on (user, product) (:45-57 — J1/A1-A3). MLlib 1.1's predict
+takes bare pairs and drops the rating, hence that second join. Here
+``ALSModel.transform`` carries the validation rows' ``rating`` through
+J3, so M2 yields one scored frame and M3 (and the report) read it with
+no further join.
 
 Differences, deliberate (SURVEY §7.4):
 - ``pyspark.ml.recommendation.ALS`` (DataFrame-native; mllib's RDD API is
@@ -21,6 +25,11 @@ Differences, deliberate (SURVEY §7.4):
   ceiling of 10, so a small table is not solved as 10 near-empty tasks
   per stage. The block layout seeds the initial factors, so predictions
   differ from a 10-block fit within the same RMSE contract.
+- Duplicate (user, product) validation rows: each row is scored once.
+  The reference's J1 pairs k copies with k copies (k×k rows in the
+  mean), and its J2 report map throws on the repeated key
+  (``Collectors.toMap``). Keys are unique in the reference's data, where
+  both paths agree.
 """
 
 from __future__ import annotations
@@ -93,38 +102,31 @@ def train(
     return als.fit(ratings)
 
 
-def predict(model: ALSModel, pairs: DataFrame) -> DataFrame:
-    """M2/J3: score (user, product) pairs ≙ model.predict
+def predict(model: ALSModel, rows: DataFrame) -> DataFrame:
+    """M2/J3: score (user, product) rows ≙ model.predict
     (CollabFilterCassandra8.java:39-43).
 
-    Output columns: user, product, prediction (double). coldStart="drop"
-    keeps the inner-join-on-factors semantics.
+    Output: the caller's columns plus ``prediction`` (double).
+    coldStart="drop" keeps the inner-join-on-factors semantics. A
+    ``rating`` column rides through, so :func:`validate` and the report
+    read this frame with no join back to the actuals.
     """
-    return model.transform(pairs.select("user", "product")).select(
-        "user", "product", F.col("prediction").cast("double").alias("prediction")
+    return model.transform(rows).withColumn(
+        "prediction", F.col("prediction").cast("double")
     )
 
 
-def validate(predictions: DataFrame, actuals: DataFrame) -> float:
-    """M3/J1/A1-A3: RMSE over the inner join on (user, product)
-    ≙ CollabFilterCassandra8.java:45-57.
+def validate(scored: DataFrame) -> float:
+    """M3/A1-A3: RMSE over the scored rows ≙ CollabFilterCassandra8.java:45-57.
 
-    Pairs missing on either side are dropped (inner), exactly like the
-    reference's pair-RDD join — cold-start predictions never poison the
-    mean. One distributed expression: sqrt(avg((rating-prediction)²)).
+    ``scored`` is :func:`predict`'s output over rows that carry
+    ``rating``. Cold-start rows are already absent, like the reference's
+    inner join J1, so they never poison the mean. One hash-aggregate
+    plan (partial per partition + final merge — the DataFrame analog of
+    JavaDoubleRDD.mean, :50-54): sqrt(avg((rating-prediction)²)).
     """
-    joined = actuals.select("user", "product", "rating").join(
-        predictions, on=["user", "product"], how="inner"
-    )
-    return rmse(joined)
-
-
-def rmse(joined: DataFrame, actual_col: str = "rating", pred_col: str = "prediction") -> float:
-    """sqrt(mean squared error) as a single hash-aggregate plan
-    (partial per partition + final merge — the DataFrame analog of
-    JavaDoubleRDD.mean, CollabFilterCassandra8.java:50-54)."""
-    row = joined.agg(
-        F.sqrt(F.avg(squared_error(F.col(actual_col), F.col(pred_col)))).alias("rmse")
+    row = scored.agg(
+        F.sqrt(F.avg(squared_error(F.col("rating"), F.col("prediction")))).alias("rmse")
     ).first()
     return float(row["rmse"]) if row["rmse"] is not None else float("nan")
 

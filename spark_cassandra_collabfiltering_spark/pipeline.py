@@ -8,9 +8,11 @@ CollabFilterCassandraDriver.java:
   validate → results_report
 - close() truncates (:71-84)                   → __exit__
 
-Fix applied per SURVEY §1.3: the validation table feeds three consumers
-(predict input, join actuals, report); the reference re-scans Cassandra
-each time — here the DataFrame is .cache()d once.
+Fix applied per SURVEY §1.3: the reference scans the validation table
+three times (predict input, RMSE join, report map). Here it is scanned
+once, by predict: ``model.transform`` keeps each row's rating, and that
+scored frame — the one frame .cache()d — feeds both validate and the
+report.
 """
 
 from __future__ import annotations
@@ -29,8 +31,7 @@ from spark_cassandra_collabfiltering_spark.sources import Storage
 class RunResult:
     rmse: float
     report: str
-    predictions: DataFrame
-    validation: DataFrame
+    scored: DataFrame  # validation rows that ALS scored, with prediction
 
 
 class CollabFilterPipeline:
@@ -39,29 +40,28 @@ class CollabFilterPipeline:
     def __init__(self, spark: SparkSession, storage: Storage):
         self.spark = spark
         self.storage = storage
-        self._cached: list[DataFrame] = []
+        self._scored: DataFrame | None = None
 
     def run(self, csv_path: str) -> RunResult:
         training, validation = etl.populate_tables(self.spark, csv_path, self.storage)
-        validation = validation.cache()
-        self._cached.append(validation)
-
         model = cf.train(training)
-        predictions = cf.predict(model, validation).cache()
-        self._cached.append(predictions)
-
-        rmse = cf.validate(predictions, validation)
-        report = results_report(predictions, validation, rmse)
-        return RunResult(rmse=rmse, report=report, predictions=predictions, validation=validation)
+        self._unpersist()
+        self._scored = cf.predict(model, validation.select("user", "product", "rating")).cache()
+        rmse = cf.validate(self._scored)
+        report = results_report(self._scored, rmse)
+        return RunResult(rmse=rmse, report=report, scored=self._scored)
 
     # -- lifecycle (≙ try-with-resources + truncate-on-close, C3) --
     def __enter__(self) -> "CollabFilterPipeline":
         return self
 
+    def _unpersist(self) -> None:
+        if self._scored is not None:
+            self._scored.unpersist()
+            self._scored = None
+
     def close(self) -> None:
-        for df in self._cached:
-            df.unpersist()
-        self._cached.clear()
+        self._unpersist()
         for table in (etl.RATINGS_TABLE, etl.VALIDATION_TABLE):
             self.storage.truncate(self.spark, table)
 

@@ -3420,7 +3420,7 @@ def q_ev_retention_cohorts(spark, sf_dir):
     None,  # iterative ML — not SQL-expressible (rows-only check)
     "M1-M3: the full reference pipeline (SURVEY §3.2) on the ratings "
     "analog — seeded ALS(rank=6, iter=20, reg=0.01) train, transform of "
-    "held-out pairs with coldStart=drop, joined output with squared "
+    "held-out pairs with coldStart=drop, scored held-out rows with squared "
     "error — the non-SQL core the rest of the registry oracles around.",
 )
 def q_cf_als(spark, sf_dir):
@@ -3438,19 +3438,18 @@ def q_cf_als(spark, sf_dir):
         .agg(F.avg("rating").alias("rating"))
     )
     # The ratings subtree (lineitem⋈orders scan + bounded-id groupBy)
-    # feeds three separate actions — ALS.fit, model.transform(val),
-    # and the final val⋈preds — and re-executed for each (measured:
-    # the three largest stages of the r9 profile were this subtree,
-    # not the solver). A lazy checkpoint computes it once; the
-    # materialized partitions are the same physical output, so the
-    # seeded per-partition randomSplit draws identical rows (verified:
-    # identical 4517 rows + float predictions at sf0.01).
+    # feeds two consumers — ALS.fit and model.transform(val) — and was
+    # re-executed for each (measured: the three largest stages of the
+    # r9 profile were this subtree, not the solver). A lazy checkpoint
+    # computes it once; the materialized partitions are the same
+    # physical output, so the seeded per-partition randomSplit draws
+    # identical rows (verified: identical 4517 rows + float predictions
+    # at sf0.01). transform keeps val's rating, so the scored rows need
+    # no join back to val (its (user, product) keys are unique).
     ratings = shared_subtree(ratings)
     train, val = ratings.randomSplit([0.9, 0.1], seed=42)
     model = cf.train(train, max_iter=10)
-    preds = cf.predict(model, val)
-    joined = val.join(preds, on=["user", "product"], how="inner")
-    return joined.select(
+    return cf.predict(model, val).select(
         "user", "product", "rating", "prediction",
         ((F.col("rating") - F.col("prediction")) ** 2).alias("sq_err"),
     )

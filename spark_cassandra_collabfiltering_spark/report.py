@@ -11,10 +11,11 @@ Reproduces the reference's tab-separated report text exactly
 (the double tab after Predicted is a reference formatting quirk, kept
 for golden-text parity). Row order: user asc, product asc — done as a
 distributed sort (the reference sorts on the driver after collect(),
-CollabFilterCassandra8.java:73); the join is a proper distributed join
-(the reference hand-rolls a driver-side HashMap probe, J2 — we keep it
-a join so the same code works at any scale, with Catalyst/AQE free to
-broadcast the small side).
+CollabFilterCassandra8.java:73). The reference pairs each prediction
+with its actual by probing a driver-side HashMap of the validation
+rows (J2); here the input is already the scored validation rows
+(:func:`ml.collabfilter.predict`), so J2 is folded into J3 and the
+report runs no join.
 """
 
 from __future__ import annotations
@@ -32,26 +33,18 @@ from spark_cassandra_collabfiltering_spark.functions.scalar import (
 REPORT_HEADER = "User\tProduct\tPredicted\tActual\tError?"
 
 
-def report_rows(predictions: DataFrame, actuals: DataFrame) -> DataFrame:
-    """Joined, flagged, sorted report rows as a DataFrame.
+def report_rows(scored: DataFrame) -> DataFrame:
+    """Flagged, sorted report rows of the scored validation frame.
 
     Columns: user, product, predicted (1dp), actual (1dp), error_flag.
     """
-    joined = predictions.join(
-        actuals.select("user", "product", "rating"),
-        on=["user", "product"],
-        how="inner",
-    )
-    return (
-        joined.select(
-            "user",
-            "product",
-            round_half_up(F.col("prediction"), 1).alias("predicted"),
-            round_half_up(F.col("rating"), 1).alias("actual"),
-            err_flag(F.col("rating"), F.col("prediction")).alias("error_flag"),
-        )
-        .orderBy("user", "product")
-    )
+    return scored.select(
+        "user",
+        "product",
+        round_half_up(F.col("prediction"), 1).alias("predicted"),
+        round_half_up(F.col("rating"), 1).alias("actual"),
+        err_flag(F.col("rating"), F.col("prediction")).alias("error_flag"),
+    ).orderBy("user", "product")
 
 
 def _fmt_1dp(x: float) -> str:
@@ -60,21 +53,21 @@ def _fmt_1dp(x: float) -> str:
     return repr(round(x, 1))
 
 
-def results_report(predictions: DataFrame, actuals: DataFrame, rmse: float) -> str:
+def results_report(scored: DataFrame, rmse: float) -> str:
     """Exact report text ≙ resultsReport (CollabFilterCassandra8.java:59-61).
 
     The only collect() in the engine — the report is a small,
     human-readable artifact (driver-bound by design, like the
     reference's System.out sink S6).
     """
-    rows = report_rows(predictions, actuals).collect()
+    rows = report_rows(scored).collect()
     body = "\n".join(
         f"{r['user']}\t{r['product']}\t{_fmt_1dp(r['predicted'])}\t\t"
         f"{_fmt_1dp(r['actual'])}\t{r['error_flag']}"
         for r in rows
     )
     # Util.round(rmse, 2) prints as a plain double (e.g. 0.43).
-    # Empty-join edge: rmse is NaN (avg over zero rows) — print NaN
+    # No scored rows: rmse is NaN (avg over zero rows) — print NaN
     # instead of raising (the reference crashes on this input: mean()
     # of an empty RDD throws).
     rmse_2dp = "NaN" if math.isnan(rmse) else round(rmse * 100) / 100

@@ -3,8 +3,9 @@
 The reference's data model is one record shape — a rating —
 declared three times (CQL DDL at src/sql/collab_filter_setup.sql:4-5,
 Java bean RatingDO.java:17-20, positional CSV parse at
-CollabFilterCassandraDriver.java:131-132). Here it is one StructType
-each, declared once.
+CollabFilterCassandraDriver.java:131-132). Here the CSV shape is the
+one StructType below, and the stored tables' shape is the projection
+in ``etl.to_rating_rows``.
 """
 
 from __future__ import annotations
@@ -27,25 +28,4 @@ RAW_CSV_SCHEMA = T.StructType(
         T.StructField("rating", T.DoubleType(), True),
     ]
     + [T.StructField(f"gen{i}", T.StringType(), True) for i in range(4, 11)]
-)
-
-# Stored rating tables (ratings / validation): id is the reference's
-# timeuuid surrogate PK (RatingDO.java:30); Spark has no uuid type so it
-# is a string, excluded from value-checked outputs (nondeterministic).
-RATING_SCHEMA = T.StructType(
-    [
-        T.StructField("id", T.StringType(), False),
-        T.StructField("user", T.IntegerType(), False),
-        T.StructField("product", T.IntegerType(), False),
-        T.StructField("rating", T.DoubleType(), False),
-    ]
-)
-
-# ALS scoring output (CollabFilterCassandra8.java:39-43 analog).
-PREDICTION_SCHEMA = T.StructType(
-    [
-        T.StructField("user", T.IntegerType(), False),
-        T.StructField("product", T.IntegerType(), False),
-        T.StructField("prediction", T.DoubleType(), False),
-    ]
 )

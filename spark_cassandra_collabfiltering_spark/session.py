@@ -17,8 +17,9 @@ session is the modern ``SparkSession`` with scale-oriented defaults:
   variants in the next two. At 100 no class survives until its next
   use, so every rebuild of the same plan recompiles it with Janino and
   re-JITs it. The conf is static: it takes effect only when set before
-  the JVM starts, so bench.py's ``make_spark`` sets the same constant,
-  and an ``extra_conf`` for an already-running session cannot. Vanilla
+  the JVM starts, so an ``extra_conf`` for an already-running session
+  cannot change it. bench.py and scripts/dump_plans.py build their
+  sessions here, so they get the same value. Vanilla
   sessions (``scripts/check_oracle.py --vanilla``) leave it at 100 on
   purpose; it changes no result, only compile time.
 
@@ -69,7 +70,7 @@ def get_spark(
         # Single-JVM local mode: driver memory IS the executor heap for
         # all N task threads. Spark's 1g default starves wide hash
         # aggregates (the item-kNN wedge agg OOMed at sf1 under it);
-        # match bench.py's default, overridable via the same env var.
+        # 8g unless SPARK_GRAFT_DRIVER_MEM says otherwise.
         .config(
             "spark.driver.memory",
             os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),

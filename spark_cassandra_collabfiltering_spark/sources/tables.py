@@ -105,7 +105,7 @@ class Storage(ABC):
     def read(self, spark: SparkSession, table: str) -> DataFrame: ...
 
     @abstractmethod
-    def write(self, df: DataFrame, table: str, mode: str = "append") -> None: ...
+    def write(self, df: DataFrame, table: str) -> None: ...
 
     @abstractmethod
     def truncate(self, spark: SparkSession, table: str) -> None: ...
@@ -123,8 +123,8 @@ class ParquetStorage(Storage):
     def read(self, spark: SparkSession, table: str) -> DataFrame:
         return spark.read.parquet(self._path(table))
 
-    def write(self, df: DataFrame, table: str, mode: str = "append") -> None:
-        df.write.mode(mode).parquet(self._path(table))
+    def write(self, df: DataFrame, table: str) -> None:
+        df.write.mode("append").parquet(self._path(table))
 
     def truncate(self, spark: SparkSession, table: str) -> None:
         # TRUNCATE ks.tbl analog (CollabFilterCassandraDriver.java:82-84):
@@ -161,11 +161,11 @@ class CassandraStorage(Storage):
             .load()
         )
 
-    def write(self, df: DataFrame, table: str, mode: str = "append") -> None:
+    def write(self, df: DataFrame, table: str) -> None:
         (
             df.write.format(self.FORMAT)
             .options(keyspace=self.keyspace, table=table)
-            .mode(mode)
+            .mode("append")
             .save()
         )
 

@@ -13,7 +13,7 @@ from __future__ import annotations
 import pytest
 
 from spark_cassandra_collabfiltering_spark import etl
-from spark_cassandra_collabfiltering_spark.fixtures import write_ratings_csv
+from spark_cassandra_collabfiltering_spark.fixtures import generate_ratings_rows, write_ratings_csv
 from spark_cassandra_collabfiltering_spark.pipeline import CollabFilterPipeline
 from spark_cassandra_collabfiltering_spark.report import REPORT_HEADER
 from spark_cassandra_collabfiltering_spark.sources import ParquetStorage
@@ -60,7 +60,7 @@ def test_report_bytes_match_reference_formatting(spark, tmp_path, csv_path):
     resultsReport/predictionString semantics
     (CollabFilterCassandra8.java:59-77 + Util.round's
     Math.round(factor*x)/factor half-up) applied to the same
-    predictions — sort on (user, product), 1dp half-up values, the
+    scored rows — sort on (user, product), 1dp half-up values, the
     double-tab quirk after Predicted, ERR at abs(err) >= 1, trailer
     RMSE at 2dp. The shape test above can't catch a formatting or
     rounding drift; a byte diff does.
@@ -82,17 +82,12 @@ def test_report_bytes_match_reference_formatting(spark, tmp_path, csv_path):
     # tables (S5), after which the lazy frames can't re-scan
     with CollabFilterPipeline(spark, ParquetStorage(str(tmp_path))) as p:
         result = p.run(csv_path)
-        vmap = {
-            (r["user"], r["product"]): float(r["rating"])
-            for r in result.validation.collect()
-        }
-        preds = sorted(
-            (r["user"], r["product"], float(r["prediction"]))
-            for r in result.predictions.collect()
+        scored = sorted(
+            (r["user"], r["product"], float(r["prediction"]), float(r["rating"]))
+            for r in result.scored.collect()
         )
     body = []
-    for u, p, pred in preds:
-        actual = vmap[(u, p)]
+    for u, p, pred, actual in scored:
         flag = "ERR" if abs(actual - pred) >= 1 else "OK"
         body.append(
             f"{u}\t{p}\t{jround(pred, 1)!r}\t\t{jround(actual, 1)!r}\t{flag}"
@@ -103,6 +98,32 @@ def test_report_bytes_match_reference_formatting(spark, tmp_path, csv_path):
         + f"\nRMSE = {jround(result.rmse, 2)!r}"
     )
     assert result.report.encode() == expected.encode()
+
+
+def test_duplicate_validation_pair_scored_once(spark, tmp_path):
+    """A (user, product) pair listed twice in validation, with two
+    different ratings, gives two scored rows: every validation row is
+    scored once, and the report and RMSE read those rows. Re-joining
+    predictions with the actuals on (user, product) would pair 2 copies
+    with 2 copies and report 4 rows for the pair."""
+    import math
+
+    rows = generate_ratings_rows()
+    tag, user, product, rating, *rest = next(r for r in rows if r.startswith("V,")).split(",")
+    rows.append(",".join([tag, user, product, str(6 - int(rating)), *rest]))
+    path = tmp_path / "ratings.csv"
+    path.write_text("\n".join(rows) + "\n")
+
+    n_validation = sum(r.startswith("V,") for r in rows)
+    assert n_validation == 10  # the fixture's 9, all scorable, plus the copy
+
+    with CollabFilterPipeline(spark, ParquetStorage(str(tmp_path / "store"))) as p:
+        result = p.run(str(path))
+        assert len(result.report.splitlines()) == n_validation + 2  # header + trailer
+        scored = [(float(r["rating"]), float(r["prediction"])) for r in result.scored.collect()]
+    assert len(scored) == n_validation
+    expected = math.sqrt(sum((a - p) ** 2 for a, p in scored) / len(scored))
+    assert result.rmse == pytest.approx(expected, rel=1e-12)
 
 
 def test_determinism(spark, tmp_path, csv_path):

@@ -28,12 +28,12 @@ from spark_cassandra_collabfiltering_spark.sources.tables import (  # noqa: E402
 
 def _conformance(storage: Storage, spark, exists) -> None:
     df = spark.createDataFrame([(1, "a"), (2, "b")], ["k", "v"])
-    storage.write(df, "tbl", mode="overwrite")
+    storage.write(df, "tbl")
     assert sorted(map(tuple, storage.read(spark, "tbl").collect())) == [
         (1, "a"),
         (2, "b"),
     ]
-    # append is the default mode (reference bulk-writes are appends)
+    # every write appends (reference bulk-writes are appends)
     storage.write(spark.createDataFrame([(3, "c")], ["k", "v"]), "tbl")
     assert storage.read(spark, "tbl").count() == 3
     storage.truncate(spark, "tbl")
