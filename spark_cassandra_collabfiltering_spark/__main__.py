@@ -21,11 +21,11 @@ def main(argv: list[str]) -> int:
     from spark_cassandra_collabfiltering_spark.pipeline import CollabFilterPipeline
     from spark_cassandra_collabfiltering_spark.sources import ParquetStorage
 
-    workdir = tempfile.mkdtemp(prefix="collabfilter_")
-    csv_path = argv[0] if argv else write_ratings_csv(f"{workdir}/ratings.csv")
-    spark = get_spark(app_name="collabfilter-cli")
-    with CollabFilterPipeline(spark, ParquetStorage(f"{workdir}/store")) as p:
-        result = p.run(csv_path)
+    with tempfile.TemporaryDirectory(prefix="collabfilter_") as workdir:
+        csv_path = argv[0] if argv else write_ratings_csv(f"{workdir}/ratings.csv")
+        spark = get_spark(app_name="collabfilter-cli")
+        with CollabFilterPipeline(spark, ParquetStorage(f"{workdir}/store")) as p:
+            result = p.run(csv_path)
     print(result.report)
     ok = 0.0 <= result.rmse < 0.5
     print(f"\ncontract 0.0 <= RMSE < 0.5: {'PASS' if ok else 'FAIL'}")

@@ -23,11 +23,6 @@ from pyspark.sql import functions as F
 from spark_cassandra_collabfiltering_spark.operators.reuse import shared_subtree
 
 
-def global_mean(df: DataFrame, col: str, alias: str = "mean") -> Column | DataFrame:
-    """A2: the reference's global mean as a one-row hash-aggregate."""
-    return df.agg(F.avg(col).alias(alias))
-
-
 def decimal_sum(col: str, scale: int = 2, alias: str | None = None) -> Column:
     """Exact, order-independent sum of a double column: cast each value
     to DECIMAL(18, scale) (exact at source precision for money-like
@@ -60,12 +55,6 @@ def rollup_agg(df: DataFrame, keys: Sequence[str], *aggs: Column) -> DataFrame:
 def cube_agg(df: DataFrame, keys: Sequence[str], *aggs: Column) -> DataFrame:
     """CUBE over all key subsets."""
     return df.cube(*keys).agg(*aggs)
-
-
-def approx_distinct(df: DataFrame, col: str, rsd: float = 0.05, alias: str = "approx_nd") -> DataFrame:
-    """HyperLogLog++ cardinality — the sketch path for 100 TB where an
-    exact countDistinct would shuffle every distinct value."""
-    return df.agg(F.approx_count_distinct(col, rsd).alias(alias))
 
 
 def top_frequent(

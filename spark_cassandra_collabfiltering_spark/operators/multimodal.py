@@ -33,24 +33,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType(), False),
-        T.StructField("payload", T.BinaryType(), True),
-        T.StructField(
-            "media_meta",
-            T.StructType(
-                [
-                    T.StructField("modality", T.StringType(), True),
-                    T.StructField("mime", T.StringType(), True),
-                    T.StructField("n_bytes", T.LongType(), True),
-                ]
-            ),
-            True,
-        ),
-    ]
-)
-
 FEATURE_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType(), False),
@@ -386,19 +368,6 @@ def media_decode_query(df_documents: DataFrame) -> DataFrame:
     shuffle between encode and decode)."""
     media = synthesize_media_payloads(df_documents.select("doc_id"))
     return decode_media_features(media)
-
-
-def media_feature_query(df_documents: DataFrame) -> DataFrame:
-    """documents → binary payload → Arrow-batched features, joined back
-    to the metadata struct fields. The end-to-end multimodal path."""
-    media = attach_binary_payload(df_documents)
-    feats = extract_media_features(media)
-    meta = media.select(
-        "doc_id",
-        F.col("media_meta.modality").alias("modality"),
-        F.col("media_meta.n_bytes").alias("meta_bytes"),
-    )
-    return feats.join(meta, "doc_id")
 
 
 AUDIO_FRAME_SCHEMA = T.StructType(

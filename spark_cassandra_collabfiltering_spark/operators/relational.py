@@ -24,14 +24,6 @@ def project(df: DataFrame, *cols: str) -> DataFrame:
     return df.select(*cols)
 
 
-def filter_eq(df: DataFrame, col: str, value) -> DataFrame:
-    """P1: equality predicate (reference: client-side line-prefix filter,
-    CollabFilterCassandraDriver.java:110-121). Declarative filter →
-    pushed into the scan (PushedFilters), so at 100 TB only matching
-    row groups are read."""
-    return df.filter(F.col(col) == F.lit(value))
-
-
 def filter_prefix(df: DataFrame, col: str, prefix: str) -> DataFrame:
     """P1/F1: startswith predicate — pushable as a StringStartsWith."""
     return df.filter(F.col(col).startswith(prefix))
@@ -113,15 +105,6 @@ def hash_bucket(col: Column, buckets: int = 100) -> Column:
     across runs, engines, partitionings, and retries, which is what a
     reproducible train/eval split needs."""
     return md5_draw60(col) % buckets
-
-
-def deterministic_sample(
-    df: DataFrame, key_col: str, fraction_pct: int, buckets: int = 100
-) -> DataFrame:
-    """Keep rows whose hash bucket < fraction_pct — a deterministic
-    ~fraction_pct% sample keyed on ``key_col`` (same key always lands
-    on the same side; sampling is a scan-local filter, no shuffle)."""
-    return df.filter(hash_bucket(F.col(key_col), buckets) < fraction_pct)
 
 
 def stratified_sample(

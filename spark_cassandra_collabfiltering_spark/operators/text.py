@@ -219,38 +219,16 @@ def _word_ngrams(c: Column, n: int) -> Column:
     )
 
 
-def _max_multiplicity(grams: Column) -> Column:
-    """Highest occurrence count of any single element in the array.
+def _max_multiplicity_long(grams: Column) -> Column:
+    """Highest occurrence count of any single element in an
+    array<bigint> of hashed grams; empty array → 0.
 
     Sort the array, then one aggregate() pass tracking the current run
     length and the best run — max multiplicity of a sorted multiset ==
-    longest equal-run. Row-local (no explode + groupBy shuffle), which
-    is the point: at 100 TB this stays inside the document scan.
-    Empty array → 0.
-    """
-    zero = F.struct(
-        F.lit("").alias("prev"), F.lit(0).alias("run"), F.lit(0).alias("best")
-    )
-    return F.aggregate(
-        F.array_sort(grams),
-        zero,
-        lambda a, x: F.struct(
-            x.alias("prev"),
-            F.when(x == a["prev"], a["run"] + 1).otherwise(F.lit(1)).alias("run"),
-            F.greatest(
-                a["best"],
-                F.when(x == a["prev"], a["run"] + 1).otherwise(F.lit(1)),
-            ).alias("best"),
-        ),
-        lambda a: a["best"],
-    )
-
-
-def _max_multiplicity_long(grams: Column) -> Column:
-    """:func:`_max_multiplicity` for array<bigint> — the hashed-gram
-    fast path (fixed-width compares in the sort and the run scan; no
-    string materialization). Sentinel prev = NULL: ``x == NULL`` is
-    NULL, so the first element always takes the otherwise(1) branch."""
+    longest equal-run. Row-local (no explode + groupBy shuffle), and
+    fixed-width compares in the sort and the run scan (no string
+    materialization). Sentinel prev = NULL: ``x == NULL`` is NULL, so
+    the first element always takes the otherwise(1) branch."""
     zero = F.struct(
         F.lit(None).cast("bigint").alias("prev"),
         F.lit(0).alias("run"),

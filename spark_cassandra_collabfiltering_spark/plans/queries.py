@@ -10283,9 +10283,9 @@ def q_lake_txn_datasource(spark, sf_dir):
     from ..sources import lake
     from ..sources.txnlake_ds import register_txnlake
 
-    # registration is session-matched (VERDICT r8 #1): in a vanilla
-    # session — the driver harness — this enables the runtime
-    # pushdown conf and registers the pushdown-default variant; if
+    # registration is session-matched: in a vanilla session this
+    # enables the runtime pushdown conf and registers the pushdown
+    # variant; if
     # the conf is locked it registers the portable reader instead.
     # Either way the query answer is identical (filters re-apply
     # row-level); only plan-time file pruning differs.

@@ -219,18 +219,6 @@ def _seed_from_checkpoint(root: str, v: int, state: _DeltaState) -> None:
                 state.apply({key: _demap(r[key])})
 
 
-def _delta_mapping(schema: T.StructType) -> "dict | None":
-    """{logical -> physical} under columnMapping name/id mode, else
-    None (the metadata key is the public spec's, the projection logic
-    is shared with the native lake's cm_phys contract)."""
-    m = {
-        f.name: f.metadata[_PHYS_KEY]
-        for f in schema.fields
-        if f.metadata and _PHYS_KEY in f.metadata
-    }
-    return m or None
-
-
 def _typed_part_val(sval: "str | None", dtype):
     """Delta partitionValues are strings (null for NULL); the hive
     sentinel appears in tables imported from hive layouts."""

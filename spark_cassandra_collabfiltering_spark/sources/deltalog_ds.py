@@ -11,16 +11,18 @@ same protocol adapter shape as ``format("txnlake")``
 read executor-side via pyarrow with its deletion vector resolved and
 masked IN the task; hive-stripped partition columns re-attach as
 Arrow constants; column mapping's physical->logical rename happens at
-batch construction; ``pushFilters`` prunes the FILE LIST through the
-adds' embedded ``stats`` (minValues/maxValues, parsed once at plan
-time) plus exact partition values — log arithmetic, no footer opened
-— and returns every filter unhandled so Spark re-applies them
-row-exactly above the scan. Pushdown is SESSION-GATED exactly as in
-txnlake_ds.py (Spark 4 refuses pushFilters readers unless
-``spark.sql.python.filterPushdown.enabled``): the default reader
-omits pushFilters so a vanilla session can always load;
-``register_deltalog(spark)`` or ``.option("pushdown", "true")``
-selects the pruning subclass where the session allows.
+batch construction — all through txnlake_ds's one per-file projection
+(``_project_file``). ``pushFilters`` prunes the FILE LIST with the
+lake's one skip rule (``txnlake_ds._prune_files``) over per-add
+[min, max] stats built once at plan time from the adds' embedded
+``stats`` plus [v, v] partition-value singletons — log arithmetic,
+no footer opened — and returns every filter unhandled so Spark
+re-applies them row-exactly above the scan. Pushdown is
+SESSION-GATED exactly as in txnlake_ds.py (Spark 4 refuses
+pushFilters readers unless ``spark.sql.python.filterPushdown.enabled``):
+``DeltaLogDataSource`` returns the reader without pushFilters so a
+vanilla session can always load; ``register_deltalog(spark)``
+registers ``DeltaLogPushdownDataSource`` where the session allows.
 
 All table-state logic lives in sources/delta_interop.py (log replay,
 checkpoint seeding, protocol gate) and sources/delta_dv.py (the
@@ -33,7 +35,7 @@ from __future__ import annotations
 
 import json
 import os
-import typing
+from urllib.parse import unquote
 
 from pyspark.sql import types as T
 from pyspark.sql.datasource import (
@@ -46,160 +48,104 @@ from pyspark.sql.datasource import (
 from spark_cassandra_collabfiltering_spark.sources import delta_dv, lake
 from spark_cassandra_collabfiltering_spark.sources import delta_interop as di
 from spark_cassandra_collabfiltering_spark.sources.txnlake_ds import (
-    _arrow_type,
-    _prunable_bound,
+    _project_file,
+    _prune_files,
+    _register_strongest,
 )
-
-if typing.TYPE_CHECKING:  # pragma: no cover
-    pass
 
 
 class _DeltaFilePartition(InputPartition):
     def __init__(self, root, file, part_vals, dv_desc):
         self.root = root
         self.file = file  # absolute data-file path
-        self.part_vals = part_vals  # {col: string | None}
+        self.part_vals = part_vals  # {partition col: typed value | None}
         self.dv_desc = dv_desc  # deletionVector descriptor or None
 
 
-def _delta_file_to_batches(partition, schema: T.StructType, part_cols):
-    """One add-file to Arrow batches in logical-schema order: DV
-    positions masked, partition constants attached, evolution-missing
-    columns as nulls, physical names renamed."""
-    import pyarrow as pa
+def _add_partition(root, schema, part_cols, add) -> _DeltaFilePartition:
+    """One add action as an input partition, its partition strings
+    typed against the schema."""
+    pv = add.get("partitionValues") or {}
+    return _DeltaFilePartition(
+        root,
+        os.path.join(root, unquote(add["path"])),
+        {
+            f.name: di._typed_part_val(pv.get(f.name), f.dataType)
+            for f in schema.fields
+            if f.name in part_cols
+        },
+        add.get("deletionVector"),
+    )
+
+
+def _delta_file_to_batches(partition, schema: T.StructType):
+    """One add-file to Arrow batches in logical-schema order: the
+    Roaring DV's positions dropped, partition columns as constants,
+    then each field's physical-name file column."""
     import pyarrow.parquet as pq
 
     tbl = pq.read_table(partition.file)
-    n = tbl.num_rows
-    if partition.dv_desc:
-        dead = set(
-            delta_dv.resolve_descriptor(partition.root, partition.dv_desc)
-        )
-        if dead:
-            keep = [i for i in range(n) if i not in dead]
-            tbl = tbl.take(pa.array(keep, type=pa.int64()))
-            n = tbl.num_rows
-    arrays, names = [], []
-    for f in schema.fields:
-        at = _arrow_type(f.dataType)
-        phys = (f.metadata or {}).get(di._PHYS_KEY, f.name)
-        if f.name in part_cols:
-            v = di._typed_part_val(
-                partition.part_vals.get(f.name), f.dataType
-            )
-            arrays.append(pa.array([v] * n, type=at))
-        elif phys in tbl.column_names:
-            col = tbl.column(phys)
-            if at is not None and col.type != at:
-                col = col.cast(at)
-            arrays.append(col)
-        else:  # pre-evolution file
-            arrays.append(pa.nulls(n, type=at))
-        names.append(f.name)
-    yield from pa.table(arrays, names=names).to_batches()
+    dead = (
+        delta_dv.resolve_descriptor(partition.root, partition.dv_desc)
+        if partition.dv_desc
+        else ()
+    )
+    phys = [
+        (f.metadata or {}).get(di._PHYS_KEY, f.name) for f in schema.fields
+    ]
+    yield from _project_file(tbl, dead, schema, phys, partition.part_vals)
 
 
 class DeltaLogReader(DataSourceReader):
     def __init__(self, root: str, version: "int | None"):
-        self._root = root
         state, _v = di._replay_delta(root, version)
         self._schema = T.StructType.fromJson(
             json.loads(state.meta["schemaString"])
         )
-        self._part_cols = list(state.meta.get("partitionColumns") or ())
+        part_cols = list(state.meta.get("partitionColumns") or ())
         self._mapping = {
             f.name: (f.metadata or {}).get(di._PHYS_KEY, f.name)
             for f in self._schema.fields
         }
-        from urllib.parse import unquote
-
-        self._adds = [
-            (os.path.join(root, unquote(p)), a)
-            for p, a in sorted(state.adds.items())
-        ]
-
-    def _stat_bounds(self, add: dict, col_phys: str, logical: str):
-        """(min, max) proof for one column of one add: exact partition
-        value singleton, else the stats JSON minValues/maxValues."""
-        pv = add.get("partitionValues") or {}
-        if logical in self._part_cols:
-            v = pv.get(logical)
-            return (v, v) if v is not None else None
-        s = add.get("stats")
-        if not s:
-            return None
-        st = json.loads(s)
-        lo = (st.get("minValues") or {}).get(col_phys)
-        hi = (st.get("maxValues") or {}).get(col_phys)
-        if lo is None or hi is None:
-            return None
-        return (lo, hi)
-
-    def _prune_adds(self, filters):
-        bounds = _prunable_bound(filters)
-        if not bounds:
-            return
-        keep = []
-        for path, a in self._adds:
-            ok = True
-            for col, (lo, hi) in bounds.items():
-                rng = self._stat_bounds(
-                    a, self._mapping.get(col, col), col
-                )
-                if rng is None:
-                    continue  # no proof -> must keep
-                mn, mx = rng
-                # partition values arrive as strings; type them
-                # against the filter value's type via the schema
-                if col in self._part_cols:
-                    dt = next(
-                        f.dataType
-                        for f in self._schema.fields
-                        if f.name == col
-                    )
-                    mn = di._typed_part_val(mn, dt)
-                    mx = di._typed_part_val(mx, dt)
-                lo_c = lake._stat_val(lo) if lo is not None else None
-                hi_c = lake._stat_val(hi) if hi is not None else None
-                mn = lake._stat_val(mn)
-                mx = lake._stat_val(mx)
-                if mn is None or mx is None:
-                    continue
-                if (hi_c is not None and mn > hi_c) or (
-                    lo_c is not None and mx < lo_c
-                ):
-                    ok = False
-                    break
-            if ok:
-                keep.append((path, a))
-        self._adds = keep
+        # per add: its input partition and its [min, max] stats, keyed
+        # the way _prune_files looks them up (the physical name);
+        # partition values are exact [v, v] singletons
+        self._parts: dict = {}
+        self._stats: dict = {}
+        for _, a in sorted(state.adds.items()):
+            part = _add_partition(root, self._schema, part_cols, a)
+            st = json.loads(a["stats"]) if a.get("stats") else {}
+            lo = st.get("minValues") or {}
+            hi = st.get("maxValues") or {}
+            stats = {
+                c: [lake._stat_val(lo[c]), lake._stat_val(hi[c])]
+                for c in lo.keys() & hi.keys()
+            }
+            for c, v in part.part_vals.items():
+                stats[self._mapping.get(c, c)] = [lake._stat_val(v)] * 2
+            self._parts[part.file] = part
+            self._stats[part.file] = stats
+        self._files = list(self._parts)
 
     def partitions(self):
-        return [
-            _DeltaFilePartition(
-                self._root,
-                path,
-                dict(a.get("partitionValues") or {}),
-                a.get("deletionVector"),
-            )
-            for path, a in self._adds
-        ]
+        return [self._parts[f] for f in self._files]
 
     def read(self, partition):
-        yield from _delta_file_to_batches(
-            partition, self._schema, self._part_cols
-        )
+        yield from _delta_file_to_batches(partition, self._schema)
 
 
 class DeltaLogPushdownReader(DeltaLogReader):
     """DeltaLogReader + Catalyst ``pushFilters`` file pruning — a
     subclass because Spark 4 refuses pushFilters readers in sessions
     where ``spark.sql.python.filterPushdown.enabled`` is false (the
-    same session-gating as sources/txnlake_ds.py); select via
-    ``.option("pushdown", "true")`` or :func:`register_deltalog`."""
+    same session-gating as sources/txnlake_ds.py); selected by
+    registering :class:`DeltaLogPushdownDataSource`
+    (:func:`register_deltalog`)."""
 
     def pushFilters(self, filters):
-        self._prune_adds(filters)
+        self._files = _prune_files(
+            self._files, self._stats, self._mapping, filters
+        )
         # file pruning never proves row truth: Spark re-applies all
         return filters
 
@@ -214,9 +160,20 @@ class DeltaLogStreamReader(DataSourceStreamReader):
     Delta's documented semantics; compaction commits (dataChange
     false) skip silently."""
 
-    def __init__(self, root: str, skip_change_commits: bool):
+    def __init__(
+        self,
+        root: str,
+        skip_change_commits: bool,
+        schema: "T.StructType | None" = None,
+    ):
         self._root = root
         self._skip = skip_change_commits
+        # fixed once at planning: read tasks never replay the log
+        state, _ = di._replay_delta(root, None)
+        self._schema = schema or T.StructType.fromJson(
+            json.loads(state.meta["schemaString"])
+        )
+        self._part_cols = list(state.meta.get("partitionColumns") or ())
 
     def initialOffset(self):
         return {"version": -1}
@@ -241,8 +198,6 @@ class DeltaLogStreamReader(DataSourceStreamReader):
         return out
 
     def _parts_for(self, v: int) -> list:
-        from urllib.parse import unquote
-
         acts = self._actions(v)
         adds = [a["add"] for a in acts if a.get("add")]
         removes = [a["remove"] for a in acts if a.get("remove")]
@@ -257,13 +212,9 @@ class DeltaLogStreamReader(DataSourceStreamReader):
                 f"v{v}; this source streams APPEND-ONLY Delta tables "
                 "— set skipChangeCommits to ignore rewrites"
             )
+        # a data-changing add carries no DV here (that raised above)
         return [
-            _DeltaFilePartition(
-                self._root,
-                os.path.join(self._root, unquote(a["path"])),
-                dict(a.get("partitionValues") or {}),
-                None,
-            )
+            _add_partition(self._root, self._schema, self._part_cols, a)
             for a in adds
             if a.get("dataChange", True)
         ]
@@ -275,12 +226,7 @@ class DeltaLogStreamReader(DataSourceStreamReader):
         return parts
 
     def read(self, partition):
-        state, _ = di._replay_delta(self._root, None)
-        schema = T.StructType.fromJson(
-            json.loads(state.meta["schemaString"])
-        )
-        part_cols = list(state.meta.get("partitionColumns") or ())
-        yield from _delta_file_to_batches(partition, schema, part_cols)
+        yield from _delta_file_to_batches(partition, self._schema)
 
     def commit(self, end):
         pass  # offsets are durable in the engine's checkpoint
@@ -307,24 +253,17 @@ class DeltaLogDataSource(DataSource):
         )
         return T.StructType.fromJson(json.loads(state.meta["schemaString"]))
 
-    _default_pushdown = False  # see register_deltalog
+    _reader = DeltaLogReader  # see register_deltalog
 
     def reader(self, schema):
         v = self.options.get("version")
-        opt = self.options.get("pushdown")
-        push = (
-            self._default_pushdown
-            if opt is None
-            else str(opt).lower() in ("true", "1")
-        )
-        cls = DeltaLogPushdownReader if push else DeltaLogReader
-        return cls(self._root(), None if v is None else int(v))
+        return self._reader(self._root(), None if v is None else int(v))
 
     def streamReader(self, schema):
         skip = str(
             self.options.get("skipchangecommits", "false")
         ).lower() in ("true", "1")
-        return DeltaLogStreamReader(self._root(), skip)
+        return DeltaLogStreamReader(self._root(), skip, schema)
 
     def writer(self, schema, overwrite):
         raise NotImplementedError(
@@ -334,10 +273,10 @@ class DeltaLogDataSource(DataSource):
 
 
 class DeltaLogPushdownDataSource(DeltaLogDataSource):
-    """format("deltalog") with pushdown-default reads — register only
+    """format("deltalog") with the pushdown reader — register only
     where the session conf allows (use :func:`register_deltalog`)."""
 
-    _default_pushdown = True
+    _reader = DeltaLogPushdownReader
 
 
 def register_deltalog(spark) -> bool:
@@ -345,19 +284,9 @@ def register_deltalog(spark) -> bool:
     session permits — same contract as
     :func:`~spark_cassandra_collabfiltering_spark.sources.txnlake_ds.register_txnlake`:
     enable ``spark.sql.python.filterPushdown.enabled`` at runtime and
-    register the pushdown-default variant iff it took effect, else
-    the portable variant (identical answers, no plan-time pruning).
+    register the pushdown variant iff it took effect, else the
+    portable variant (identical answers, no plan-time pruning).
     Returns True when pushdown is active."""
-    conf = "spark.sql.python.filterPushdown.enabled"
-    try:
-        spark.conf.set(conf, "true")
-    except Exception:
-        pass  # static/locked conf: fall through to read the value
-    try:
-        enabled = str(spark.conf.get(conf)).lower() == "true"
-    except Exception:
-        enabled = False
-    spark.dataSource.register(
-        DeltaLogPushdownDataSource if enabled else DeltaLogDataSource
+    return _register_strongest(
+        spark, DeltaLogDataSource, DeltaLogPushdownDataSource
     )
-    return enabled

@@ -39,8 +39,6 @@ disagree about table state.
 
 from __future__ import annotations
 
-import typing
-
 from pyspark.sql import types as T
 from pyspark.sql.datasource import (
     DataSource,
@@ -50,10 +48,7 @@ from pyspark.sql.datasource import (
 )
 
 from spark_cassandra_collabfiltering_spark.sources import iceberg_interop as ice
-from spark_cassandra_collabfiltering_spark.sources.txnlake_ds import _arrow_type
-
-if typing.TYPE_CHECKING:  # pragma: no cover
-    pass
+from spark_cassandra_collabfiltering_spark.sources.txnlake_ds import _project_file
 
 
 class _IceFilePartition(InputPartition):
@@ -82,9 +77,11 @@ def _sig_for(abs_path: str, fmt: str, cur: dict, schema) -> tuple:
 
 def _ice_file_to_batches(partition, schema: T.StructType):
     """One data file to Arrow batches in current-schema order:
-    position deletes masked (delete files read IN the task, filtered
+    position deletes dropped (delete files read IN the task, filtered
     to this file's manifest path, applied when delete seq >= data
-    seq), absent fields as typed nulls, physical names projected."""
+    seq), each field projected from its field-id-resolved physical
+    name, absent fields as typed nulls."""
+    import numpy as np
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -94,8 +91,7 @@ def _ice_file_to_batches(partition, schema: T.StructType):
         tbl = pa_orc.read_table(partition.file)
     else:
         tbl = pq.read_table(partition.file)
-    n = tbl.num_rows
-    dead_arrays = []
+    dead = []
     for d in partition.deletes:
         if d[1] < partition.seq:
             continue  # applies only to data with seq <= delete seq
@@ -104,46 +100,24 @@ def _ice_file_to_batches(partition, schema: T.StructType):
             from . import puffin
 
             _, _, dpath, off, size = d
-            dead_arrays.append(
-                pa.array(puffin.read_dv_blob(dpath, off, size),
-                         type=pa.int64())
-            )
+            dead.append(np.asarray(puffin.read_dv_blob(dpath, off, size),
+                                   dtype=np.int64))
             continue
         dt = pq.read_table(d[2], columns=["file_path", "pos"])
         mask = pa.compute.equal(dt.column("file_path"),
                                 pa.scalar(partition.mf_path))
-        dead_arrays.append(
+        dead.append(
             dt.filter(mask).column("pos").cast(pa.int64())
-            .combine_chunks()
+            .to_numpy()
         )
-    if dead_arrays:
-        import numpy as np
-
-        # vectorized boolean mask, no per-row Python (r9 ADVICE: the
-        # old `[i for i in range(n) if i not in dead]` loop was O(n)
-        # Python per data file — hostile to large files with deletes)
-        dead = np.concatenate(
-            [c.to_numpy(zero_copy_only=False) for c in dead_arrays]
-        ).astype(np.int64, copy=False)
-        keep = np.ones(n, dtype=bool)
-        keep[dead[(dead >= 0) & (dead < n)]] = False
-        tbl = tbl.filter(pa.array(keep))
-        n = tbl.num_rows
-    arrays, names = [], []
-    for f, phys in zip(schema.fields, partition.sig):
-        at = _arrow_type(f.dataType)
-        if phys is not None and phys in tbl.column_names:
-            col = tbl.column(phys)
-            if at is not None and col.type != at:
-                col = col.cast(at)
-            arrays.append(col)
-        else:
-            arrays.append(pa.nulls(n, type=at))
-        names.append(f.name)
-    yield from pa.table(arrays, names=names).to_batches()
+    yield from _project_file(
+        tbl, np.concatenate(dead) if dead else (), schema, partition.sig, {}
+    )
 
 
-def _snapshot_partitions(root: str, snapshot_id: "int | None") -> list:
+def _snapshot_partitions(
+    root: str, snapshot_id: "int | None", schema: T.StructType
+) -> list:
     data, pos_del, eq_del = ice.snapshot_files(root, snapshot_id)
     if eq_del:
         raise ValueError(
@@ -156,9 +130,7 @@ def _snapshot_partitions(root: str, snapshot_id: "int | None") -> list:
             "ORC data files are supported only in delete-free "
             "snapshots (no _metadata-free row identity to mask on)"
         )
-    meta = ice.load_table_metadata(root)
-    cur = ice._current_schema(meta)
-    schema = ice.iceberg_spark_schema(root)
+    cur = ice._current_schema(ice.load_table_metadata(root))
     # delete descriptors: ("pos", seq, abs path) apply to every data
     # file (filtered on the manifest path at read); ("dv", seq, abs,
     # offset, size) attach only to their referenced file
@@ -188,16 +160,18 @@ def _snapshot_partitions(root: str, snapshot_id: "int | None") -> list:
 
 
 class IcebergLogReader(DataSourceReader):
-    def __init__(self, root: str, snapshot_id: "int | None"):
+    def __init__(
+        self, root: str, snapshot_id: "int | None", schema: T.StructType
+    ):
         self._root = root
         self._snapshot = snapshot_id
+        self._schema = schema
 
     def partitions(self):
-        return _snapshot_partitions(self._root, self._snapshot)
+        return _snapshot_partitions(self._root, self._snapshot, self._schema)
 
     def read(self, partition):
-        schema = ice.iceberg_spark_schema(self._root)
-        yield from _ice_file_to_batches(partition, schema)
+        yield from _ice_file_to_batches(partition, self._schema)
 
 
 class IcebergLogStreamReader(DataSourceStreamReader):
@@ -206,8 +180,11 @@ class IcebergLogStreamReader(DataSourceStreamReader):
     in-range snapshots. Non-append snapshots raise unless
     ``skipChangeCommits``."""
 
-    def __init__(self, root: str, skip_change_commits: bool):
+    def __init__(
+        self, root: str, skip_change_commits: bool, schema: T.StructType
+    ):
         self._root = root
+        self._schema = schema
         self._skip = skip_change_commits
 
     def _snaps(self):
@@ -228,9 +205,7 @@ class IcebergLogStreamReader(DataSourceStreamReader):
         }
 
     def partitions(self, start, end):
-        meta = ice.load_table_metadata(self._root)
-        cur = ice._current_schema(meta)
-        schema = ice.iceberg_spark_schema(self._root)
+        cur = ice._current_schema(ice.load_table_metadata(self._root))
         parts = []
         for s in self._snaps():
             seq = int(s.get("sequence-number") or 0)
@@ -250,14 +225,13 @@ class IcebergLogStreamReader(DataSourceStreamReader):
                 fmt = d.get("_fmt") or "PARQUET"
                 parts.append(_IceFilePartition(
                     d["_abs"], fmt,
-                    _sig_for(d["_abs"], fmt, cur, schema),
+                    _sig_for(d["_abs"], fmt, cur, self._schema),
                     d["file_path"], seq, [],
                 ))
         return parts
 
     def read(self, partition):
-        schema = ice.iceberg_spark_schema(self._root)
-        yield from _ice_file_to_batches(partition, schema)
+        yield from _ice_file_to_batches(partition, self._schema)
 
     def commit(self, end):
         pass  # offsets are durable in the engine's checkpoint
@@ -285,14 +259,14 @@ class IcebergLogDataSource(DataSource):
     def reader(self, schema):
         v = self.options.get("snapshot")
         return IcebergLogReader(
-            self._root(), None if v is None else int(v)
+            self._root(), None if v is None else int(v), schema
         )
 
     def streamReader(self, schema):
         skip = str(
             self.options.get("skipchangecommits", "false")
         ).lower() in ("true", "1")
-        return IcebergLogStreamReader(self._root(), skip)
+        return IcebergLogStreamReader(self._root(), skip, schema)
 
     def writer(self, schema, overwrite):
         raise NotImplementedError(

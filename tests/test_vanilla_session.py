@@ -13,9 +13,9 @@ runtime-simulates a vanilla session faithfully) and pin that:
   DISABLED, for both ``format("txnlake")`` (single-table + catalog +
   streaming) and ``format("deltalog")``;
 - ``register_txnlake`` / ``register_deltalog`` re-enable the conf and
-  swap in the pushdown-default variants, restoring plan-time file
-  pruning without any caller-visible change;
-- ``.option("pushdown", ...)`` overrides either registration default.
+  register the pushdown variants, restoring plan-time file pruning
+  without any caller-visible change. The registration is the only
+  reader choice: there is no per-read option.
 """
 
 from __future__ import annotations
@@ -100,15 +100,6 @@ def test_register_txnlake_enables_pushdown_and_prunes(spark, tmp_path):
         .where("id >= 50 and id <= 60")
     )
     assert sorted(r["id"] for r in got.collect()) == list(range(50, 61))
-    # and the pushdown-default variant still honors an explicit off
-    off = (
-        spark.read.format("txnlake")
-        .option("root", root)
-        .option("pushdown", "false")
-        .load()
-        .where("id < 5")
-    )
-    assert off.count() == 5
 
 
 def test_register_txnlake_registers_portable_variant_when_conf_stuck(
