@@ -4,9 +4,9 @@
 
 Writes the deterministic ratings fixture when no CSV is given, runs
 truncate → populate → ALS train → predict → validate → report
-(SURVEY §3.1-3.2), prints the tab report, and exits nonzero if the
-reference's accuracy contract (0 <= RMSE < 0.5,
-CollabFilterTest.java:36-37) is violated.
+(SURVEY §3.1-3.2), prints the tab report and the number of validation
+pairs ALS scored, and exits nonzero if the reference's accuracy
+contract (0 <= RMSE < 0.5, CollabFilterTest.java:36-37) is violated.
 """
 
 from __future__ import annotations
@@ -27,6 +27,7 @@ def main(argv: list[str]) -> int:
         with CollabFilterPipeline(spark, ParquetStorage(f"{workdir}/store")) as p:
             result = p.run(csv_path)
     print(result.report)
+    print(f"scored pairs = {result.scored_rows}")
     ok = 0.0 <= result.rmse < 0.5
     print(f"\ncontract 0.0 <= RMSE < 0.5: {'PASS' if ok else 'FAIL'}")
     return 0 if ok else 1

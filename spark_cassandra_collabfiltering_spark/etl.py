@@ -5,7 +5,8 @@ filter lines by "I,"/"V," prefix, parse fields 1-3, attach a timeuuid,
 bulk-write each split to its Cassandra table. Types are clean (int
 user/product, double rating; SURVEY §1.3). Like the reference, each
 split's write is its own job that re-scans the CSV: the CSV is scanned
-twice per load.
+twice per load. Reading the written tables back infers no schema, so
+the two writes are the load's only jobs.
 """
 
 from __future__ import annotations
@@ -67,7 +68,9 @@ def populate_tables(
 
     Returns the (training, validation) DataFrames re-read from storage so
     downstream consumers scan the persisted tables exactly like the
-    reference scans Cassandra.
+    reference scans Cassandra. The re-read is lazy and runs no job:
+    :class:`ParquetStorage` reads a table back with the schema it wrote,
+    and the Cassandra connector takes the schema from the cluster.
     """
     raw = read_ratings_csv(spark, csv_path)
     for tag, table in ((TRAINING_TAG, RATINGS_TABLE), (VALIDATION_TAG, VALIDATION_TABLE)):

@@ -35,7 +35,7 @@ Differences, deliberate (SURVEY §7.4):
 from __future__ import annotations
 
 from pyspark.ml.recommendation import ALS, ALSModel
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from spark_cassandra_collabfiltering_spark.functions.scalar import squared_error
@@ -116,19 +116,32 @@ def predict(model: ALSModel, rows: DataFrame) -> DataFrame:
     )
 
 
+def rmse_column() -> Column:
+    """M3/A1-A3 as one aggregate column ≙ CollabFilterCassandra8.java:45-57:
+    sqrt(avg((rating-prediction)²)) over the scored rows, null when
+    there are none. :func:`validate` and the report's observed metrics
+    (report.py) both compute RMSE with it."""
+    return F.sqrt(F.avg(squared_error(F.col("rating"), F.col("prediction"))))
+
+
+def nan_if_null(value) -> float:
+    """An aggregate's value as a float; null (no rows) becomes NaN."""
+    return float("nan") if value is None else float(value)
+
+
 def validate(scored: DataFrame) -> float:
-    """M3/A1-A3: RMSE over the scored rows ≙ CollabFilterCassandra8.java:45-57.
+    """M3/A1-A3: RMSE over the scored rows, as its own job.
 
     ``scored`` is :func:`predict`'s output over rows that carry
     ``rating``. Cold-start rows are already absent, like the reference's
     inner join J1, so they never poison the mean. One hash-aggregate
     plan (partial per partition + final merge — the DataFrame analog of
-    JavaDoubleRDD.mean, :50-54): sqrt(avg((rating-prediction)²)).
+    JavaDoubleRDD.mean, :50-54) of :func:`rmse_column`. The pipeline
+    does not call it: the report's one action observes the same
+    aggregate (report.py). It stands alone for callers that want only
+    RMSE, and as the cross-check of the observed value.
     """
-    row = scored.agg(
-        F.sqrt(F.avg(squared_error(F.col("rating"), F.col("prediction")))).alias("rmse")
-    ).first()
-    return float(row["rmse"]) if row["rmse"] is not None else float("nan")
+    return nan_if_null(scored.agg(rmse_column()).first()[0])
 
 
 def recommend_top_k(model: ALSModel, k: int = 3) -> DataFrame:

@@ -5,14 +5,15 @@ CollabFilterCassandraDriver.java:
 - ctor builds conf + context (:25-26,50-54)    → get_spark()
 - populateTables (:86-92)                      → etl.populate_tables
 - trainAndValidate (:56-69)                    → train → predict →
-  validate → results_report
+  results_report (RMSE + report)
 - close() truncates (:71-84)                   → __exit__
 
 Fix applied per SURVEY §1.3: the reference scans the validation table
 three times (predict input, RMSE join, report map). Here it is scanned
-once, by predict: ``model.transform`` keeps each row's rating, and that
-scored frame — the one frame .cache()d — feeds both validate and the
-report.
+once: ``model.transform`` keeps each row's rating, and the report's one
+action over that scored frame collects the report rows with RMSE and
+the scored-row count observed on the way (report.py). Nothing is
+cached, and RMSE runs no job of its own.
 """
 
 from __future__ import annotations
@@ -31,7 +32,8 @@ from spark_cassandra_collabfiltering_spark.sources import Storage
 class RunResult:
     rmse: float
     report: str
-    scored: DataFrame  # validation rows that ALS scored, with prediction
+    scored: DataFrame  # lazy: validation rows that ALS scored, with prediction
+    scored_rows: int  # how many rows ``scored`` holds (the report's body lines)
 
 
 class CollabFilterPipeline:
@@ -40,28 +42,19 @@ class CollabFilterPipeline:
     def __init__(self, spark: SparkSession, storage: Storage):
         self.spark = spark
         self.storage = storage
-        self._scored: DataFrame | None = None
 
     def run(self, csv_path: str) -> RunResult:
         training, validation = etl.populate_tables(self.spark, csv_path, self.storage)
         model = cf.train(training)
-        self._unpersist()
-        self._scored = cf.predict(model, validation.select("user", "product", "rating")).cache()
-        rmse = cf.validate(self._scored)
-        report = results_report(self._scored, rmse)
-        return RunResult(rmse=rmse, report=report, scored=self._scored)
+        scored = cf.predict(model, validation.select("user", "product", "rating"))
+        rmse, scored_rows, report = results_report(scored)
+        return RunResult(rmse=rmse, report=report, scored=scored, scored_rows=scored_rows)
 
     # -- lifecycle (≙ try-with-resources + truncate-on-close, C3) --
     def __enter__(self) -> "CollabFilterPipeline":
         return self
 
-    def _unpersist(self) -> None:
-        if self._scored is not None:
-            self._scored.unpersist()
-            self._scored = None
-
     def close(self) -> None:
-        self._unpersist()
         for table in (etl.RATINGS_TABLE, etl.VALIDATION_TABLE):
             self.storage.truncate(self.spark, table)
 

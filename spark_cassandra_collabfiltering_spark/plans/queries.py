@@ -24,7 +24,10 @@ ALS itself is non-SQL-expressible (iterative solver) → rows-only check.
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -181,6 +184,24 @@ def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
         return df
     return read_testdata(spark, sf_dir, name)
+
+
+_scratch_root: str | None = None
+
+
+def scratch_dir(prefix: str) -> str:
+    """A new directory for the files a builder writes (lake tables,
+    Avro/ORC/proto/Iceberg inputs).
+
+    The builder returns a lazy frame over those files, so they must live
+    as long as the process, not the builder. Every such directory sits
+    under one root per process, made on first use and removed at exit.
+    """
+    global _scratch_root
+    if _scratch_root is None:
+        _scratch_root = tempfile.mkdtemp(prefix="queries_scratch_")
+        atexit.register(shutil.rmtree, _scratch_root, True)
+    return tempfile.mkdtemp(prefix=prefix, dir=_scratch_root)
 
 
 # ---------------------------------------------------------------------------
@@ -9805,14 +9826,12 @@ def q_dedup_lsh_advisor(spark, sf_dir):
     "a handful of file rewrites plus one commit, not a table scan.",
 )
 def q_lake_txn_merge(spark, sf_dir):
-    import tempfile
-
     from ..sources import lake
 
     base = t(spark, sf_dir, "customer").select(
         "c_custkey", "c_name", "c_nationkey"
     )
-    root = tempfile.mkdtemp(prefix="txn_merge_q_") + "/t"
+    root = scratch_dir("txn_merge_q_") + "/t"
     # range layout on the key -> disjoint per-file stats -> the merges
     # below actually exercise pruning, not rewrite-everything
     lake.txn_write(
@@ -9912,14 +9931,12 @@ def q_mm_jpeg(spark, sf_dir):
     "consumers pay per changed file, never per table.",
 )
 def q_lake_txn_changes(spark, sf_dir):
-    import tempfile
-
     from ..sources import lake
 
     base = t(spark, sf_dir, "customer").select(
         "c_custkey", "c_name", "c_nationkey"
     )
-    root = tempfile.mkdtemp(prefix="txn_cdf_q_") + "/t"
+    root = scratch_dir("txn_cdf_q_") + "/t"
     lake.txn_write(
         base.repartitionByRange(4, "c_custkey"), root, stats_cols=["c_custkey"]
     )
@@ -9979,14 +9996,12 @@ def q_lake_txn_changes(spark, sf_dir):
     "petabyte-scale rewrite.",
 )
 def q_lake_column_mapping(spark, sf_dir):
-    import tempfile
-
     from ..sources import lake
 
     base = t(spark, sf_dir, "customer").select(
         "c_custkey", "c_name", "c_acctbal"
     )
-    root = tempfile.mkdtemp(prefix="txn_cm_q_") + "/t"
+    root = scratch_dir("txn_cm_q_") + "/t"
     lake.txn_write(
         base.repartitionByRange(4, "c_custkey"), root,
         stats_cols=["c_custkey"],
@@ -10046,14 +10061,12 @@ def q_lake_column_mapping(spark, sf_dir):
     "(tests/test_txn_generated.py).",
 )
 def q_lake_generated_cols(spark, sf_dir):
-    import tempfile
-
     from ..sources import lake
 
     ev = t(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "value"
     )
-    root = tempfile.mkdtemp(prefix="txn_gen_q_") + "/t"
+    root = scratch_dir("txn_gen_q_") + "/t"
     lake.txn_write(
         ev, root, generated={"d": "CAST(ts AS DATE)"},
         partition_by=["d"], stats_cols=["event_id"],
@@ -10085,12 +10098,10 @@ def q_lake_generated_cols(spark, sf_dir):
     "At 100 TB: COUNT(*) is O(files) instead of a table scan.",
 )
 def q_lake_count_star(spark, sf_dir):
-    import tempfile
-
     from ..sources import lake
 
     base = t(spark, sf_dir, "customer").select("c_custkey", "c_name")
-    root = tempfile.mkdtemp(prefix="txn_cnt_q_") + "/t"
+    root = scratch_dir("txn_cnt_q_") + "/t"
     lake.txn_write(
         base.repartitionByRange(4, "c_custkey"), root,
         stats_cols=["c_custkey"],
@@ -10131,15 +10142,13 @@ def q_lake_count_star(spark, sf_dir):
     "instant commit, not a petabyte rewrite.",
 )
 def q_lake_type_widening(spark, sf_dir):
-    import tempfile
-
     from ..sources import lake
 
     base = t(spark, sf_dir, "customer").select(
         F.col("c_custkey").cast("int").alias("c_custkey"),
         F.col("c_acctbal").cast("float").alias("balance"),
     )
-    root = tempfile.mkdtemp(prefix="txn_widen_q_") + "/t"
+    root = scratch_dir("txn_widen_q_") + "/t"
     lake.txn_write(
         base.repartitionByRange(4, "c_custkey"), root,
         stats_cols=["c_custkey"],
@@ -10184,14 +10193,12 @@ def q_lake_type_widening(spark, sf_dir):
     "consulted — the coarsest, cheapest skip layer.",
 )
 def q_lake_txn_partition(spark, sf_dir):
-    import tempfile
-
     from ..sources import lake
 
     base = t(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderpriority", "o_totalprice"
     )
-    root = tempfile.mkdtemp(prefix="txn_part_q_") + "/t"
+    root = scratch_dir("txn_part_q_") + "/t"
     lake.txn_write(
         base.repartition(4), root,
         partition_by=["o_orderpriority"], stats_cols=["o_orderkey"],
@@ -10228,13 +10235,11 @@ def q_lake_txn_partition(spark, sf_dir):
     "publishes neither (pinned in tests/test_txn_multi.py).",
 )
 def q_lake_txn_multi(spark, sf_dir):
-    import tempfile
-
     from ..sources import lake
 
     base = t(spark, sf_dir, "customer")
     even = F.col("c_custkey") % 2 == 0
-    cat = tempfile.mkdtemp(prefix="txn_multi_q_") + "/cat"
+    cat = scratch_dir("txn_multi_q_") + "/cat"
     lake.txn_multi_write(
         cat,
         {
@@ -10278,8 +10283,6 @@ def q_lake_txn_multi(spark, sf_dir):
     "shape plus the streaming source and the Arrow writer.",
 )
 def q_lake_txn_datasource(spark, sf_dir):
-    import tempfile
-
     from ..sources import lake
     from ..sources.txnlake_ds import register_txnlake
 
@@ -10293,7 +10296,7 @@ def q_lake_txn_datasource(spark, sf_dir):
     base = t(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice"
     )
-    root = tempfile.mkdtemp(prefix="txn_ds_q_") + "/t"
+    root = scratch_dir("txn_ds_q_") + "/t"
     lake.txn_write(
         base.repartitionByRange(8, "o_orderkey"), root,
         stats_cols=["o_orderkey"],
@@ -10339,7 +10342,6 @@ def q_lake_txn_datasource(spark, sf_dir):
 )
 def q_avro_ingest(spark, sf_dir):
     import datetime
-    import tempfile
 
     from ..sources import avro_source as av
 
@@ -10367,7 +10369,7 @@ def q_avro_ingest(spark, sf_dir):
         .select("c_custkey", "c_name", "c_acctbal", "c_mktsegment")
         .collect()
     ]
-    work = tempfile.mkdtemp(prefix="avro_q_")
+    work = scratch_dir("avro_q_")
     for i in range(4):
         av.write_avro(
             [r for r in rows if r["c_custkey"] % 4 == i],
@@ -10418,8 +10420,6 @@ def q_avro_ingest(spark, sf_dir):
     "shuffle — no rewrite of old files to read them.",
 )
 def q_avro_evolution(spark, sf_dir):
-    import tempfile
-
     from ..sources import avro_source as av
 
     v1_writer = {
@@ -10470,7 +10470,7 @@ def q_avro_evolution(spark, sf_dir):
          "gen": 2}
         for r in rows if r["c_custkey"] % 2 == 1
     ]
-    work = tempfile.mkdtemp(prefix="avro_evo_q_")
+    work = scratch_dir("avro_evo_q_")
     av.write_avro(v1, v1_writer, f"{work}/v1.avro", codec="deflate",
                   rows_per_block=256)
     av.write_avro(v2, v2_writer, f"{work}/v2.avro", rows_per_block=256)
@@ -10507,7 +10507,6 @@ def q_avro_evolution(spark, sf_dir):
 )
 def q_avro_egress_evolved(spark, sf_dir):
     import json as _json
-    import tempfile
 
     from ..sources import avro_source as av
 
@@ -10530,7 +10529,7 @@ def q_avro_egress_evolved(spark, sf_dir):
         )
         .repartition(4)
     )
-    work = tempfile.mkdtemp(prefix="avro_egress_q_")
+    work = scratch_dir("avro_egress_q_")
     av.avro_write(old_shape, work, _json.dumps(target), codec="deflate")
     clean, bad = av.split_corrupt(av.read_avro(spark, work))
     assert bad.isEmpty()
@@ -10568,15 +10567,13 @@ def q_avro_egress_evolved(spark, sf_dir):
     "data read prunes and pushes down like any parquet scan.",
 )
 def q_lake_delta_interop(spark, sf_dir):
-    import tempfile
-
     from ..sources import delta_interop as di
     from ..sources import lake
 
     base = t(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice"
     )
-    work = tempfile.mkdtemp(prefix="delta_interop_q_")
+    work = scratch_dir("delta_interop_q_")
     root = work + "/t"
     droot = work + "/delta"
     lake.txn_write(
@@ -10638,8 +10635,6 @@ def q_lake_delta_interop(spark, sf_dir):
     "zigzag arithmetic and the nested/optional NULL semantics.",
 )
 def q_proto_ingest(spark, sf_dir):
-    import tempfile
-
     from ..sources import proto_source as pr
 
     schema = {
@@ -10667,7 +10662,7 @@ def q_proto_ingest(spark, sf_dir):
         .select("c_custkey", "c_name", "c_nationkey")
         .collect()
     ]
-    work = tempfile.mkdtemp(prefix="proto_q_")
+    work = scratch_dir("proto_q_")
     for i in range(4):
         pr.write_proto(
             [r for r in rows if r["c_custkey"] % 4 == i],
@@ -10716,8 +10711,6 @@ def q_proto_ingest(spark, sf_dir):
     "scan-minimization story as the parquet path.",
 )
 def q_orc_ingest(spark, sf_dir):
-    import tempfile
-
     base = t(spark, sf_dir, "part").select(
         "p_partkey",
         "p_name",
@@ -10729,7 +10722,7 @@ def q_orc_ingest(spark, sf_dir):
         ).alias("d"),
         (F.col("p_partkey") % 4).cast("int").alias("pbucket"),
     )
-    work = tempfile.mkdtemp(prefix="orc_q_")
+    work = scratch_dir("orc_q_")
     (
         base.write.format("orc")
         .option("compression", "zstd")
@@ -10782,15 +10775,13 @@ def q_orc_ingest(spark, sf_dir):
     "the data read is one pruned parquet scan.",
 )
 def q_iceberg_interop(spark, sf_dir):
-    import tempfile
-
     from ..sources import iceberg_interop as ice
     from ..sources import lake
 
     base = t(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderpriority"
     )
-    work = tempfile.mkdtemp(prefix="iceberg_q_")
+    work = scratch_dir("iceberg_q_")
     root = work + "/t"
     iroot = work + "/ice"
     lake.txn_write(
@@ -10839,15 +10830,13 @@ def q_iceberg_interop(spark, sf_dir):
     "O(appended bytes), never the table.",
 )
 def q_iceberg_appends(spark, sf_dir):
-    import tempfile
-
     from ..sources import iceberg_interop as ice
     from ..sources import lake
 
     base = t(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice"
     )
-    work = tempfile.mkdtemp(prefix="iceberg_app_q_")
+    work = scratch_dir("iceberg_app_q_")
     root = work + "/t"
     iroot = work + "/ice"
     lake.txn_write(
@@ -10896,8 +10885,6 @@ def q_iceberg_appends(spark, sf_dir):
     "as a parquet read; delete masking stays per-task.",
 )
 def q_iceberg_datasource(spark, sf_dir):
-    import tempfile
-
     from ..sources import iceberg_interop as ice
     from ..sources import lake
     from ..sources.iceberg_ds import IcebergLogDataSource
@@ -10906,7 +10893,7 @@ def q_iceberg_datasource(spark, sf_dir):
     base = t(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderpriority"
     )
-    work = tempfile.mkdtemp(prefix="iceberg_ds_q_")
+    work = scratch_dir("iceberg_ds_q_")
     root = work + "/t"
     iroot = work + "/ice"
     lake.txn_write(
@@ -10947,15 +10934,13 @@ def q_iceberg_datasource(spark, sf_dir):
     "forever.",
 )
 def q_iceberg_expire(spark, sf_dir):
-    import tempfile
-
     from ..sources import iceberg_interop as ice
     from ..sources import lake
 
     base = t(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderpriority"
     )
-    work = tempfile.mkdtemp(prefix="iceberg_exp_q_")
+    work = scratch_dir("iceberg_exp_q_")
     root = work + "/t"
     iroot = work + "/ice"
     lake.txn_write(
@@ -11011,15 +10996,13 @@ def q_iceberg_expire(spark, sf_dir):
     "the-file baseline, and the read costs one seek per (file, DV).",
 )
 def q_iceberg_v3_dv(spark, sf_dir):
-    import tempfile
-
     from ..sources import iceberg_interop as ice
     from ..sources import lake
 
     base = t(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderpriority"
     )
-    work = tempfile.mkdtemp(prefix="iceberg_v3_q_")
+    work = scratch_dir("iceberg_v3_q_")
     root = work + "/t"
     iroot = work + "/ice"
     lake.txn_write(
@@ -11054,8 +11037,6 @@ def q_iceberg_v3_dv(spark, sf_dir):
     "driver-side materialization.",
 )
 def q_iceberg_v3_datasource(spark, sf_dir):
-    import tempfile
-
     from ..sources import iceberg_interop as ice
     from ..sources import lake
     from ..sources.iceberg_ds import IcebergLogDataSource
@@ -11064,7 +11045,7 @@ def q_iceberg_v3_datasource(spark, sf_dir):
     base = t(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderpriority"
     )
-    work = tempfile.mkdtemp(prefix="iceberg_v3_ds_q_")
+    work = scratch_dir("iceberg_v3_ds_q_")
     root = work + "/t"
     iroot = work + "/ice"
     lake.txn_write(

@@ -112,24 +112,43 @@ class Storage(ABC):
 
 
 class ParquetStorage(Storage):
-    """Parquet-backed tables under ``root`` (one directory per table)."""
+    """Parquet-backed tables under ``root`` (one directory per table).
+
+    A table this instance wrote is read back with the schema it wrote:
+    inferring it from a footer would run a Spark job to learn what the
+    writer already knew. The record holds the schema only, set when a
+    write creates the table and kept while later appends write the same
+    schema; ``truncate`` and an append of another schema drop it, and a
+    table without a record is read with inference, as any parquet
+    directory is.
+    """
 
     def __init__(self, root: str):
         self.root = root
+        self._schemas: dict[str, StructType] = {}
 
     def _path(self, table: str) -> str:
         return os.path.join(self.root, table)
 
     def read(self, spark: SparkSession, table: str) -> DataFrame:
-        return spark.read.parquet(self._path(table))
+        schema = self._schemas.get(table)
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        return reader.parquet(self._path(table))
 
     def write(self, df: DataFrame, table: str) -> None:
+        schema = df.schema
+        created = not self.exists(table)
         df.write.mode("append").parquet(self._path(table))
+        if created or self._schemas.get(table) == schema:
+            self._schemas[table] = schema
+        else:
+            self._schemas.pop(table, None)
 
     def truncate(self, spark: SparkSession, table: str) -> None:
         # TRUNCATE ks.tbl analog (CollabFilterCassandraDriver.java:82-84):
         # drop the table's files; a subsequent read sees an empty table
         # only after a fresh write, so callers pair truncate with write.
+        self._schemas.pop(table, None)
         path = self._path(table)
         if os.path.exists(path):
             shutil.rmtree(path)

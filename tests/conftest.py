@@ -34,6 +34,17 @@ def spark():
     yield spark
 
 
+def jobs_fired(spark, group, fn):
+    """(fn(), number of Spark jobs fn fired) under a fresh job group."""
+    sc = spark.sparkContext
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_SMOKE

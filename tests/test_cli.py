@@ -1,6 +1,7 @@
 """The one-shot CLI (``python -m spark_cassandra_collabfiltering_spark``)
-run in-process: the reference contract passes and the run leaves no
-scratch directory behind."""
+run in-process: the reference contract passes, the report is followed
+by the scored-pair count, and the run leaves no scratch directory
+behind."""
 
 from __future__ import annotations
 
@@ -23,4 +24,5 @@ def test_cli_passes_contract_and_removes_its_workdir(spark, capsys):
                 spark.conf.set(k, v)
     out = capsys.readouterr().out
     assert "contract 0.0 <= RMSE < 0.5: PASS" in out
+    assert "\nRMSE = 0.39\nscored pairs = 9\n" in out
     assert set(glob.glob(pattern)) <= before

@@ -15,20 +15,7 @@ from pyspark.sql import functions as F
 from spark_cassandra_collabfiltering_spark.plans.queries import t
 from spark_cassandra_collabfiltering_spark.sources.tables import read_testdata
 
-from conftest import SF_SMOKE
-
-GROUP_KEY = "spark.jobGroup.id"
-
-
-def _jobs(spark, group, fn):
-    """(fn(), number of Spark jobs fn fired) under a fresh job group."""
-    sc = spark.sparkContext
-    sc.setLocalProperty(GROUP_KEY, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty(GROUP_KEY, None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+from conftest import SF_SMOKE, jobs_fired
 
 
 def test_rebuilt_plans_reuse_compiled_classes(spark):
@@ -54,7 +41,7 @@ def test_rebuilt_plans_reuse_compiled_classes(spark):
 
 def test_second_testdata_read_fires_no_job(spark):
     first = t(spark, SF_SMOKE, "lineitem")
-    second, jobs = _jobs(spark, "fixed-cost-lineitem", lambda: t(spark, SF_SMOKE, "lineitem"))
+    second, jobs = jobs_fired(spark, "fixed-cost-lineitem", lambda: t(spark, SF_SMOKE, "lineitem"))
     assert jobs == 0
     assert second.schema == first.schema
     assert second.schema == spark.read.parquet(f"{SF_SMOKE}/lineitem.parquet").schema
@@ -64,7 +51,7 @@ def test_rewritten_file_is_read_with_its_new_schema(spark, tmp_path):
     path = tmp_path / "x.parquet"
     pq.write_table(pa.table({"a": [1, 2, 3]}), path)
     assert read_testdata(spark, str(tmp_path), "x").columns == ["a"]
-    _, jobs = _jobs(spark, "fixed-cost-rewrite", lambda: read_testdata(spark, str(tmp_path), "x"))
+    _, jobs = jobs_fired(spark, "fixed-cost-rewrite", lambda: read_testdata(spark, str(tmp_path), "x"))
     assert jobs == 0  # memoized
 
     pq.write_table(pa.table({"b": ["u", "v"], "c": [1.5, 2.5]}), path)
@@ -88,7 +75,7 @@ def test_events_ts_stays_timestamp_when_memoized(spark, tmp_path, unit):
         pq.write_table(table, tmp_path / "events.parquet")
 
     first = t(spark, str(tmp_path), "events")
-    second, jobs = _jobs(spark, f"fixed-cost-events-{unit}", lambda: t(spark, str(tmp_path), "events"))
+    second, jobs = jobs_fired(spark, f"fixed-cost-events-{unit}", lambda: t(spark, str(tmp_path), "events"))
     assert jobs == 0
     assert dict(first.dtypes)["ts"] == dict(second.dtypes)["ts"] == "timestamp"
     assert first.select("ts").exceptAll(second.select("ts")).count() == 0

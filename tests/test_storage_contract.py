@@ -21,6 +21,8 @@ from spark_cassandra_collabfiltering_spark.sources.tables import (  # noqa: E402
     Storage,
 )
 
+from conftest import jobs_fired  # noqa: E402
+
 
 # ---------------------------------------------------------------------------
 # 1. conformance: ParquetStorage honors the Storage contract
@@ -43,6 +45,43 @@ def _conformance(storage: Storage, spark, exists) -> None:
 def test_parquet_storage_conformance(spark, tmp_path):
     storage = ParquetStorage(str(tmp_path / "lake"))
     _conformance(storage, spark, storage.exists)
+
+
+def _read_jobs(spark, storage, table, group):
+    """(storage.read(...), Spark jobs the read fired)."""
+    return jobs_fired(spark, group, lambda: storage.read(spark, table))
+
+
+def test_parquet_storage_reads_back_its_own_writes_without_inference(spark, tmp_path):
+    storage = ParquetStorage(str(tmp_path / "lake"))
+    kv = spark.createDataFrame([(1, "a")], "k int not null, v string")
+    storage.write(kv, "tbl")
+    storage.write(kv, "tbl")  # an append of the same schema keeps the record
+    df, jobs = _read_jobs(spark, storage, "tbl", "storage-own")
+    assert jobs == 0
+    assert df.schema == spark.read.parquet(str(tmp_path / "lake" / "tbl")).schema
+    assert sorted(map(tuple, df.collect())) == [(1, "a"), (1, "a")]
+
+    # another instance did not write the table: it infers, as before
+    df, jobs = _read_jobs(spark, ParquetStorage(str(tmp_path / "lake")), "tbl", "storage-other")
+    assert jobs >= 1 and df.schema == spark.read.parquet(str(tmp_path / "lake" / "tbl")).schema
+
+
+def test_parquet_storage_forgets_schema_on_truncate_and_on_a_new_schema(spark, tmp_path):
+    storage = ParquetStorage(str(tmp_path / "lake"))
+    path = str(tmp_path / "lake" / "tbl")
+    storage.write(spark.createDataFrame([(1, "a")], ["k", "v"]), "tbl")
+    storage.truncate(spark, "tbl")
+    # someone else writes the table with another schema: read infers it
+    spark.createDataFrame([(2.5,)], ["x"]).write.parquet(path)
+    df, jobs = _read_jobs(spark, storage, "tbl", "storage-truncated")
+    assert jobs >= 1 and df.columns == ["x"]
+
+    storage.truncate(spark, "tbl")
+    storage.write(spark.createDataFrame([(1, "a")], ["k", "v"]), "tbl")
+    storage.write(spark.createDataFrame([(2, "b", 3)], ["k", "v", "w"]), "tbl")
+    _, jobs = _read_jobs(spark, storage, "tbl", "storage-new-schema")
+    assert jobs >= 1
 
 
 # ---------------------------------------------------------------------------
