@@ -564,9 +564,7 @@ def delta_export(
     last Delta version written."""
     from . import delta_dv
 
-    latest = lake.txn_latest_version(txn_root)
-    if latest is None:
-        raise FileNotFoundError(f"no committed versions under {txn_root}")
+    latest = lake._latest(txn_root)
     os.makedirs(_dlog_dir(delta_root), exist_ok=True)
     if _json_versions(delta_root) and _resume is None:
         raise FileExistsError(f"{delta_root} already has a Delta log")
@@ -797,9 +795,7 @@ def delta_export_incremental(
     idempotence shape as the lake's txn_cdc_sink (app, epoch) key).
     Returns the last Delta version in the log; a no-new-commits call
     is a no-op returning it unchanged."""
-    latest = lake.txn_latest_version(txn_root)
-    if latest is None:
-        raise FileNotFoundError(f"no committed versions under {txn_root}")
+    latest = lake._latest(txn_root)
     done = _last_exported_version(delta_root)
     if done is None:
         if _json_versions(delta_root):

@@ -1251,9 +1251,7 @@ def iceberg_export(
         raise ValueError(
             f"format_version must be 2 or 3, got {format_version}"
         )
-    latest = lake.txn_latest_version(txn_root)
-    if latest is None:
-        raise FileNotFoundError(f"no committed versions under {txn_root}")
+    latest = lake._latest(txn_root)
     st = lake._replay(txn_root, latest)
     tj = lake._table_schema_json(txn_root, latest)
     if tj is None:
@@ -1519,9 +1517,7 @@ def iceberg_export_incremental(
 
     from .delta_interop import _export_guards, _txn_dv_positions
 
-    latest = lake.txn_latest_version(txn_root)
-    if latest is None:
-        raise FileNotFoundError(f"no committed versions under {txn_root}")
+    latest = lake._latest(txn_root)
     d = _meta_dir(ice_root)
     if not (os.path.isdir(d) and os.listdir(d)):
         return iceberg_export(

@@ -125,9 +125,10 @@ def zorder_key(
 # Writer protocol (optimistic concurrency):
 #   1. note the latest committed version R
 #   2. write data files under a fresh _data/<uuid>/ (cannot conflict)
-#   3. try to create _log/<R+1>.json with O_EXCL
-#   4. on EEXIST somebody else won R+1: reload the log, apply the
-#      CONFLICT RULES, and either retry at the new tip or raise
+#   3. _publish _log/<R+1>.json (the one O_EXCL create in the package)
+#   4. if it returns False somebody else won R+1: reload the log, apply
+#      the CONFLICT RULES, and either retry at the new tip or raise —
+#      at most COMMIT_RETRIES attempts, a fixed bound no caller sets
 #
 # Conflict rules (the Delta semantics, at FILE granularity):
 #   - append  vs committed append     -> rebase, retry (disjoint files)
@@ -238,10 +239,14 @@ def _committed_versions(root: str) -> list[int]:
     return vs
 
 
+def _commit_path(root: str, version: int) -> str:
+    return os.path.join(_log_dir(root), f"{version:020d}.json")
+
+
 def _read_commit(root: str, version: int) -> dict:
     import json
 
-    with open(os.path.join(_log_dir(root), f"{version:020d}.json")) as fh:
+    with open(_commit_path(root, version)) as fh:
         c = json.load(fh)
     if c.get("protocol", 1) > MAX_READER_PROTOCOL:
         raise UnsupportedProtocol(
@@ -252,8 +257,88 @@ def _read_commit(root: str, version: int) -> dict:
 
 
 def txn_latest_version(root: str) -> int | None:
+    """The latest committed version, or None when ``root`` has no log
+    yet (what table creators and stream cursors need; everything else
+    reads through _latest / _resolve_version)."""
     vs = _committed_versions(root)
     return vs[-1] if vs else None
+
+
+# ---------------------------------------------------------------------------
+# Log access: which version a call reads (_latest, _resolve_version),
+# how a commit file lands (_publish), and how often a commit loop tries
+# (COMMIT_RETRIES). Every txn_* reader, writer, data-source reader and
+# exporter goes through these, so a bad version fails one way.
+# ---------------------------------------------------------------------------
+
+COMMIT_RETRIES = 20  # attempts per commit loop: first try + rebases
+
+
+def _latest(root: str) -> int:
+    """The latest committed version of an existing table or catalog."""
+    latest = txn_latest_version(root)
+    if latest is None:
+        raise FileNotFoundError(f"no committed versions under {root}")
+    return latest
+
+
+def _horizon_path(root: str) -> str:
+    return os.path.join(_log_dir(root), "_vacuum_horizon.json")
+
+
+def _vacuum_horizon(root: str) -> int:
+    """The retention horizon: versions BELOW it were vacuumed away and
+    must refuse loudly instead of erroring on missing files. 0 = full
+    history intact."""
+    import json
+
+    p = _horizon_path(root)
+    if not os.path.exists(p):
+        return 0
+    with open(p) as fh:
+        return json.load(fh)["version"]
+
+
+def _check_horizon(root: str, version: int) -> None:
+    h = _vacuum_horizon(root)
+    if version < h:
+        raise ValueError(
+            f"version {version} is below the vacuum horizon {h}: its "
+            "data files were reclaimed by txn_vacuum_retain and time "
+            "travel there is gone (the log itself is kept for lineage)"
+        )
+
+
+def _resolve_version(root: str, version: "int | None") -> int:
+    """The version a read pins: the latest when ``version`` is None.
+    A version outside [0, latest] raises ValueError, and so does one
+    below the vacuum horizon. Lists the log; never replays it."""
+    latest = _latest(root)
+    if version is None:
+        return latest
+    if not 0 <= version <= latest:
+        raise ValueError(f"version {version} not in [0, {latest}]")
+    _check_horizon(root, version)
+    return version
+
+
+def _publish(root: str, version: int, commit: dict) -> bool:
+    """Create _log/<version>.json with create-if-absent semantics and
+    fsync it before returning True; False when another writer already
+    holds ``version`` (nothing is written then)."""
+    import json
+
+    try:
+        fd = os.open(
+            _commit_path(root, version), os.O_CREAT | os.O_EXCL | os.O_WRONLY
+        )
+    except FileExistsError:
+        return False
+    with os.fdopen(fd, "w") as fh:
+        json.dump(commit, fh)
+        fh.flush()
+        os.fsync(fh.fileno())
+    return True
 
 
 def _apply_commit(files: list[str], c: dict) -> list[str]:
@@ -677,6 +762,18 @@ def _require_range(lo, hi) -> None:
         raise ValueError(f"range bounds must not be None, got {lo!r}..{hi!r}")
 
 
+def _pruned_read(read, files: list, keep: list, residual) -> tuple:
+    """The tail of every pruned read: ``read(paths) -> DataFrame`` over
+    the surviving ``keep`` files (over all ``files`` filtered to
+    nothing when none survive, so the empty result keeps the table
+    schema), the ``residual`` row filter on top, and
+    (df, files_read, files_total)."""
+    from pyspark.sql import functions as F
+
+    df = read(keep) if keep else read(files).filter(F.lit(False))
+    return df.filter(residual), len(keep), len(files)
+
+
 def _collect_file_stats(
     spark: SparkSession, files: list[str], stats_cols: list[str]
 ) -> dict:
@@ -790,7 +887,6 @@ def _txn_commit(
     removes: list[str],
     read_v: "int | None",
     txn: "tuple[str, int] | None",
-    max_retries: int,
     stats: "dict | None" = None,
     schema_fn=None,
     extra_conflict=None,
@@ -800,7 +896,7 @@ def _txn_commit(
     min_protocol: int = PROTOCOL_VERSION,
 ) -> "int | None":
     """The optimistic commit loop shared by write, compact and merge:
-    try to win version R+1 with O_EXCL; on loss, apply the
+    try to _publish version R+1; on loss, apply the
     file-granularity conflict rules against the gap commits and rebase
     or raise. ``schema_fn(tip)`` computes the post-commit table schema
     against the CURRENT tip — re-run after every rebase, so a schema
@@ -809,11 +905,9 @@ def _txn_commit(
     when a gap commit invalidates this one under a stricter isolation
     level (merge's serializable mode) — evaluated per gap commit on
     every rebase."""
-    import json
-
     attempt_v = (read_v if read_v is not None else -1) + 1
     schema_json = schema_fn(read_v) if schema_fn is not None else None
-    for _ in range(max_retries):
+    for _ in range(COMMIT_RETRIES):
         commit = {
             "version": attempt_v,
             "op": op,
@@ -848,64 +942,56 @@ def _txn_commit(
                 commit.update(extra)
         if txn is not None:
             commit["txn_app"], commit["txn_run"] = txn[0], txn[1]
-        path = os.path.join(_log_dir(root), f"{attempt_v:020d}.json")
-        try:
-            fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-        except FileExistsError:
-            # lost the race: reload, check conflict rules, rebase
-            new_latest = txn_latest_version(root)
-            assert new_latest is not None and new_latest >= attempt_v
-            if txn is not None and _txn_seen(root, new_latest, *txn):
-                return None  # our own replay won via another writer
-            if op == "overwrite":
+        if _publish(root, attempt_v, commit):
+            _maybe_checkpoint(root, attempt_v)
+            return attempt_v
+        # lost the race: reload, check conflict rules, rebase
+        new_latest = txn_latest_version(root)
+        assert new_latest is not None and new_latest >= attempt_v
+        if txn is not None and _txn_seen(root, new_latest, *txn):
+            return None  # our own replay won via another writer
+        if op == "overwrite":
+            raise ConcurrentWriteConflict(
+                f"overwrite lost the race at v{attempt_v}: the state "
+                "it replaces no longer exists"
+            )
+        for v in range(attempt_v, new_latest + 1):
+            won = _read_commit(root, v)
+            if won["op"] == "overwrite":
                 raise ConcurrentWriteConflict(
-                    f"overwrite lost the race at v{attempt_v}: the state "
-                    "it replaces no longer exists"
+                    f"{op} rebased across an overwrite at v{v}"
                 )
-            for v in range(attempt_v, new_latest + 1):
-                won = _read_commit(root, v)
-                if won["op"] == "overwrite":
-                    raise ConcurrentWriteConflict(
-                        f"{op} rebased across an overwrite at v{v}"
-                    )
-                # compact/merge REWRITE files; dv pins ROW POSITIONS in
-                # files. Any two of them touching the same file conflict
-                # (a rewrite invalidates positions; a position set
-                # invalidates a rewrite computed without it) — EXCEPT
-                # dv+dv on one file, which compose (both anti-joins
-                # apply independently).
-                _touch_ops = ("compact", "merge", "dv")
-                won_touch = set(won.get("removes", ())) | set(
-                    won.get("dv_for", ())
+            # compact/merge REWRITE files; dv pins ROW POSITIONS in
+            # files. Any two of them touching the same file conflict
+            # (a rewrite invalidates positions; a position set
+            # invalidates a rewrite computed without it) — EXCEPT
+            # dv+dv on one file, which compose (both anti-joins
+            # apply independently).
+            _touch_ops = ("compact", "merge", "dv")
+            won_touch = set(won.get("removes", ())) | set(
+                won.get("dv_for", ())
+            )
+            if (
+                op in _touch_ops
+                and won["op"] in _touch_ops
+                and not (op == "dv" and won["op"] == "dv")
+                and won_touch & set(removes)
+            ):
+                raise ConcurrentWriteConflict(
+                    f"concurrent {won['op']} at v{v} touched an "
+                    "overlapping file set"
                 )
-                if (
-                    op in _touch_ops
-                    and won["op"] in _touch_ops
-                    and not (op == "dv" and won["op"] == "dv")
-                    and won_touch & set(removes)
-                ):
-                    raise ConcurrentWriteConflict(
-                        f"concurrent {won['op']} at v{v} touched an "
-                        "overlapping file set"
-                    )
-                if extra_conflict is not None and (
-                    why := extra_conflict(won)
-                ):
-                    raise ConcurrentWriteConflict(
-                        f"{op} invalidated by concurrent "
-                        f"{won['op']} at v{v}: {why}"
-                    )
-            if schema_fn is not None:
-                schema_json = schema_fn(new_latest)
-            attempt_v = new_latest + 1
-            continue
-        with os.fdopen(fd, "w") as fh:
-            json.dump(commit, fh)
-            fh.flush()
-            os.fsync(fh.fileno())
-        _maybe_checkpoint(root, attempt_v)
-        return attempt_v
-    raise ConcurrentWriteConflict(f"gave up after {max_retries} retries")
+            if extra_conflict is not None and (
+                why := extra_conflict(won)
+            ):
+                raise ConcurrentWriteConflict(
+                    f"{op} invalidated by concurrent "
+                    f"{won['op']} at v{v}: {why}"
+                )
+        if schema_fn is not None:
+            schema_json = schema_fn(new_latest)
+        attempt_v = new_latest + 1
+    raise ConcurrentWriteConflict(f"gave up after {COMMIT_RETRIES} retries")
 
 
 def _resolve_spec(
@@ -1050,10 +1136,7 @@ def _apply_generated(df: DataFrame, generated: dict) -> DataFrame:
 
 def txn_generated(root: str) -> dict:
     """The active generated-column map ({col: generation sql expr})."""
-    latest = txn_latest_version(root)
-    if latest is None:
-        return {}
-    return dict(_replay(root, latest).generated)
+    return dict(_replay(root, _latest(root)).generated)
 
 
 # ---------------------------------------------------------------------------
@@ -1118,13 +1201,11 @@ def _row_alloc(root: str, files: list, nrows: dict):
     return alloc
 
 
-def txn_enable_row_tracking(root: str, max_retries: int = 20) -> int:
+def txn_enable_row_tracking(root: str) -> int:
     """Enable row tracking: a metadata commit that reserves id ranges
     for every EXISTING live file (backfill by footer row counts), so
     the whole table has stable ids from this version on. Idempotent."""
-    read_v = txn_latest_version(root)
-    if read_v is None:
-        raise FileNotFoundError(f"no committed versions under {root}")
+    read_v = _latest(root)
     if _replay(root, read_v).row_tracking:
         return read_v
 
@@ -1147,7 +1228,7 @@ def txn_enable_row_tracking(root: str, max_retries: int = 20) -> int:
         return {"row_tracking": True, "row_bases": rb, "row_hwm": base}
 
     return _txn_commit(
-        root, "meta", [], [], read_v, None, max_retries, None,
+        root, "meta", [], [], read_v, None, None,
         lambda tip: _table_schema_json(root, tip),
         _meta_conflict, extra_commit=extra,
     )
@@ -1160,14 +1241,7 @@ def txn_read_with_ids(
     derive ids as base + row position (zero storage); rewritten files
     carry them materialized; deletion vectors drop ids with their
     rows. Requires row tracking."""
-    latest = txn_latest_version(root)
-    if latest is None:
-        raise FileNotFoundError(f"no committed versions under {root}")
-    if version is None:
-        version = latest
-    if not 0 <= version <= latest:
-        raise ValueError(f"version {version} not in [0, {latest}]")
-    _check_horizon(root, version)
+    version = _resolve_version(root, version)
     state = _replay(root, version)
     if not state.row_tracking:
         raise ValueError(
@@ -1180,7 +1254,7 @@ def txn_read_with_ids(
 
 
 def txn_set_constraint(
-    root: str, name: str, expr: str, max_retries: int = 20
+    root: str, name: str, expr: str
 ) -> int:
     """ADD/replace a table CHECK constraint as a METADATA-ONLY commit
     (op="meta", the Delta ALTER TABLE ADD CONSTRAINT shape): every
@@ -1198,7 +1272,7 @@ def txn_set_constraint(
     cons = dict(_replay(root, read_v).constraints) if read_v is not None else {}
     cons[name] = expr
     v = _txn_commit(
-        root, "meta", [], [], read_v, None, max_retries, None,
+        root, "meta", [], [], read_v, None, None,
         (lambda tip: _table_schema_json(root, tip))
         if read_v is not None
         else None,
@@ -1216,18 +1290,16 @@ def _meta_conflict(won: dict) -> "str | None":
     )
 
 
-def txn_drop_constraint(root: str, name: str, max_retries: int = 20) -> int:
+def txn_drop_constraint(root: str, name: str) -> int:
     """DROP a CHECK constraint (metadata-only commit). Unknown names
     raise (a typo must not silently leave the constraint active)."""
-    read_v = txn_latest_version(root)
-    if read_v is None:
-        raise FileNotFoundError(f"no committed versions under {root}")
+    read_v = _latest(root)
     cons = dict(_replay(root, read_v).constraints)
     if name not in cons:
         raise ValueError(f"no CHECK constraint named {name!r}")
     del cons[name]
     return _txn_commit(
-        root, "meta", [], [], read_v, None, max_retries, None,
+        root, "meta", [], [], read_v, None, None,
         lambda tip: _table_schema_json(root, tip),
         _meta_conflict,
         extra_commit={"constraints": cons},
@@ -1236,10 +1308,7 @@ def txn_drop_constraint(root: str, name: str, max_retries: int = 20) -> int:
 
 def txn_constraints(root: str) -> dict:
     """The active CHECK constraints ({name: sql expr})."""
-    latest = txn_latest_version(root)
-    if latest is None:
-        return {}
-    return dict(_replay(root, latest).constraints)
+    return dict(_replay(root, _latest(root)).constraints)
 
 
 # ---------------------------------------------------------------------------
@@ -1446,7 +1515,7 @@ def _auto_upcast(df: DataFrame, table_json: "str | None") -> DataFrame:
 
 
 def txn_widen_column(
-    root: str, col: str, new_type, max_retries: int = 20
+    root: str, col: str, new_type
 ) -> int:
     """ALTER COLUMN TYPE to a strictly WIDER type, metadata-only (zero
     bytes rewritten at any table size). Only lossless upcasts are
@@ -1468,9 +1537,7 @@ def txn_widen_column(
             )
     else:
         nt = new_type
-    read_v = txn_latest_version(root)
-    if read_v is None:
-        raise FileNotFoundError(f"no committed versions under {root}")
+    read_v = _latest(root)
 
     def schema_fn(tip):
         tj = _table_schema_json(root, tip)
@@ -1519,7 +1586,7 @@ def txn_widen_column(
         ).json()
 
     return _txn_commit(
-        root, "meta", [], [], read_v, None, max_retries, None, schema_fn,
+        root, "meta", [], [], read_v, None, None, schema_fn,
         _meta_conflict,
     )
 
@@ -1587,13 +1654,10 @@ def _cm_guard_refs(name: str, constraints: dict, spec_phys: "set | None" = None,
 def txn_column_mapping(root: str) -> "dict | None":
     """The active {logical -> physical} column mapping, or None when
     mapping was never enabled."""
-    latest = txn_latest_version(root)
-    if latest is None:
-        return None
-    return _cm_mapping(_table_schema_json(root, latest))
+    return _cm_mapping(_table_schema_json(root, _latest(root)))
 
 
-def txn_enable_column_mapping(root: str, max_retries: int = 20) -> int:
+def txn_enable_column_mapping(root: str) -> int:
     """Enable column mapping (ALTER TABLE ... SET columnMapping.mode =
     'name'): a metadata-only commit that stamps every current field's
     physical name = its current logical name, so every file already on
@@ -1603,9 +1667,7 @@ def txn_enable_column_mapping(root: str, max_retries: int = 20) -> int:
     version without committing."""
     import json
 
-    read_v = txn_latest_version(root)
-    if read_v is None:
-        raise FileNotFoundError(f"no committed versions under {root}")
+    read_v = _latest(root)
     if _cm_mapping(_table_schema_json(root, read_v)):
         return read_v
 
@@ -1624,13 +1686,13 @@ def txn_enable_column_mapping(root: str, max_retries: int = 20) -> int:
         ).json()
 
     return _txn_commit(
-        root, "meta", [], [], read_v, None, max_retries, None, schema_fn,
+        root, "meta", [], [], read_v, None, None, schema_fn,
         _meta_conflict,
     )
 
 
 def txn_rename_column(
-    root: str, old: str, new: str, max_retries: int = 20
+    root: str, old: str, new: str
 ) -> int:
     """RENAME COLUMN as a metadata-only commit: the field keeps its
     physical name (zero bytes rewritten, history and time travel
@@ -1641,9 +1703,7 @@ def txn_rename_column(
     MAY be renamed — the layout is keyed by physical name."""
     import json
 
-    read_v = txn_latest_version(root)
-    if read_v is None:
-        raise FileNotFoundError(f"no committed versions under {root}")
+    read_v = _latest(root)
 
     def schema_fn(tip):
         tj = _table_schema_json(root, tip)
@@ -1685,12 +1745,12 @@ def txn_rename_column(
         ).json()
 
     return _txn_commit(
-        root, "meta", [], [], read_v, None, max_retries, None, schema_fn,
+        root, "meta", [], [], read_v, None, None, schema_fn,
         _meta_conflict,
     )
 
 
-def txn_drop_column(root: str, name: str, max_retries: int = 20) -> int:
+def txn_drop_column(root: str, name: str) -> int:
     """DROP COLUMN as a metadata-only commit: the field leaves the
     schema; its physical column stays in old files but no read selects
     it, and a later re-add of the same logical name receives a FRESH
@@ -1699,9 +1759,7 @@ def txn_drop_column(root: str, name: str, max_retries: int = 20) -> int:
     a constrained column, or the last column is refused."""
     import json
 
-    read_v = txn_latest_version(root)
-    if read_v is None:
-        raise FileNotFoundError(f"no committed versions under {root}")
+    read_v = _latest(root)
 
     def schema_fn(tip):
         tj = _table_schema_json(root, tip)
@@ -1737,7 +1795,7 @@ def txn_drop_column(root: str, name: str, max_retries: int = 20) -> int:
         ).json()
 
     return _txn_commit(
-        root, "meta", [], [], read_v, None, max_retries, None, schema_fn,
+        root, "meta", [], [], read_v, None, None, schema_fn,
         _meta_conflict,
     )
 
@@ -1747,7 +1805,6 @@ def txn_write(
     root: str,
     mode: str = "append",
     txn: "tuple[str, int] | None" = None,
-    max_retries: int = 20,
     stats_cols: "list[str] | None" = None,
     merge_schema: bool = False,
     bloom_cols: "list[str] | None" = None,
@@ -1895,7 +1952,7 @@ def txn_write(
         return out or None
 
     return _txn_commit(
-        root, mode, files, [], read_v, txn, max_retries, stats, schema_fn,
+        root, mode, files, [], read_v, txn, stats, schema_fn,
         parts=parts, spec=spec, extra_commit=extra,
     )
 
@@ -1904,7 +1961,6 @@ def txn_compact(
     spark: SparkSession,
     root: str,
     max_file_bytes: "int | None" = None,
-    max_retries: int = 20,
     stats_cols: "list[str] | None" = None,
     sort_cols: "list[str] | None" = None,
     n_files: int = 1,
@@ -1988,7 +2044,7 @@ def txn_compact(
         spark, files, _cm_cols(mapping, stats_cols), full.spec, parts, types
     )
     return _txn_commit(
-        root, "compact", files, sorted(victims), read_v, None, max_retries,
+        root, "compact", files, sorted(victims), read_v, None,
         stats, lambda tip: _table_schema_json(root, tip),
         parts=parts, spec=full.spec,
         extra_commit=_row_alloc(
@@ -2080,7 +2136,6 @@ def txn_merge(
     when_matched: str = "update",
     when_not_matched: str = "insert",
     stats_cols: "list[str] | None" = None,
-    max_retries: int = 20,
     serializable: bool = False,
     txn: "tuple[str, int] | None" = None,
 ) -> "tuple[int | None, int, int]":
@@ -2261,7 +2316,7 @@ def txn_merge(
             return None
 
     v = _txn_commit(
-        root, "merge", files, sorted(victims), read_v, txn, max_retries,
+        root, "merge", files, sorted(victims), read_v, txn,
         stats, lambda tip: _table_schema_json(root, tip), extra,
         parts=parts, spec=state.spec,
         extra_commit=_row_alloc(
@@ -2334,7 +2389,6 @@ def txn_delete_dv(
     root: str,
     keys: DataFrame,
     key_cols: "list[str]",
-    max_retries: int = 20,
     txn: "tuple[str, int] | None" = None,
 ) -> "tuple[int | None, int, int]":
     """Delete by key WITHOUT rewriting data files: record the matching
@@ -2457,7 +2511,7 @@ def txn_delete_dv(
     if n_deleted == 0:
         return None, 0, len(victims)  # orphan sidecars: vacuumable
     v = _txn_commit(
-        root, "dv", sidecars, sorted(victims), read_v, txn, max_retries,
+        root, "dv", sidecars, sorted(victims), read_v, txn,
         None, lambda tip: _table_schema_json(root, tip),
         extra_commit={"dv_rows": int(n_deleted)},
     )
@@ -2475,12 +2529,7 @@ def txn_count(root: str, version: "int | None" = None) -> int:
     and it is exactly what a scan would return, DVs included."""
     import pyarrow.parquet as pq
 
-    latest = txn_latest_version(root)
-    if latest is None:
-        raise FileNotFoundError(f"no committed versions under {root}")
-    if version is None:
-        version = latest
-    _check_horizon(root, version)
+    version = _resolve_version(root, version)
     state = _replay(root, version)
     total = 0
     for f in state.files:
@@ -2510,9 +2559,7 @@ def txn_detail(root: str) -> dict:
     arithmetic plus one os.path.getsize pass over live files."""
     import json
 
-    latest = txn_latest_version(root)
-    if latest is None:
-        raise FileNotFoundError(f"no committed versions under {root}")
+    latest = _latest(root)
     st = _replay(root, latest)
     schema_json = _table_schema_json(root, latest)
     fields = (
@@ -2549,9 +2596,7 @@ def txn_history(root: str) -> list[dict]:
     recording — never a guess), and dv commits carry ``rows_hidden``
     (the count recorded at commit time). A compaction shows
     added == removed; an audit of table growth needs no scan."""
-    latest = txn_latest_version(root)
-    if latest is None:
-        return []
+    latest = _latest(root)
     # one ascending pass accumulates every file's recorded row count,
     # so a remove at v can be priced from the commit that added it
     nrows: dict = {}
@@ -2982,14 +3027,7 @@ def txn_read(
     a pinned historical one (time travel by log replay). Files written
     before a schema evolution surface the added columns as NULL, and
     every read presents the version's recorded table schema."""
-    latest = txn_latest_version(root)
-    if latest is None:
-        raise FileNotFoundError(f"no committed versions under {root}")
-    if version is None:
-        version = latest
-    if not 0 <= version <= latest:
-        raise ValueError(f"version {version} not in [0, {latest}]")
-    _check_horizon(root, version)
+    version = _resolve_version(root, version)
     files = _txn_state(root, version)
     if not files:
         raise ValueError(f"version {version} is an empty table state")
@@ -3016,22 +3054,15 @@ def txn_read_pruned(
     from pyspark.sql import functions as F
 
     _require_range(lo, hi)
-    latest = txn_latest_version(root)
-    if latest is None:
-        raise FileNotFoundError(f"no committed versions under {root}")
-    if version is None:
-        version = latest
-    _check_horizon(root, version)
+    version = _resolve_version(root, version)
     files, _, stats = _replay(root, version)[:3]
     # stats are keyed by PHYSICAL column name; the caller speaks logical
     pcol = _cm_phys(_cm_mapping(_table_schema_json(root, version)), col)
     keep = _files_in_range(files, stats, {pcol: (lo, hi)})
-    if not keep:  # nothing can match; empty frame with the right schema
-        df = _read_files(spark, root, version, files).filter(F.lit(False))
-    else:
-        df = _read_files(spark, root, version, keep)
-    df = df.filter((F.col(col) >= F.lit(lo)) & (F.col(col) <= F.lit(hi)))
-    return df, len(keep), len(files)
+    return _pruned_read(
+        lambda fs: _read_files(spark, root, version, fs),
+        files, keep, F.col(col).between(lo, hi),
+    )
 
 
 # generation expressions a derived-range read recognizes as MONOTONE
@@ -3073,12 +3104,7 @@ def txn_read_pruned_derived(
     from pyspark.sql import functions as F
 
     _require_range(lo, hi)
-    latest = txn_latest_version(root)
-    if latest is None:
-        raise FileNotFoundError(f"no committed versions under {root}")
-    if version is None:
-        version = latest
-    _check_horizon(root, version)
+    version = _resolve_version(root, version)
     state = _replay(root, version)
     table_json = _table_schema_json(root, version)
     mapping = _cm_mapping(table_json)
@@ -3124,16 +3150,10 @@ def txn_read_pruned_derived(
         state.files, state.stats,
         {_cm_phys(mapping, g): (min(gvals), max(gvals))},
     )
-    if not keep:
-        df = _read_files(spark, root, version, state.files).filter(
-            F.lit(False)
-        )
-    else:
-        df = _read_files(spark, root, version, keep)
-    df = df.filter(
-        (F.col(src_col) >= F.lit(tlo)) & (F.col(src_col) <= F.lit(thi))
+    return _pruned_read(
+        lambda fs: _read_files(spark, root, version, fs),
+        state.files, keep, F.col(src_col).between(tlo, thi),
     )
-    return df, len(keep), len(state.files)
 
 
 def txn_read_partitioned(
@@ -3152,12 +3172,7 @@ def txn_read_partitioned(
     singleton stats). Returns (df, files_read, files_total)."""
     from pyspark.sql import functions as F
 
-    latest = txn_latest_version(root)
-    if latest is None:
-        raise FileNotFoundError(f"no committed versions under {root}")
-    if version is None:
-        version = latest
-    _check_horizon(root, version)
+    version = _resolve_version(root, version)
     state = _replay(root, version)
     import json
 
@@ -3191,15 +3206,15 @@ def txn_read_partitioned(
             for c, v in pfilters.items()
         )
     ]
-    if not keep:
-        df = _read_files(spark, root, version, state.files).filter(
-            F.lit(False)
+    residual = F.lit(True)  # defensive: prunes to a no-op
+    for c, v in filters.items():
+        residual = residual & (
+            F.col(c).isNull() if v is None else F.col(c) == F.lit(v)
         )
-        return df, 0, len(state.files)
-    df = _read_files(spark, root, version, keep)
-    for c, v in filters.items():  # residual: defensive, prunes to no-op
-        df = df.filter(F.col(c).isNull() if v is None else F.col(c) == F.lit(v))
-    return df, len(keep), len(state.files)
+    return _pruned_read(
+        lambda fs: _read_files(spark, root, version, fs),
+        state.files, keep, residual,
+    )
 
 
 def txn_changes(
@@ -3230,9 +3245,7 @@ def txn_changes(
 
     from pyspark.sql import functions as F
 
-    latest = txn_latest_version(root)
-    if latest is None:
-        raise FileNotFoundError(f"no committed versions under {root}")
+    latest = _latest(root)
     if v_to is None:
         v_to = latest
     if not 0 <= v_from <= v_to <= latest:
@@ -3361,7 +3374,7 @@ def txn_read_incremental(
     return txn_changes(spark, root, v_from, latest), latest
 
 
-def txn_restore(root: str, version: int, max_retries: int = 20) -> int:
+def txn_restore(root: str, version: int) -> int:
     """RESTORE TABLE to a historical version: commits the old file
     list (and its schema) as a NEW overwrite — history is append-only,
     nothing is deleted, and the restore itself is time-travelable.
@@ -3372,12 +3385,8 @@ def txn_restore(root: str, version: int, max_retries: int = 20) -> int:
     restore to the post-compaction version. Raises on an invalid
     version; optimistic-commit rules apply (an overwrite that loses
     its race raises, like any overwrite)."""
-    latest = txn_latest_version(root)
-    if latest is None:
-        raise FileNotFoundError(f"no committed versions under {root}")
-    if not 0 <= version <= latest:
-        raise ValueError(f"version {version} not in [0, {latest}]")
-    _check_horizon(root, version)
+    latest = _latest(root)
+    version = _resolve_version(root, version)
     files = _txn_state(root, version)
     # an overwrite drops DV lineage; fold the restored version's DVs in
     # by keeping them as a dv commit right after would — simpler and
@@ -3450,7 +3459,7 @@ def txn_restore(root: str, version: int, max_retries: int = 20) -> int:
         return tj_old
 
     return _txn_commit(
-        root, "overwrite", list(files), [], latest, None, max_retries,
+        root, "overwrite", list(files), [], latest, None,
         old.stats or None, schema_fn,
         parts=old.parts if old.spec else None, spec=old.spec,
         extra_commit=extra,
@@ -3469,11 +3478,7 @@ def txn_clone(src_root: str, dst_root: str) -> int:
     CAVEAT (same as Delta shallow clones): vacuuming the SOURCE can
     delete files the clone references — clones are for short-lived
     branches, deep-copy (txn_write of a txn_read) for archival."""
-    import json
-
-    latest = txn_latest_version(src_root)
-    if latest is None:
-        raise FileNotFoundError(f"no committed versions under {src_root}")
+    latest = _latest(src_root)
     if txn_latest_version(dst_root) is not None:
         raise FileExistsError(f"{dst_root} already has a transaction log")
     state = _replay(src_root, latest)
@@ -3498,62 +3503,23 @@ def txn_clone(src_root: str, dst_root: str) -> int:
         commit["row_tracking"] = True
         commit["row_bases"] = dict(state.row_bases)
         commit["row_hwm"] = state.row_hwm
-    schema = schema0
-    if schema is not None:
-        commit["schema"] = schema
-    path = os.path.join(_log_dir(dst_root), f"{0:020d}.json")
-    fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    with os.fdopen(fd, "w") as fh:
-        json.dump(commit, fh)
-        fh.flush()
-        os.fsync(fh.fileno())
-    v = 0
-    for sidecars, targets in state.dvs:  # carry active DVs as commits
-        commit = {
-            "version": v + 1,
+    commits = [commit] + [  # carry active DVs as commits
+        {
+            "version": v,
             "op": "dv",
             "files": list(sidecars),
             "dv_for": list(targets),
-            "read_version": v,
+            "read_version": v - 1,
             "protocol": _commit_protocol(schema0),
         }
-        if schema is not None:
-            commit["schema"] = schema
-        path = os.path.join(_log_dir(dst_root), f"{v + 1:020d}.json")
-        fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-        with os.fdopen(fd, "w") as fh:
-            json.dump(commit, fh)
-            fh.flush()
-            os.fsync(fh.fileno())
-        v += 1
-    return v
-
-
-def _horizon_path(root: str) -> str:
-    return os.path.join(_log_dir(root), "_vacuum_horizon.json")
-
-
-def _vacuum_horizon(root: str) -> int:
-    """The retention horizon: versions BELOW it were vacuumed away and
-    must refuse loudly instead of erroring on missing files. 0 = full
-    history intact."""
-    import json
-
-    p = _horizon_path(root)
-    if not os.path.exists(p):
-        return 0
-    with open(p) as fh:
-        return json.load(fh)["version"]
-
-
-def _check_horizon(root: str, version: int) -> None:
-    h = _vacuum_horizon(root)
-    if version < h:
-        raise ValueError(
-            f"version {version} is below the vacuum horizon {h}: its "
-            "data files were reclaimed by txn_vacuum_retain and time "
-            "travel there is gone (the log itself is kept for lineage)"
-        )
+        for v, (sidecars, targets) in enumerate(state.dvs, start=1)
+    ]
+    for v, c in enumerate(commits):
+        if schema0 is not None:
+            c["schema"] = schema0
+        if not _publish(dst_root, v, c):
+            raise FileExistsError(f"{dst_root} already has version {v}")
+    return len(commits) - 1
 
 
 def txn_vacuum_retain(root: str, keep_from: int) -> list[str]:
@@ -3580,9 +3546,7 @@ def txn_vacuum_retain(root: str, keep_from: int) -> list[str]:
     import json
     import uuid
 
-    latest = txn_latest_version(root)
-    if latest is None:
-        raise FileNotFoundError(f"no committed versions under {root}")
+    latest = _latest(root)
     if not 0 <= keep_from <= latest:
         raise ValueError(f"keep_from {keep_from} not in [0, {latest}]")
     keep_from = max(keep_from, _vacuum_horizon(root))
@@ -3720,12 +3684,11 @@ def txn_multi_write(
     writes: dict,
     stats_cols: "dict[str, list[str]] | None" = None,
     txn: "tuple[str, int] | None" = None,
-    max_retries: int = 20,
 ) -> "int | None":
     """Commit several tables ATOMICALLY as one catalog version.
     ``writes`` maps table name -> DataFrame (append) or
     (DataFrame, "append"|"overwrite"). All data files for every table
-    are written BEFORE the single O_EXCL log-entry create, so a crash
+    are written BEFORE the single _publish of the log entry, so a crash
     anywhere leaves only invisible garbage — no reader can ever see
     table A's half of the publish without table B's. ``stats_cols``
     (per table) embeds add-file min/max for txn_table_read_pruned.
@@ -3734,8 +3697,6 @@ def txn_multi_write(
     from a table's schema, :class:`ConcurrentWriteConflict` when a
     lost race cannot be rebased (an overwrite of a table a gap commit
     also touched, in either direction)."""
-    import json
-
     norm: dict[str, tuple] = {}
     for name, w in writes.items():
         df, mode = w if isinstance(w, tuple) else (w, "append")
@@ -3774,7 +3735,7 @@ def txn_multi_write(
         actions[name] = act
 
     attempt_v = (read_v if read_v is not None else -1) + 1
-    for _ in range(max_retries):
+    for _ in range(COMMIT_RETRIES):
         commit = {
             "version": attempt_v,
             "op": "multi",
@@ -3784,43 +3745,31 @@ def txn_multi_write(
         }
         if txn is not None:
             commit["txn_app"], commit["txn_run"] = txn[0], txn[1]
-        path = os.path.join(_log_dir(cat_root), f"{attempt_v:020d}.json")
-        try:
-            fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-        except FileExistsError:
-            new_latest = txn_latest_version(cat_root)
-            assert new_latest is not None and new_latest >= attempt_v
-            new_state, new_txns = _cat_replay(cat_root, new_latest)
-            if txn is not None and tuple(txn) in new_txns:
-                return None
-            for v in range(attempt_v, new_latest + 1):
-                won = _read_commit(cat_root, v)
-                shared = set(won["tables"]) & set(actions)
-                for name in sorted(shared):
-                    if (
-                        won["tables"][name]["op"] == "overwrite"
-                        or actions[name]["op"] == "overwrite"
-                    ):
-                        raise ConcurrentWriteConflict(
-                            f"multi-table commit conflicts at v{v}: "
-                            f"table {name!r} overwritten concurrently"
-                        )
-            # all shared tables are append-vs-append: rebase. Re-run
-            # the schema checks against the tip (a gap commit may have
-            # evolved a table via overwrite of a NON-shared... no:
-            # overwrite of a shared table raised above; a non-shared
-            # table cannot affect our schemas, but re-check is cheap
-            # and exact either way)
-            for name, sj in check_schemas(new_state).items():
-                actions[name]["schema"] = sj
-            attempt_v = new_latest + 1
-            continue
-        with os.fdopen(fd, "w") as fh:
-            json.dump(commit, fh)
-            fh.flush()
-            os.fsync(fh.fileno())
-        return attempt_v
-    raise ConcurrentWriteConflict(f"gave up after {max_retries} retries")
+        if _publish(cat_root, attempt_v, commit):
+            return attempt_v
+        new_latest = txn_latest_version(cat_root)
+        assert new_latest is not None and new_latest >= attempt_v
+        new_state, new_txns = _cat_replay(cat_root, new_latest)
+        if txn is not None and tuple(txn) in new_txns:
+            return None
+        for v in range(attempt_v, new_latest + 1):
+            won = _read_commit(cat_root, v)
+            shared = set(won["tables"]) & set(actions)
+            for name in sorted(shared):
+                if (
+                    won["tables"][name]["op"] == "overwrite"
+                    or actions[name]["op"] == "overwrite"
+                ):
+                    raise ConcurrentWriteConflict(
+                        f"multi-table commit conflicts at v{v}: "
+                        f"table {name!r} overwritten concurrently"
+                    )
+        # every shared table is append-vs-append: rebase, re-checking
+        # the schemas against the tip (cheap, and exact either way)
+        for name, sj in check_schemas(new_state).items():
+            actions[name]["schema"] = sj
+        attempt_v = new_latest + 1
+    raise ConcurrentWriteConflict(f"gave up after {COMMIT_RETRIES} retries")
 
 
 def txn_multi_sink(cat_root: str, app: str, splitter):
@@ -3844,11 +3793,7 @@ def txn_multi_sink(cat_root: str, app: str, splitter):
 def txn_catalog_tables(cat_root: str, version: "int | None" = None) -> list:
     """Table names present in the catalog at ``version`` (default
     latest), sorted."""
-    latest = txn_latest_version(cat_root)
-    if latest is None:
-        raise FileNotFoundError(f"no committed versions under {cat_root}")
-    if version is None:
-        version = latest
+    version = _resolve_version(cat_root, version)
     state, _ = _cat_replay(cat_root, version)
     return sorted(n for n, t in state.items() if t["files"])
 
@@ -3861,13 +3806,7 @@ def txn_table_read(
 ) -> DataFrame:
     """Read one table of the catalog at a (cross-table consistent)
     catalog version — default latest, or any pinned historical one."""
-    latest = txn_latest_version(cat_root)
-    if latest is None:
-        raise FileNotFoundError(f"no committed versions under {cat_root}")
-    if version is None:
-        version = latest
-    if not 0 <= version <= latest:
-        raise ValueError(f"version {version} not in [0, {latest}]")
+    version = _resolve_version(cat_root, version)
     state, _ = _cat_replay(cat_root, version)
     t = state.get(table)
     if t is None or not t["files"]:
@@ -3891,22 +3830,16 @@ def txn_table_read_pruned(
     from pyspark.sql import functions as F
 
     _require_range(lo, hi)
-    latest = txn_latest_version(cat_root)
-    if latest is None:
-        raise FileNotFoundError(f"no committed versions under {cat_root}")
-    if version is None:
-        version = latest
+    version = _resolve_version(cat_root, version)
     state, _ = _cat_replay(cat_root, version)
     t = state.get(table)
     if t is None or not t["files"]:
         raise ValueError(f"table {table!r} is empty at version {version}")
     keep = _files_in_range(t["files"], t["stats"], {col: (lo, hi)})
-    if not keep:
-        df = spark.read.parquet(*t["files"]).filter(F.lit(False))
-    else:
-        df = spark.read.parquet(*keep)
-    df = df.filter((F.col(col) >= F.lit(lo)) & (F.col(col) <= F.lit(hi)))
-    return df, len(keep), len(t["files"])
+    return _pruned_read(
+        lambda fs: spark.read.parquet(*fs),
+        t["files"], keep, F.col(col).between(lo, hi),
+    )
 
 
 def txn_multi_history(cat_root: str) -> list:

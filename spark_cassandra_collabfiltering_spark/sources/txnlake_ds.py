@@ -258,11 +258,7 @@ class TxnLakeReader(DataSourceReader):
     adds plan-time file pruning."""
 
     def __init__(self, root: str, version: "int | None"):
-        latest = lake.txn_latest_version(root)
-        if latest is None:
-            raise FileNotFoundError(f"no committed versions under {root}")
-        self._version = latest if version is None else version
-        lake._check_horizon(root, self._version)
+        self._version = lake._resolve_version(root, version)
         self._state = lake._replay(root, self._version)
         tj = lake._table_schema_json(root, self._version)
         # column mapping is handled natively: the schema's cm_phys
@@ -318,12 +314,7 @@ class TxnCatalogReader(DataSourceReader):
     plain fast path."""
 
     def __init__(self, cat_root: str, table: str, version: "int | None"):
-        latest = lake.txn_latest_version(cat_root)
-        if latest is None:
-            raise FileNotFoundError(
-                f"no committed versions under {cat_root}"
-            )
-        v = latest if version is None else version
+        v = lake._resolve_version(cat_root, version)
         state, _ = lake._cat_replay(cat_root, v)
         t = state.get(table)
         if t is None or not t["files"]:
@@ -663,7 +654,6 @@ class TxnLakeWriter(DataSourceArrowWriter):
             [],
             lake.txn_latest_version(self._root),
             None,
-            20,
             stats or None,
             schema_fn,
             spec=[],
@@ -750,7 +740,6 @@ class TxnLakeStreamWriter(DataSourceStreamArrowWriter):
             [],
             lake.txn_latest_version(self._root),
             (self._app, int(batchId)),
-            20,
             None,
             schema_fn,
             spec=[],
@@ -777,10 +766,7 @@ class TxnLakeDataSource(DataSource):
 
     def schema(self):
         root = self._root()
-        latest = lake.txn_latest_version(root)
-        if latest is None:
-            raise FileNotFoundError(f"no committed versions under {root}")
-        v = int(self.options.get("version", latest))
+        v = lake._resolve_version(root, self._version())
         table = self.options.get("table")
         if table is not None:  # multi-table catalog member
             state, _ = lake._cat_replay(root, v)
@@ -803,9 +789,12 @@ class TxnLakeDataSource(DataSource):
     # is the pushdown-free pair; register_txnlake() picks the class
     _readers = (TxnLakeReader, TxnCatalogReader)
 
-    def reader(self, schema):
+    def _version(self) -> "int | None":
         v = self.options.get("version")
-        v = None if v is None else int(v)
+        return None if v is None else int(v)
+
+    def reader(self, schema):
+        v = self._version()
         table = self.options.get("table")
         lake_reader, cat_reader = self._readers
         if table is not None:
