@@ -483,33 +483,6 @@ def _export_file(txn_file: str, delta_root: str, spec: list,
     return quote(rel, safe="/=%")
 
 
-def _txn_dv_positions(state) -> dict:
-    """{raw txn file path: sorted deleted row positions} from the
-    state's active RLE sidecars — driver-side pyarrow reads of
-    metadata-sized files (positions, never rows). Runs expand here;
-    the Delta side re-compresses them as roaring containers."""
-    import pyarrow.parquet as pq
-
-    uri_of = {lake._uri_path(f): f for f in state.files}
-    out: dict = {}
-    for sidecars, targets in state.dvs:
-        tset = set(targets)
-        for sc in sidecars:
-            for r in pq.read_table(sc).to_pylist():
-                f = uri_of.get(r["file"], r["file"])
-                if f not in tset:
-                    continue
-                s = out.setdefault(f, set())
-                if r.get("pos") is not None:
-                    s.add(int(r["pos"]))
-                elif r.get("start") is not None:
-                    s.update(
-                        range(int(r["start"]),
-                              int(r["start"]) + int(r["n"]))
-                    )
-    return {f: sorted(s) for f, s in out.items()}
-
-
 def _export_guards(txn_root: str, latest: int, history: bool) -> None:
     """Refusal that keeps the export FAITHFUL rather than best-effort:
     live files spanning physical types after a type widening — Delta
@@ -635,7 +608,7 @@ def delta_export(
             prev_files = list(cursor.files)  # state at v-1, for free
             cursor.advance_to(v)
             st = cursor.state()
-        dvpos = _txn_dv_positions(st) if st.dvs else {}
+        dvpos = lake._dv_positions(st.dvs)
         if snapshot:
             # synthesize one overwrite-like commit of the live state
             c = {

@@ -30,31 +30,35 @@ avro_source.py), with no Iceberg jar or library:
   entries' ``record_count`` minus position-delete counts (refuses
   under equality deletes — predicate counts are not row counts).
 - :func:`iceberg_export` — the fixture generator / migration path OUT
-  of the native txn lake: writes the metadata json, the manifest list
-  and manifests through the repo's own Avro ENCODER — spec-faithful:
-  field-id annotations on every manifest field, the required
-  ``partition`` struct (field-id 102), data and delete files in
-  SEPARATE manifests, the required container metadata keys
-  (schema / partition-spec / format-version / content), and
-  TABLE-RELATIVE paths so the export survives a directory move.
-  Data files are copied (hive-partitioned tables re-materialized with
-  their partition column restored, since Iceberg files must contain
-  every column) and active RLE deletion vectors convert to v2
-  position-delete parquet files.
-- :func:`iceberg_export_incremental` (r9) — CONTINUOUS export: one
-  appended Iceberg snapshot per new txn commit, exactly-once on the
-  snapshot summary's ``txnlake-export-version`` stamp; carried files
-  enter fresh manifests as EXISTING entries keeping their original
-  sequence numbers, so the exported history time-travels. Refuses to
-  adopt unstamped tables and to append across a schema change.
+  of the native txn lake, at format-version 2 or 3: the table's first
+  snapshot. :func:`iceberg_export_incremental` (r9) — CONTINUOUS
+  export: one appended snapshot per new txn commit, exactly-once on
+  the snapshot summary's ``txnlake-export-version`` stamp; carried
+  files enter fresh manifests as EXISTING entries keeping their
+  original sequence numbers, so the exported history time-travels.
+  Refuses to adopt unstamped tables and to append across a schema or
+  partition-spec change. Both write every snapshot through ONE
+  writer, :func:`_write_snapshot`, and every table-metadata version
+  through ONE publisher, :func:`_publish_metadata`. The writer is
+  spec-faithful: manifests and the manifest list go through the
+  repo's own Avro ENCODER with field-id annotations on every manifest
+  field, the required ``partition`` struct (field-id 102), data and
+  delete files in SEPARATE manifests, the required container metadata
+  keys (schema / partition-spec / format-version / content), and
+  TABLE-RELATIVE paths so the export survives a directory move. Data
+  files are copied (hive-partitioned tables re-materialized with their
+  partition column restored, since Iceberg files must contain every
+  column); the lake's active deletion vectors, decoded by
+  ``lake._dv_positions``, become v2 position-delete parquet files or
+  v3 deletion-vector Puffin blobs.
 
 Format-version 3 (r10): deletion vectors — ``deletion-vector-v1``
 Puffin blobs (sources/puffin.py, sharing delta_dv's roaring codec) —
 both read (driver-side metadata-sized decode into the same anti-join
-shape) and written (``iceberg_export(..., format_version=3)`` emits
-one Puffin file per snapshot with per-file blobs, manifest entries
-carrying referenced_data_file/content_offset/content_size_in_bytes,
-spec field ids 143-145), row-lineage bookkeeping (first-row-id /
+shape) and written (a format-version 3 export emits one Puffin file
+per snapshot with per-file blobs, manifest entries carrying
+referenced_data_file/content_offset/content_size_in_bytes, spec
+field ids 143-145), row-lineage bookkeeping (first-row-id /
 next-row-id), and ``initial-default`` column values (absent columns
 surface the declared default instead of NULL; non-primitive defaults
 refuse). v3 tables carrying position-delete FILES refuse per the spec.
@@ -948,20 +952,30 @@ def iceberg_remove_orphans(root: str, dry_run: bool = False) -> list:
 
 
 def _publish_metadata(root: str, meta: dict) -> None:
-    """Write the next vN.metadata.json + version hint (the
-    HadoopCatalog commit shape this exporter uses throughout)."""
-    cur = _latest_metadata_path(root)
-    stem = os.path.basename(cur).split(".")[0]
-    v = int(stem.lstrip("v")) if stem.lstrip("v").isdigit() else 0
-    nxt = v + 1
+    """The one table-metadata write: publish ``meta`` as the next
+    ``vN.metadata.json`` and point ``version-hint.text`` at it (the
+    HadoopCatalog commit shape). A table with no metadata yet gets
+    v1; otherwise the current file joins ``metadata-log`` first, as
+    the spec asks of every new metadata file."""
+    try:
+        cur = os.path.basename(_latest_metadata_path(root))
+    except FileNotFoundError:
+        cur = None
+    v = 0
+    if cur is not None:
+        meta.setdefault("metadata-log", []).append(
+            {"timestamp-ms": 0, "metadata-file": f"metadata/{cur}"}
+        )
+        stem = cur.split(".")[0].lstrip("v")
+        v = int(stem) if stem.isdigit() else 0
     with open(
-        os.path.join(_meta_dir(root), f"v{nxt}.metadata.json"), "w"
+        os.path.join(_meta_dir(root), f"v{v + 1}.metadata.json"), "w"
     ) as fh:
         json.dump(meta, fh, sort_keys=True)
     with open(
         os.path.join(_meta_dir(root), "version-hint.text"), "w"
     ) as fh:
-        fh.write(str(nxt))
+        fh.write(str(v + 1))
 
 
 # ---------------------------------------------------------------------------
@@ -1216,6 +1230,43 @@ def _write_v3_dvs(
     return out
 
 
+def _write_v2_deletes(
+    ice_root: str, dvs: list, snap_id: int, seq: int, spec_cols: list
+) -> list:
+    """Write one v2 position-delete parquet file per (referenced data
+    file, deleted positions) pair of ``dvs`` and return their manifest
+    delete entries (global deletes: unbound partition tuple)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    out = []
+    for j, (ref, positions) in enumerate(dvs):
+        rel = f"data/s{snap_id}-{j:05d}-deletes.parquet"
+        dst = os.path.join(ice_root, rel)
+        pq.write_table(
+            pa.table({
+                "file_path": pa.array(
+                    [ref] * len(positions), type=pa.string()
+                ),
+                "pos": pa.array(positions, type=pa.int64()),
+            }),
+            dst,
+        )
+        out.append({
+            "status": _ST_ADDED, "snapshot_id": snap_id,
+            "sequence_number": seq, "file_sequence_number": seq,
+            "data_file": {
+                "content": _C_POS_DELETES, "file_path": rel,
+                "file_format": "PARQUET",
+                "partition": {c: None for c in spec_cols},
+                "record_count": len(positions),
+                "file_size_in_bytes": os.path.getsize(dst),
+                "equality_ids": None,
+            },
+        })
+    return out
+
+
 def _norm_v3_entries(entries: list, v3: bool) -> list:
     """v3 manifests carry the DV reference fields on EVERY data_file
     record (null for plain data files) — the Avro record encoder
@@ -1229,416 +1280,59 @@ def _norm_v3_entries(entries: list, v3: bool) -> list:
     return entries
 
 
-def iceberg_export(
-    txn_root: str, ice_root: str, format_version: int = 2
-) -> int:
-    """Export the native txn lake's CURRENT state as an Iceberg v2
-    table (one snapshot): data files copied (hive-partitioned tables
-    re-materialized with the partition column restored — Iceberg data
-    files must contain every column), active RLE deletion vectors
-    converted to v2 position-delete parquet files, manifests and the
-    manifest list written through the repo's own Avro encoder, and
-    v1.metadata.json + version-hint.text published. Returns the
-    snapshot id. Unconverged type widening refuses (compact first);
-    column-mapped tables export under their LOGICAL names (a rename
-    history collapses to the current vocabulary — the files are
-    rewritten only when hive-partitioned, else the physical names are
-    restored via a pyarrow rename pass only when mapping is on)."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
+def _write_snapshot(
+    ice_root: str, meta: dict, st, version: int, tj: str, by_src: dict
+) -> dict:
+    """Write ONE Iceberg snapshot of the txn state ``st`` (txn version
+    ``version``, table schema json ``tj``) on top of the table metadata
+    ``meta`` and publish it; the full export is this on an empty
+    ``meta``, the incremental drain this once per txn commit.
 
-    if format_version not in (2, 3):
-        raise ValueError(
-            f"format_version must be 2 or 3, got {format_version}"
-        )
-    latest = lake._latest(txn_root)
-    st = lake._replay(txn_root, latest)
-    tj = lake._table_schema_json(txn_root, latest)
-    if tj is None:
-        raise ValueError("table has no recorded schema")
-    schema = T.StructType.fromJson(json.loads(tj))
-    mapping = lake._cm_mapping(tj) or {}
-    if os.path.isdir(_meta_dir(ice_root)) and os.listdir(_meta_dir(ice_root)):
-        raise FileExistsError(f"{ice_root} already has Iceberg metadata")
-    # unconverged widening: same guard as the Delta exporter
-    from .delta_interop import _export_guards
-
-    _export_guards(txn_root, latest, history=False)
-
-    os.makedirs(_meta_dir(ice_root), exist_ok=True)
-    data_dir = os.path.join(ice_root, "data")
-    os.makedirs(data_dir, exist_ok=True)
-
-    # identity partition spec (r9): the manifest entries carry each
-    # file's TYPED partition tuple and the metadata records the spec,
-    # so a foreign reader can partition-prune from the manifests alone
-    # (the data files still contain every column per the spec)
-    spec_cols = list(getattr(st, "spec", None) or [])
-    pfields, spec_json = _partition_export_shape(schema, spec_cols)
-
-    # --- copy / re-materialize data files under logical names.
-    # Paths are TABLE-RELATIVE (ADVICE r8: absolute local paths break
-    # the export when the directory moves; the reader's _resolve_path
-    # handles both forms) and EMBED md5(source path)[:10] so the
-    # incremental exporter can diff later txn versions against what is
-    # already exported without any side-channel mapping (r9 ADVICE:
-    # keyed by full path, not basename — basenames repeat across
-    # commits).
-    entries = []
-    path_map = {}  # txn file -> iceberg relative path
-    frid = 0  # v3 row lineage: assigned EXPLICITLY per data file
-    for i, f in enumerate(sorted(st.files)):
-        rel = _export_rel(1, i, f)
-        nrows, size = _materialize_data_file(
-            f, schema, mapping, st.parts.get(f) or {}, ice_root, rel
-        )
-        path_map[f] = rel
-        e = {
-            "status": _ST_ADDED, "snapshot_id": 1,
-            "sequence_number": 1, "file_sequence_number": 1,
-            "data_file": {
-                "content": _C_DATA, "file_path": rel,
-                "file_format": "PARQUET",
-                "partition": _entry_partition(
-                    st, f, schema, mapping, spec_cols
-                ),
-                "record_count": nrows,
-                "file_size_in_bytes": size,
-                "equality_ids": None,
-            },
-        }
-        if format_version >= 3:
-            e["data_file"]["first_row_id"] = frid
-            frid += nrows
-        entries.append(e)
-
-    # --- active deletion vectors -> v2 position-delete files, or (v3)
-    # deletion-vector-v1 Puffin blobs
-    from .delta_interop import _txn_dv_positions
-
-    dvpos = _txn_dv_positions(st) if st.dvs else {}
-    delete_entries = []
-    if dvpos and format_version >= 3:
-        delete_entries = _write_v3_dvs(
-            ice_root, "data/s1-dvs.puffin",
-            {path_map[f]: positions for f, positions in dvpos.items()},
-            1, 1, spec_cols,
-        )
-    elif dvpos:
-        for j, (f, positions) in enumerate(sorted(dvpos.items())):
-            rel = f"data/s1-{j:05d}-deletes.parquet"
-            dst = os.path.join(ice_root, rel)
-            pq.write_table(
-                pa.table({
-                    "file_path": pa.array(
-                        [path_map[f]] * len(positions), type=pa.string()
-                    ),
-                    "pos": pa.array(sorted(positions), type=pa.int64()),
-                }),
-                dst,
-            )
-            delete_entries.append({
-                "status": _ST_ADDED, "snapshot_id": 1,
-                "sequence_number": 1, "file_sequence_number": 1,
-                "data_file": {
-                    "content": _C_POS_DELETES, "file_path": rel,
-                    "file_format": "PARQUET",
-                    # global delete files: unbound partition tuple
-                    "partition": {c: None for c in spec_cols},
-                    "record_count": len(positions),
-                    "file_size_in_bytes": os.path.getsize(dst),
-                    "equality_ids": None,
-                },
-            })
-
-    # --- manifests + manifest list (the repo's own Avro encoder).
-    # Spec fidelity (ADVICE r8): data and delete files live in
-    # SEPARATE manifests (manifest_file.content 0 vs 1), and every
-    # manifest container carries the required key-value metadata —
-    # real readers refuse manifests without schema/partition-spec/
-    # format-version/content.
-    schema_json_str = _ice_schema_json_str(schema)
-    ice_fields = json.loads(schema_json_str)["fields"]
-
-    def _manifest_meta(content: str) -> dict:
-        return {
-            "schema": schema_json_str,
-            "schema-id": "0",
-            "partition-spec": json.dumps(spec_json),
-            "partition-spec-id": "0",
-            "format-version": str(format_version),
-            "content": content,
-        }
-
-    v3 = format_version >= 3
-    entry_schema = _manifest_entry_schema(pfields or None, v3=v3)
-    manifests = []  # (relative path, manifest_file row)
-    mf_rel = "metadata/manifest-00000-data.avro"
-    mf_abs = os.path.join(ice_root, mf_rel)
-    av.write_avro(
-        _norm_v3_entries(entries, v3), entry_schema, mf_abs,
-        extra_meta=_manifest_meta("data"),
-    )
-    n_rows = sum(e["data_file"]["record_count"] for e in entries)
-    manifests.append({
-        "manifest_path": mf_rel,
-        "manifest_length": os.path.getsize(mf_abs),
-        "partition_spec_id": 0,
-        "content": 0,
-        "sequence_number": 1,
-        "min_sequence_number": 1,
-        "added_snapshot_id": 1,
-        "added_files_count": len(entries),
-        "existing_files_count": 0,
-        "deleted_files_count": 0,
-        "added_rows_count": n_rows,
-        "existing_rows_count": 0,
-        "deleted_rows_count": 0,
-    })
-    if delete_entries:
-        dm_rel = "metadata/manifest-00001-deletes.avro"
-        dm_abs = os.path.join(ice_root, dm_rel)
-        av.write_avro(
-            _norm_v3_entries(delete_entries, v3), entry_schema, dm_abs,
-            extra_meta=_manifest_meta("deletes"),
-        )
-        n_del = sum(
-            e["data_file"]["record_count"] for e in delete_entries
-        )
-        manifests.append({
-            "manifest_path": dm_rel,
-            "manifest_length": os.path.getsize(dm_abs),
-            "partition_spec_id": 0,
-            "content": 1,
-            "sequence_number": 1,
-            "min_sequence_number": 1,
-            "added_snapshot_id": 1,
-            "added_files_count": len(delete_entries),
-            "existing_files_count": 0,
-            "deleted_files_count": 0,
-            "added_rows_count": n_del,
-            "existing_rows_count": 0,
-            "deleted_rows_count": 0,
-        })
-    mlist_rel = "metadata/snap-1-manifest-list.avro"
-    mlist_path = os.path.join(ice_root, mlist_rel)
-    av.write_avro(
-        manifests, _MANIFEST_LIST_SCHEMA, mlist_path,
-        extra_meta={"format-version": str(format_version)},
-    )
-
-    # --- table metadata json + version hint
-    meta = {
-        "format-version": format_version,
-        "table-uuid": "00000000-0000-0000-0000-000000000001",
-        "location": ice_root,
-        "last-sequence-number": 1,
-        "last-updated-ms": 0,
-        "last-column-id": len(ice_fields),
-        "schemas": [
-            {"schema-id": 0, "type": "struct", "fields": ice_fields}
-        ],
-        "current-schema-id": 0,
-        "partition-specs": [{"spec-id": 0, "fields": spec_json}],
-        "default-spec-id": 0,
-        "last-partition-id": 999 + len(spec_cols),
-        "sort-orders": [{"order-id": 0, "fields": []}],
-        "default-sort-order-id": 0,
-        "current-snapshot-id": 1,
-        "snapshots": [
-            {
-                "snapshot-id": 1,
-                "sequence-number": 1,
-                "timestamp-ms": 0,
-                "manifest-list": mlist_rel,
-                "schema-id": 0,
-                # the exported txn version rides in the summary (a
-                # string map per spec — same role as Delta's txn
-                # action): the incremental exporter reads its
-                # high-water mark back from the table it wrote
-                "summary": {
-                    "operation": "append",
-                    "txnlake-export-version": str(latest),
-                },
-            }
-        ],
-        "snapshot-log": [{"snapshot-id": 1, "timestamp-ms": 0}],
-        "metadata-log": [],
-    }
-    if format_version >= 3:
-        # v3 row lineage: ids are assigned first-row-id + position;
-        # one snapshot of n_rows rows claims [0, n_rows)
-        meta["snapshots"][0]["first-row-id"] = 0
-        meta["next-row-id"] = n_rows
-    with open(os.path.join(_meta_dir(ice_root), "v1.metadata.json"),
-              "w") as fh:
-        json.dump(meta, fh, sort_keys=True)
-    with open(os.path.join(_meta_dir(ice_root), "version-hint.text"),
-              "w") as fh:
-        fh.write("1")
-    return 1
-
-
-def iceberg_export_incremental(
-    txn_root: str, ice_root: str, format_version: int = 2
-) -> int:
-    """CONTINUOUS export to a foreign Iceberg consumer, exactly once
-    (r9 — the Iceberg mirror of delta_export_incremental): the first
-    call full-exports the current state; every later call appends ONE
-    Iceberg snapshot per new txn commit. The high-water mark rides in
-    each snapshot's ``summary`` map (``txnlake-export-version`` — a
-    string map per spec, the same role Delta's ``txn`` action plays),
-    so a crashed or repeated drain reads its position back from the
-    table it wrote and lands nothing twice. Exported data files embed
-    their source file's basename, so the diff against already-exported
-    state is pure name arithmetic — no side-channel mapping to lose.
-
-    Per appended snapshot: new txn data files re-materialize under the
-    logical schema (field-ids stamped); carried files enter the fresh
-    data manifest as EXISTING entries keeping their original
-    snapshot/sequence numbers (the spec's explicit-sequence rule for
-    non-inherited entries); the cumulative DV state lands as ADDED
-    position-delete files at the snapshot's own sequence number (a
-    delete applies to data with data-seq <= delete-seq, and the
-    current sequence dominates every carried file). Removed txn files
-    simply leave the new manifest — their exported parquet stays put,
-    still referenced by OLDER snapshots, which is what keeps Iceberg
-    time travel working across the export history.
-
-    Refusals (never misexport): a foreign table without the summary
-    stamp cannot be adopted; a schema change since the last exported
-    version refuses with instructions to start a fresh full export
-    (carried files materialized under an older schema would otherwise
-    silently miss columns); the usual unconverged-widening guard runs
-    per call. Returns the current snapshot id; a no-new-commits call
-    is a no-op returning it unchanged."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from .delta_interop import _export_guards, _txn_dv_positions
-
-    latest = lake._latest(txn_root)
-    d = _meta_dir(ice_root)
-    if not (os.path.isdir(d) and os.listdir(d)):
-        return iceberg_export(
-            txn_root, ice_root, format_version=format_version
-        )
-
-    meta = load_table_metadata(ice_root)
-    # continue in the TABLE's format version (the parameter only
-    # shapes the bootstrapping full export)
-    fv = int(meta.get("format-version", 1))
-    v3 = fv >= 3
-    snap = _pick_snapshot(meta, None)
-    stamp = (snap.get("summary") or {}).get("txnlake-export-version")
-    if stamp is None:
-        raise ValueError(
-            f"{ice_root} is not a txnlake export (no "
-            "txnlake-export-version in the current snapshot summary); "
-            "incremental export cannot adopt a foreign Iceberg table"
-        )
-    done = int(stamp)
-    if done >= latest:
-        return int(snap["snapshot-id"])
-
-    tj_now = lake._table_schema_json(txn_root, latest)
-    tj_done = lake._table_schema_json(txn_root, done)
-    if tj_now != tj_done:
-        raise ValueError(
-            "table schema changed since the last exported version "
-            f"({done}); start a fresh full export — carried files "
-            "were materialized under the old schema"
-        )
-    schema = T.StructType.fromJson(json.loads(tj_now))
-    mapping = lake._cm_mapping(tj_now) or {}
-    _export_guards(txn_root, latest, history=False)
-    schema_json_str = _ice_schema_json_str(schema)
-
-    # the partition spec must be stable across the appended range —
-    # the exported metadata records ONE spec-id 0 (same refusal class
-    # as the schema change above)
-    exported_spec = [
-        f["name"]
-        for f in (meta.get("partition-specs") or [{}])[0].get("fields", [])
-    ]
-    spec_cols = list(
-        getattr(lake._replay(txn_root, latest), "spec", None) or []
-    )
-    if spec_cols != exported_spec:
-        raise ValueError(
-            f"partition spec changed since the last export "
-            f"({exported_spec} -> {spec_cols}); start a fresh full "
-            "export"
-        )
-    pfields, spec_json = _partition_export_shape(schema, spec_cols)
-
-    def _manifest_meta(content: str) -> dict:
-        return {
-            "schema": schema_json_str,
-            "schema-id": "0",
-            "partition-spec": json.dumps(spec_json),
-            "partition-spec-id": "0",
-            "format-version": str(max(fv, 2)),
-            "content": content,
-        }
-
+    ``by_src`` holds the current snapshot's live data entries keyed by
+    source-path digest (see :func:`_export_rel`; empty for a full
+    export). A live txn file found there is carried as an EXISTING
+    entry keeping its snapshot/sequence numbers (the spec's
+    explicit-sequence rule for non-inherited entries); any other
+    re-materializes under the logical schema as an ADDED entry. The
+    active DVs land as ADDED delete files at this snapshot's own
+    sequence number — v2 position-delete parquet files, or (v3) one
+    Puffin file of deletion-vector blobs — since a delete applies to
+    data with data-seq <= delete-seq, and the current sequence
+    dominates every carried file. Removed txn files simply leave the
+    new manifest; their exported parquet stays for older snapshots.
+    Data and delete files live in SEPARATE manifests, each container
+    carrying the schema / partition-spec / format-version / content
+    keys real readers require. The table's first snapshot names its
+    manifests ``manifest-00000-data`` / ``manifest-00001-deletes``,
+    later ones ``manifest-s<id>-data`` / ``-deletes``. Returns the new
+    snapshot's live data entries keyed like ``by_src``."""
     import hashlib
 
-    # live data entries of the CURRENT snapshot, keyed by the SOURCE
-    # PATH digest embedded in the exported name (never the bare
-    # basename — see _export_rel); pre-digest entries key as None and
-    # are dropped, so their files re-materialize instead of mis-carrying
-    by_src: dict = {}
-    for m in _read_avro_rows(_resolve_path(ice_root, snap["manifest-list"])):
-        if int(m.get("content") or 0) != 0:
-            continue
-        for e in _read_avro_rows(
-            _resolve_path(ice_root, m["manifest_path"])
-        ):
-            if int(e.get("status") or 0) == _ST_DELETED:
-                continue
-            dg = _src_digest(e["data_file"]["file_path"])
-            if dg is not None:
-                by_src[dg] = e
+    schema = T.StructType.fromJson(json.loads(tj))
+    mapping = lake._cm_mapping(tj) or {}
+    fv = int(meta["format-version"])
+    v3 = fv >= 3
+    spec_cols = [f["name"] for f in meta["partition-specs"][0]["fields"]]
+    pfields, spec_json = _partition_export_shape(schema, spec_cols)
+    snap_id = int(meta.get("current-snapshot-id") or 0) + 1
+    seq = int(meta.get("last-sequence-number") or 0) + 1
+    # v3 row lineage: fresh files claim ids from the table's
+    # high-water mark; carried entries KEEP their first_row_id
+    first_row_id = frid = int(meta.get("next-row-id") or 0)
 
-    # current metadata version number (the vN in vN.metadata.json)
-    meta_v = int(
-        os.path.basename(_latest_metadata_path(ice_root))
-        .split(".")[0]
-        .lstrip("v")
-    )
-    seq = int(meta.get("last-sequence-number") or 0)
-    snap_id = int(snap["snapshot-id"])
-    entry_schema = _manifest_entry_schema(pfields or None, v3=v3)
-
-    # one cursor for the whole drain: each version advances O(1)
-    # commits instead of replaying the full history (r9 ADVICE — the
-    # same O(V^2) -> O(V) move delta_export made via _ReplayCursor)
-    cursor = lake._ReplayCursor(txn_root, start_version=done)
-    for v in range(done + 1, latest + 1):
-        cursor.advance_to(v)
-        st = cursor.state()
-        seq += 1
-        snap_id += 1
-        prior_live = len(by_src)
-        entries, n_added, n_existing = [], 0, 0
-        # v3 row lineage: fresh files claim ids from the table's
-        # high-water mark; carried entries KEEP their assigned
-        # first_row_id (the stability contract)
-        frid = int(meta.get("next-row-id") or 0)
-        for i, f in enumerate(sorted(st.files)):
-            digest = hashlib.md5(f.encode()).hexdigest()[:10]
-            prior = by_src.get(digest)
-            if prior is not None:
-                entries.append({
-                    "status": _ST_EXISTING,
-                    "snapshot_id": prior["snapshot_id"],
-                    "sequence_number": prior["sequence_number"],
-                    "file_sequence_number": prior["file_sequence_number"],
-                    "data_file": dict(prior["data_file"]),
-                })
-                n_existing += 1
-                continue
+    entries, live, target = [], {}, {}
+    for i, f in enumerate(sorted(st.files)):
+        digest = hashlib.md5(f.encode()).hexdigest()[:10]
+        prior = by_src.get(digest)
+        if prior is not None:
+            e = {
+                "status": _ST_EXISTING,
+                "snapshot_id": prior["snapshot_id"],
+                "sequence_number": prior["sequence_number"],
+                "file_sequence_number": prior["file_sequence_number"],
+                "data_file": dict(prior["data_file"]),
+            }
+        else:
             rel = _export_rel(snap_id, i, f)
             nrows, size = _materialize_data_file(
                 f, schema, mapping, st.parts.get(f) or {}, ice_root, rel
@@ -1660,158 +1354,268 @@ def iceberg_export_incremental(
             if v3:
                 e["data_file"]["first_row_id"] = frid
                 frid += nrows
-            entries.append(e)
-            by_src[digest] = e
-            n_added += 1
-        # files removed at v drop out of by_src too (a later re-add —
-        # restore — must re-materialize, the removed export may have
-        # been vacuumed upstream)
-        live = {
-            hashlib.md5(f.encode()).hexdigest()[:10] for f in st.files
-        }
-        by_src = {b: e for b, e in by_src.items() if b in live}
+        entries.append(e)
+        live[digest] = e
+        target[f] = e["data_file"]["file_path"]
 
-        dvpos = _txn_dv_positions(st) if st.dvs else {}
-        delete_entries = []
-        dv_map = {}  # v3: target rel path -> positions (one puffin)
-        for j, (f, positions) in enumerate(sorted(dvpos.items())):
-            digest = hashlib.md5(f.encode()).hexdigest()[:10]
-            if digest not in by_src:
-                continue  # DV on a file no longer live at v
-            target = by_src[digest]["data_file"]["file_path"]
-            if v3:
-                dv_map[target] = positions
-                continue
-            rel = f"data/s{snap_id}-{j:05d}-deletes.parquet"
-            dst = os.path.join(ice_root, rel)
-            pq.write_table(
-                pa.table({
-                    "file_path": pa.array(
-                        [target] * len(positions), type=pa.string()
-                    ),
-                    "pos": pa.array(sorted(positions), type=pa.int64()),
-                }),
-                dst,
-            )
-            delete_entries.append({
-                "status": _ST_ADDED, "snapshot_id": snap_id,
-                "sequence_number": seq, "file_sequence_number": seq,
-                "data_file": {
-                    "content": _C_POS_DELETES, "file_path": rel,
-                    "file_format": "PARQUET",
-                    "partition": {c: None for c in spec_cols},
-                    "record_count": len(positions),
-                    "file_size_in_bytes": os.path.getsize(dst),
-                    "equality_ids": None,
-                },
-            })
-        if dv_map:
-            delete_entries = _write_v3_dvs(
-                ice_root, f"data/s{snap_id}-dvs.puffin", dv_map,
-                snap_id, seq, spec_cols,
-            )
+    # (exported data-file path, deleted positions), in txn-path order
+    dvpos = lake._dv_positions(st.dvs)
+    dvs = [(target[f], dvpos[f]) for f in sorted(dvpos)]
+    if v3:
+        deletes = _write_v3_dvs(
+            ice_root, f"data/s{snap_id}-dvs.puffin", dict(dvs),
+            snap_id, seq, spec_cols,
+        ) if dvs else []
+    else:
+        deletes = _write_v2_deletes(ice_root, dvs, snap_id, seq, spec_cols)
 
-        manifests = []
-        mf_rel = f"metadata/manifest-s{snap_id:05d}-data.avro"
-        mf_abs = os.path.join(ice_root, mf_rel)
-        av.write_avro(
-            _norm_v3_entries(entries, v3), entry_schema, mf_abs,
-            extra_meta=_manifest_meta("data"),
+    entry_schema = _manifest_entry_schema(pfields or None, v3=v3)
+    first = not meta["snapshots"]
+
+    def manifest(kind: str, content: int, rows: list) -> dict:
+        # first snapshot: manifest-00000-data / manifest-00001-deletes
+        # (their index in the list, which equals ``content``)
+        rel = (
+            f"metadata/manifest-{content:05d}-{kind}.avro" if first
+            else f"metadata/manifest-s{snap_id:05d}-{kind}.avro"
         )
-        manifests.append({
-            "manifest_path": mf_rel,
-            "manifest_length": os.path.getsize(mf_abs),
+        path = os.path.join(ice_root, rel)
+        av.write_avro(
+            _norm_v3_entries(rows, v3), entry_schema, path,
+            extra_meta={
+                "schema": _ice_schema_json_str(schema),
+                "schema-id": "0",
+                "partition-spec": json.dumps(spec_json),
+                "partition-spec-id": "0",
+                "format-version": str(fv),
+                "content": kind,
+            },
+        )
+
+        def tally(status):
+            hit = [e for e in rows if e["status"] == status]
+            return len(hit), sum(e["data_file"]["record_count"] for e in hit)
+
+        n_add, r_add = tally(_ST_ADDED)
+        n_old, r_old = tally(_ST_EXISTING)
+        return {
+            "manifest_path": rel,
+            "manifest_length": os.path.getsize(path),
             "partition_spec_id": 0,
-            "content": 0,
+            "content": content,
             "sequence_number": seq,
             "min_sequence_number": min(
-                (int(e["sequence_number"]) for e in entries), default=seq
+                (int(e["sequence_number"]) for e in rows), default=seq
             ),
             "added_snapshot_id": snap_id,
-            "added_files_count": n_added,
-            "existing_files_count": n_existing,
+            "added_files_count": n_add,
+            "existing_files_count": n_old,
             "deleted_files_count": 0,
-            "added_rows_count": sum(
-                e["data_file"]["record_count"] for e in entries
-                if e["status"] == _ST_ADDED
-            ),
-            "existing_rows_count": sum(
-                e["data_file"]["record_count"] for e in entries
-                if e["status"] == _ST_EXISTING
-            ),
+            "added_rows_count": r_add,
+            "existing_rows_count": r_old,
             "deleted_rows_count": 0,
-        })
-        if delete_entries:
-            dm_rel = f"metadata/manifest-s{snap_id:05d}-deletes.avro"
-            dm_abs = os.path.join(ice_root, dm_rel)
-            av.write_avro(
-                _norm_v3_entries(delete_entries, v3), entry_schema,
-                dm_abs, extra_meta=_manifest_meta("deletes"),
-            )
-            manifests.append({
-                "manifest_path": dm_rel,
-                "manifest_length": os.path.getsize(dm_abs),
-                "partition_spec_id": 0,
-                "content": 1,
-                "sequence_number": seq,
-                "min_sequence_number": seq,
-                "added_snapshot_id": snap_id,
-                "added_files_count": len(delete_entries),
-                "existing_files_count": 0,
-                "deleted_files_count": 0,
-                "added_rows_count": sum(
-                    e["data_file"]["record_count"] for e in delete_entries
-                ),
-                "existing_rows_count": 0,
-                "deleted_rows_count": 0,
-            })
-        mlist_rel = f"metadata/snap-{snap_id}-manifest-list.avro"
-        av.write_avro(
-            manifests, _MANIFEST_LIST_SCHEMA,
-            os.path.join(ice_root, mlist_rel),
-            extra_meta={"format-version": str(max(fv, 2))},
+        }
+
+    manifests = [manifest("data", 0, entries)]
+    if deletes:
+        manifests.append(manifest("deletes", 1, deletes))
+    mlist_rel = f"metadata/snap-{snap_id}-manifest-list.avro"
+    av.write_avro(
+        manifests, _MANIFEST_LIST_SCHEMA,
+        os.path.join(ice_root, mlist_rel),
+        extra_meta={"format-version": str(fv)},
+    )
+
+    # advisory operation label: files dropped or rows newly hidden
+    # -> overwrite/delete; pure file additions -> append
+    n_added = manifests[0]["added_files_count"]
+    if len(by_src) > manifests[0]["existing_files_count"]:
+        op = "overwrite"
+    elif deletes and not n_added:
+        op = "delete"
+    else:
+        op = "append"
+    snap = {
+        "snapshot-id": snap_id,
+        "sequence-number": seq,
+        "timestamp-ms": 0,
+        "manifest-list": mlist_rel,
+        "schema-id": 0,
+        # the exported txn version rides in the summary (a string map
+        # per spec — the role Delta's txn action plays): the drain
+        # reads its high-water mark back from the table it wrote
+        "summary": {
+            "operation": op, "txnlake-export-version": str(version),
+        },
+    }
+    if v3:
+        # this snapshot's fresh rows claimed [first_row_id, frid)
+        snap["first-row-id"] = first_row_id
+        meta["next-row-id"] = frid
+    meta["snapshots"].append(snap)
+    meta["snapshot-log"].append({"snapshot-id": snap_id, "timestamp-ms": 0})
+    meta["current-snapshot-id"] = snap_id
+    meta["last-sequence-number"] = seq
+    _publish_metadata(ice_root, meta)
+    return live
+
+
+def iceberg_export(
+    txn_root: str, ice_root: str, format_version: int = 2
+) -> int:
+    """Export the native txn lake's CURRENT state as a new Iceberg table
+    at ``format_version`` 2 or 3, in one snapshot (the first snapshot
+    :func:`_write_snapshot` writes): data files copied (hive-partitioned
+    tables re-materialized with the partition column restored —
+    Iceberg data files must contain every column), active RLE deletion
+    vectors converted to v2 position-delete parquet files or v3
+    deletion-vector Puffin blobs, manifests and the manifest list
+    written through the repo's own Avro encoder, and v1.metadata.json
+    + version-hint.text published. Returns the snapshot id.
+    Unconverged type widening refuses (compact first), as does a
+    destination that already holds Iceberg metadata; column-mapped
+    tables export under their LOGICAL names (a rename history
+    collapses to the current vocabulary)."""
+    if format_version not in (2, 3):
+        raise ValueError(
+            f"format_version must be 2 or 3, got {format_version}"
+        )
+    latest = lake._latest(txn_root)
+    st = lake._replay(txn_root, latest)
+    tj = lake._table_schema_json(txn_root, latest)
+    if tj is None:
+        raise ValueError("table has no recorded schema")
+    if os.path.isdir(_meta_dir(ice_root)) and os.listdir(_meta_dir(ice_root)):
+        raise FileExistsError(f"{ice_root} already has Iceberg metadata")
+    # unconverged widening: same guard as the Delta exporter
+    from .delta_interop import _export_guards
+
+    _export_guards(txn_root, latest, history=False)
+
+    os.makedirs(_meta_dir(ice_root), exist_ok=True)
+    os.makedirs(os.path.join(ice_root, "data"), exist_ok=True)
+    # identity partition spec (r9): the manifest entries carry each
+    # file's TYPED partition tuple and the metadata records the spec,
+    # so a foreign reader can partition-prune from the manifests alone
+    schema = T.StructType.fromJson(json.loads(tj))
+    _, spec_json = _partition_export_shape(schema, st.spec)
+    ice_fields = json.loads(_ice_schema_json_str(schema))["fields"]
+    meta = {
+        "format-version": format_version,
+        "table-uuid": "00000000-0000-0000-0000-000000000001",
+        "location": ice_root,
+        "last-updated-ms": 0,
+        "last-column-id": len(ice_fields),
+        "schemas": [
+            {"schema-id": 0, "type": "struct", "fields": ice_fields}
+        ],
+        "current-schema-id": 0,
+        "partition-specs": [{"spec-id": 0, "fields": spec_json}],
+        "default-spec-id": 0,
+        "last-partition-id": 999 + len(st.spec),
+        "sort-orders": [{"order-id": 0, "fields": []}],
+        "default-sort-order-id": 0,
+        "snapshots": [],
+        "snapshot-log": [],
+        "metadata-log": [],
+    }
+    _write_snapshot(ice_root, meta, st, latest, tj, {})
+    return meta["current-snapshot-id"]
+
+
+def iceberg_export_incremental(
+    txn_root: str, ice_root: str, format_version: int = 2
+) -> int:
+    """CONTINUOUS export to a foreign Iceberg consumer, exactly once
+    (r9 — the Iceberg mirror of delta_export_incremental): the first
+    call full-exports the current state (:func:`iceberg_export`);
+    every later call appends ONE Iceberg snapshot per new txn commit
+    through the same snapshot writer (:func:`_write_snapshot`), in the
+    TABLE's format version. The high-water mark rides in each
+    snapshot's ``summary`` map (``txnlake-export-version``), so a
+    crashed or repeated drain reads its position back from the table
+    it wrote and lands nothing twice. Exported data files embed their
+    source file's path digest, so the diff against already-exported
+    state is pure name arithmetic — no side-channel mapping to lose.
+
+    Refusals (never misexport): a foreign table without the summary
+    stamp cannot be adopted; a schema or partition-spec change since
+    the last exported version refuses with instructions to start a
+    fresh full export (carried files materialized under an older
+    schema would otherwise silently miss columns); the usual
+    unconverged-widening guard runs per call. Returns the current
+    snapshot id; a no-new-commits call is a no-op returning it
+    unchanged."""
+    from .delta_interop import _export_guards
+
+    latest = lake._latest(txn_root)
+    d = _meta_dir(ice_root)
+    if not (os.path.isdir(d) and os.listdir(d)):
+        return iceberg_export(
+            txn_root, ice_root, format_version=format_version
         )
 
-        # advisory operation label: files dropped or rows newly hidden
-        # -> overwrite/delete; pure file additions -> append
-        removed = prior_live - n_existing
-        if removed > 0:
-            op = "overwrite"
-        elif delete_entries and not n_added:
-            op = "delete"
-        else:
-            op = "append"
-        new_snap = {
-            "snapshot-id": snap_id,
-            "sequence-number": seq,
-            "timestamp-ms": 0,
-            "manifest-list": mlist_rel,
-            "schema-id": 0,
-            "summary": {
-                "operation": op,
-                "txnlake-export-version": str(v),
-            },
-        }
-        if v3:
-            # v3 row lineage: this snapshot's fresh rows claimed
-            # [next-row-id, frid) during entry assignment above
-            new_snap["first-row-id"] = int(meta.get("next-row-id") or 0)
-            meta["next-row-id"] = frid
-        meta["snapshots"].append(new_snap)
-        meta["snapshot-log"].append(
-            {"snapshot-id": snap_id, "timestamp-ms": 0}
+    meta = load_table_metadata(ice_root)
+    snap = _pick_snapshot(meta, None)
+    stamp = (snap.get("summary") or {}).get("txnlake-export-version")
+    if stamp is None:
+        raise ValueError(
+            f"{ice_root} is not a txnlake export (no "
+            "txnlake-export-version in the current snapshot summary); "
+            "incremental export cannot adopt a foreign Iceberg table"
         )
-        meta.setdefault("metadata-log", []).append({
-            "timestamp-ms": 0,
-            "metadata-file": f"metadata/v{meta_v}.metadata.json",
-        })
-        meta["current-snapshot-id"] = snap_id
-        meta["last-sequence-number"] = seq
-        meta_v += 1
-        with open(
-            os.path.join(d, f"v{meta_v}.metadata.json"), "w"
-        ) as fh:
-            json.dump(meta, fh, sort_keys=True)
-        with open(os.path.join(d, "version-hint.text"), "w") as fh:
-            fh.write(str(meta_v))
-    return snap_id
+    done = int(stamp)
+    if done >= latest:
+        return int(snap["snapshot-id"])
+
+    tj = lake._table_schema_json(txn_root, latest)
+    if tj != lake._table_schema_json(txn_root, done):
+        raise ValueError(
+            "table schema changed since the last exported version "
+            f"({done}); start a fresh full export — carried files "
+            "were materialized under the old schema"
+        )
+    _export_guards(txn_root, latest, history=False)
+
+    # the partition spec must be stable across the appended range —
+    # the exported metadata records ONE spec-id 0 (same refusal class
+    # as the schema change above)
+    exported_spec = [
+        f["name"]
+        for f in (meta.get("partition-specs") or [{}])[0].get("fields", [])
+    ]
+    spec_cols = list(lake._replay(txn_root, latest).spec)
+    if spec_cols != exported_spec:
+        raise ValueError(
+            f"partition spec changed since the last export "
+            f"({exported_spec} -> {spec_cols}); start a fresh full "
+            "export"
+        )
+
+    # live data entries of the CURRENT snapshot, keyed by the SOURCE
+    # PATH digest embedded in the exported name (never the bare
+    # basename — see _export_rel); pre-digest entries key as None and
+    # are dropped, so their files re-materialize instead of mis-carrying
+    by_src: dict = {}
+    for m in _read_avro_rows(_resolve_path(ice_root, snap["manifest-list"])):
+        if int(m.get("content") or 0) != 0:
+            continue
+        for e in _read_avro_rows(
+            _resolve_path(ice_root, m["manifest_path"])
+        ):
+            if int(e.get("status") or 0) == _ST_DELETED:
+                continue
+            dg = _src_digest(e["data_file"]["file_path"])
+            if dg is not None:
+                by_src[dg] = e
+
+    # one cursor for the whole drain: each version advances O(1)
+    # commits instead of replaying the full history (the same
+    # O(V^2) -> O(V) move delta_export makes via _ReplayCursor)
+    cursor = lake._ReplayCursor(txn_root, start_version=done)
+    for v in range(done + 1, latest + 1):
+        cursor.advance_to(v)
+        by_src = _write_snapshot(
+            ice_root, meta, cursor.state(), v, tj, by_src
+        )
+    return int(meta["current-snapshot-id"])

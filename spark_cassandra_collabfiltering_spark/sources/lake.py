@@ -2523,10 +2523,11 @@ def txn_count(root: str, version: "int | None" = None) -> int:
     live-file row counts come from the commits' reserved per-file
     _NROWS_KEY stats (footer fallback for files committed before row
     counts were recorded — still a metadata read, no data pages), and
-    deletion-vector-hidden rows are subtracted by reading the ACTIVE
-    sidecars (metadata-sized parquet, pyarrow, no Spark job). At
-    100 TB a COUNT(*) is O(files) log arithmetic instead of a scan —
-    and it is exactly what a scan would return, DVs included."""
+    deletion-vector-hidden rows are subtracted by decoding the ACTIVE
+    sidecars (metadata-sized parquet, pyarrow, no Spark job; a row two
+    overlapping DVs both hide is subtracted once). At 100 TB a
+    COUNT(*) is O(files) log arithmetic instead of a scan — and it is
+    exactly what a scan would return, DVs included."""
     import pyarrow.parquet as pq
 
     version = _resolve_version(root, version)
@@ -2537,19 +2538,7 @@ def txn_count(root: str, version: "int | None" = None) -> int:
         if n is None:
             n = pq.ParquetFile(f).metadata.num_rows  # footer, not data
         total += n
-    for sidecars, targets in state.dvs:
-        # replay already filtered targets to live files; sidecar file
-        # values are scan-side URI form, targets are raw fs paths
-        tset = {_uri_path(t) for t in targets}
-        for sc in sidecars:
-            tbl = pq.read_table(sc).to_pandas()
-            hit = tbl[tbl["file"].isin(tset)]
-            total -= (
-                int(hit["n"].sum())
-                if "n" in tbl.columns
-                else len(hit)  # legacy (file, pos) sidecars: 1 row each
-            )
-    return total
+    return total - sum(len(p) for p in _dv_positions(state.dvs).values())
 
 
 def txn_detail(root: str) -> dict:
@@ -2690,6 +2679,57 @@ def _read_dv(spark: SparkSession, sidecars: list) -> DataFrame:
     for p in parts[1:]:
         out = out.unionByName(p)
     return out
+
+
+def _dv_positions(dvs: list) -> dict:
+    """The one Python decoder of deletion-vector sidecars (``_read_dv``
+    is its Spark twin): ``{raw data-file path: its deleted row
+    positions}`` as sorted, unique int64 numpy arrays over ``dvs``,
+    (sidecar paths, target files) pairs in the ``_TableState.dvs``
+    shape. A sidecar row counts only for a file its pair targets, and
+    a position two overlapping DVs both record counts once, as the
+    scan's anti-join drops it once. RLE (file, start, n) runs expand
+    and legacy (file, pos) rows read with numpy, no per-row Python.
+    Files with no deleted row are absent."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    def ints(col):
+        return pc.fill_null(col, 0).to_numpy().astype(np.int64)
+
+    chunks: dict = {}
+    for sidecars, targets in dvs:
+        enc = pa.array([_uri_path(t) for t in targets], type=pa.string())
+        for sc in sidecars:
+            tbl = pq.read_table(sc)
+            # index of each row's file in ``targets``, -1 for others
+            which = ints(pc.fill_null(
+                pc.index_in(tbl["file"], value_set=enc), -1
+            ))
+            for col in ("start", "pos"):
+                if col not in tbl.column_names:
+                    continue
+                rows = (which >= 0) & pc.is_valid(tbl[col]).to_numpy()
+                first = ints(tbl[col])[rows]
+                n = (
+                    ints(tbl["n"])[rows] if col == "start"
+                    else np.ones(len(first), dtype=np.int64)
+                )
+                # run r covers [first[r], first[r] + n[r])
+                pos = np.arange(n.sum(), dtype=np.int64) + np.repeat(
+                    first - (np.cumsum(n) - n), n
+                )
+                owner = np.repeat(which[rows], n)
+                per_file = np.split(
+                    pos[np.argsort(owner, kind="stable")],
+                    np.cumsum(np.bincount(owner, minlength=len(targets))),
+                )
+                for t, part in zip(targets, per_file):
+                    if len(part):
+                        chunks.setdefault(t, []).append(part)
+    return {t: np.unique(np.concatenate(c)) for t, c in chunks.items()}
 
 
 _DV_MAX_RUN = 65536  # cap per sidecar row so sequence() arrays stay bounded
@@ -3845,11 +3885,8 @@ def txn_table_read_pruned(
 def txn_multi_history(cat_root: str) -> list:
     """Catalog commit metadata, newest first: which tables each
     version touched and how."""
-    latest = txn_latest_version(cat_root)
-    if latest is None:
-        return []
     out = []
-    for v in range(latest, -1, -1):
+    for v in range(_latest(cat_root), -1, -1):
         c = _read_commit(cat_root, v)
         out.append(
             {

@@ -120,28 +120,6 @@ def _part_vals(state, f: str) -> dict:
     return {**dict.fromkeys(state.spec), **(state.parts.get(f) or {})}
 
 
-def _read_dv_positions(sidecars: list, enc_file: str) -> "set[int]":
-    """Executor-side: the deleted row positions of ONE file, from RLE
-    (file, start, n) and/or legacy (file, pos) sidecar rows."""
-    import pyarrow.parquet as pq
-
-    pos: set[int] = set()
-    for sc in sidecars:
-        t = pq.read_table(sc)
-        cols = set(t.column_names)
-        d = t.to_pydict()
-        files = d["file"]
-        if "start" in cols:
-            for f, s, n in zip(files, d["start"], d.get("n", [])):
-                if f == enc_file and s is not None:
-                    pos.update(range(s, s + n))
-        if "pos" in cols:
-            for f, p in zip(files, d["pos"]):
-                if f == enc_file and p is not None:
-                    pos.add(p)
-    return pos
-
-
 def _project_file(tbl, dead, schema: T.StructType, phys: list, consts: dict):
     """The per-file read core of every Python table source: drop the
     ``dead`` row positions from one file's pyarrow table (positions
@@ -181,23 +159,25 @@ def _file_to_batches(partition: "_FilePartition", schema: T.StructType):
     positions dropped, ``extra`` constants first, then the file's own
     column (under column mapping the file carries the cm_phys name),
     then hive-stripped partition values."""
+    import numpy as np
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     tbl = pq.read_table(partition.file)
-    enc = lake._uri_path(partition.file)
-    dead = (
-        _read_dv_positions(partition.dv_sidecars, enc)
-        if partition.dv_sidecars
-        else set()
-    )
+    none = np.empty(0, dtype=np.int64)
+
+    def positions(sidecars):
+        return lake._dv_positions([(sidecars, [partition.file])]).get(
+            partition.file, none
+        )
+
+    dead = positions(partition.dv_sidecars)
     if partition.take_sidecars is not None:
         # change-feed delete rows: EMIT exactly these positions (minus
         # positions an earlier DV already hid)
-        take = _read_dv_positions(partition.take_sidecars, enc) - dead
-        tbl = tbl.take(pa.array(sorted(p for p in take if p < tbl.num_rows),
-                                type=pa.int64()))
-        dead = set()
+        take = np.setdiff1d(positions(partition.take_sidecars), dead)
+        tbl = tbl.take(pa.array(take[take < tbl.num_rows]))
+        dead = none
     phys = [(f.metadata or {}).get("cm_phys", f.name) for f in schema.fields]
     consts = dict(partition.extra)
     for f, p in zip(schema.fields, phys):
@@ -206,7 +186,7 @@ def _file_to_batches(partition: "_FilePartition", schema: T.StructType):
             consts[f.name] = lake._py_part_val(
                 partition.part_vals[p], f.dataType
             )
-    yield from _project_file(tbl, list(dead), schema, phys, consts)
+    yield from _project_file(tbl, dead, schema, phys, consts)
 
 
 def _prunable_bound(filters) -> dict:

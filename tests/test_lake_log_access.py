@@ -99,7 +99,10 @@ def test_bad_version_fails_one_way(spark, roots, entry, bad):
 
 @pytest.mark.parametrize(
     "getter",
-    [lake.txn_generated, lake.txn_constraints, lake.txn_column_mapping, lake.txn_history],
+    [
+        lake.txn_generated, lake.txn_constraints, lake.txn_column_mapping,
+        lake.txn_history, lake.txn_multi_history,
+    ],
 )
 def test_metadata_getters_refuse_a_root_without_a_log(tmp_path, getter):
     (tmp_path / "typo").mkdir()
@@ -165,14 +168,61 @@ def _outside(tree, owner, hit):
     return [n.lineno for n in ast.walk(tree) if hit(n) and id(n) not in inside]
 
 
+_WRITE_MODES = {"w", "wb", "a", "ab", "x", "xb", "w+", "r+"}
+
+
+def _opens_for_writing(fn):
+    """Whether function ``fn`` calls ``open`` with a writing mode."""
+    for n in ast.walk(fn):
+        if isinstance(n, ast.Call) and getattr(n.func, "id", None) == "open":
+            modes = n.args[1:2] + [k.value for k in n.keywords if k.arg == "mode"]
+            if any(isinstance(m, ast.Constant) and m.value in _WRITE_MODES for m in modes):
+                return True
+    return False
+
+
+def _strings(fn):
+    """Every string literal in ``fn``, f-string pieces included."""
+    return [n.value for n in ast.walk(fn) if isinstance(n, ast.Constant) and isinstance(n.value, str)]
+
+
+def _keys_read(fn):
+    """String keys ``fn`` reads: ``x["k"]``, ``x.get("k")``, ``"k" in x``."""
+    keys = set()
+    for n in ast.walk(fn):
+        if isinstance(n, ast.Subscript) and isinstance(n.slice, ast.Constant):
+            keys.add(n.slice.value)
+        elif isinstance(n, ast.Call) and getattr(n.func, "attr", None) == "get" and n.args:
+            if isinstance(n.args[0], ast.Constant):
+                keys.add(n.args[0].value)
+        elif isinstance(n, ast.Compare) and isinstance(n.left, ast.Constant):
+            if any(isinstance(op, (ast.In, ast.NotIn)) for op in n.ops):
+                keys.add(n.left.value)
+    return keys
+
+
 def test_log_decisions_live_in_one_place():
-    """One O_EXCL open (_publish), one no-log error (_latest), and no
-    per-call retry knob anywhere in the package."""
+    """One O_EXCL open (_publish), one no-log error (_latest), no
+    per-call retry knob anywhere in the package, one Iceberg metadata
+    write (iceberg_interop._publish_metadata), and one decoder of the
+    lake's deletion-vector sidecars (lake.py: no other module reads an
+    RLE ``start`` column or a legacy ``(file, pos)`` pair)."""
     root = pathlib.Path(pkg.__file__).parent
     offenders = []
     for path in sorted((root / "sources").glob("*.py")):
         tree = ast.parse(path.read_text(), str(path))
         rel = path.relative_to(root)
+        for f in _functions(tree):
+            if (
+                path.name == "iceberg_interop.py"
+                and f.name != "_publish_metadata"
+                and _opens_for_writing(f)
+                and any("version-hint.text" in t or ".metadata.json" in t for t in _strings(f))
+            ):
+                offenders.append(f"{rel}:{f.lineno} {f.name} writes Iceberg metadata")
+            keys = _keys_read(f)
+            if path.name != "lake.py" and ("start" in keys or {"file", "pos"} <= keys):
+                offenders.append(f"{rel}:{f.lineno} {f.name} decodes DV sidecars")
         offenders += [
             f"{rel}:{ln} O_EXCL"
             for ln in _outside(

@@ -49,6 +49,31 @@ def test_count_subtracts_dv_rows_exactly(spark, tmp_path):
     assert lake.txn_count(root) == lake.txn_read(spark, root).count()
 
 
+def test_count_subtracts_overlapping_dvs_once(spark, tmp_path, monkeypatch):
+    # two concurrent DVs on one file compose at commit time, each with
+    # positions computed at its own read version, so their sidecars
+    # can overlap: the scan hides an overlapping row once, and so must
+    # the count
+    root = str(tmp_path / "t")
+    lake.txn_write(_d(spark, 0, 10).coalesce(1), root, stats_cols=["id"])
+    lake.txn_delete_dv(spark, root, spark.range(3, 4).select("id"), ["id"])
+    real = lake.txn_latest_version
+    calls = []
+
+    def read_v0_first(r):
+        calls.append(r)
+        return 0 if len(calls) == 1 else real(r)
+
+    monkeypatch.setattr(lake, "txn_latest_version", read_v0_first)
+    v, n, _ = lake.txn_delete_dv(
+        spark, root, spark.range(3, 5).select("id"), ["id"]
+    )
+    monkeypatch.undo()
+    assert (v, n) == (2, 2)
+    assert lake.txn_read(spark, root).count() == 8
+    assert lake.txn_count(root) == 8
+
+
 def test_count_through_merge_and_compact(spark, tmp_path):
     root = str(tmp_path / "t")
     lake.txn_write(_d(spark, 0, 1000).repartitionByRange(4, "id"), root,
