@@ -1,29 +1,42 @@
 """Similarity search over embedding columns (driver-mandated extension).
 
 The embeddings table is (vec_id bigint, embedding array<float>, label).
-Two paths:
+Every ``cosine_topk_*`` scorer takes a bounded query batch
+(query_id, query_vec), broadcasts it, and returns (query_id, vec_id,
+cos, rank): the corpus never shuffles, and each query keeps its k best
+rows by rounded score, ties to the lower id (:func:`_top_k`, over
+``windows.top_k_per_group``). The eight families differ only in how
+they pick and score candidates:
 
-- brute-force cosine top-k: exact baseline. The query set is small and
-  broadcast; the corpus never shuffles — each partition scores its rows
-  and a TakeOrdered/window keeps k. Linear scan, embarrassingly
-  parallel: the right baseline even at 100 TB when the query batch is
-  bounded.
-- sign-LSH bucketed top-k: the scale path. Bucket = the sign bits of
-  the first ``bits`` dimensions (axis-aligned random-hyperplane LSH —
-  deterministic, engine-portable). Join query buckets to corpus buckets
-  and score only within buckets: turns all-pairs into per-bucket work.
-  (Multi-probe: flip one bit per probe to raise recall.)
+- brute force: every corpus row, by the expression fold or by the
+  NumPy GEMM scorer — the exact baseline;
+- sign-LSH: rows in the query's sign bucket (multi-probe adds the
+  buckets one bit flip away);
+- IVF: members of the query's nearest k-means clusters
+  (:func:`_probes`);
+- PQ: ADC over per-subspace codes (:func:`_adc_tables`); OPQ is PQ
+  after an orthonormal rotation;
+- SQ8: a separable fold over 8-bit per-dimension codes;
+- IVF+PQ: ADC over residual codes inside the probed clusters;
+- PCA: brute force in a reduced basis.
 
-All math is built-in higher-order functions (zip_with/aggregate) in
-double precision — no UDFs, no NumPy in the row path. A vectorized
-Pandas-UDF scorer is a drop-in swap where BLAS wins; the plan shape
-stays identical.
+The approximate families can shortlist R candidates per query and
+score them exactly against the raw vectors (:func:`_exact_rerank`).
+Trained indexes fit on the driver: one key-sorted training matrix
+(:func:`_training_matrix`) and one seeded k-means (:func:`_kmeans_np`);
+the full corpus is then encoded map-only against literal codebooks.
+
+Row-path math is built-in higher-order functions (zip_with/aggregate)
+in double precision — no UDFs. NumPy runs in the row path only in the
+vectorized brute-force scorer and the large-d rotation.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from spark_cassandra_collabfiltering_spark.operators.windows import top_k_per_group
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -44,8 +57,65 @@ def cosine(a: Column, b: Column) -> Column:
     vector has no direction, so cos = 0.0 (Spark's raw double division
     would emit NaN, which sorts ABOVE every real score in a descending
     window — a zero vector would win every top-k)."""
-    den = norm(a) * norm(b)
-    return F.when(den == 0.0, F.lit(0.0)).otherwise(dot(a, b) / den)
+    return _ratio(dot(a, b), norm(a) * norm(b))
+
+
+def _ratio(num: Column, den: Column) -> Column:
+    """num / den, 0.0 where den is 0 — the zero-vector rule of
+    :func:`cosine`, shared by the ADC and SQ cosine estimates (under
+    ANSI mode a bare division by zero raises DIVIDE_BY_ZERO)."""
+    return F.when(den == 0.0, F.lit(0.0)).otherwise(num / den)
+
+
+def _cos(vec_col: str, places: int) -> Column:
+    """Exact query-to-row cosine rounded to ``places``, as ``cos``."""
+    return F.round(cosine(F.col("query_vec"), F.col(vec_col)), places).alias("cos")
+
+
+def _top_k(
+    scored: DataFrame,
+    k: int,
+    id_col: str,
+    score_col: str = "cos",
+    rank_col: str = "rank",
+) -> DataFrame:
+    """Each query's ``k`` best rows by ``score_col`` (desc, ties to the
+    lower id); a query never matches its own id."""
+    return top_k_per_group(
+        scored.filter(F.col("query_id") != F.col(id_col)),
+        ["query_id"],
+        [F.col(score_col).desc(), F.col(id_col).asc()],
+        k,
+        rank_col,
+    )
+
+
+def _exact_rerank(
+    corpus: DataFrame,
+    queries: DataFrame,
+    scored: DataFrame,
+    k: int,
+    rerank: int | None,
+    id_col: str,
+    vec_col: str,
+    places: int,
+    score_col: str = "cos",
+) -> DataFrame:
+    """The top k of the candidate scores ``scored`` — or, with
+    ``rerank=R``, the second stage of the shortlisting scorers: score
+    each query's top R ids EXACTLY against the raw vectors and keep the
+    top k of those. The shortlist (n_queries·R ids) and the query batch
+    are broadcast into the corpus scan, so the corpus never
+    shuffles."""
+    if rerank is None:
+        return _top_k(scored, k, id_col, score_col)
+    shortlist = _top_k(scored, rerank, id_col, score_col, "r")
+    exact = (
+        corpus.join(F.broadcast(shortlist.select("query_id", id_col)), id_col)
+        .join(F.broadcast(queries), "query_id")
+        .select("query_id", id_col, _cos(vec_col, places))
+    )
+    return _top_k(exact, k, id_col)
 
 
 def cosine_topk_bruteforce(
@@ -64,21 +134,10 @@ def cosine_topk_bruteforce(
     engines/runs (ties broken by corpus id).
     Output: query_id, vec_id, cos, rank.
     """
-    from pyspark.sql import Window
-
     scored = corpus.join(F.broadcast(queries)).select(
-        "query_id",
-        id_col,
-        F.round(cosine(F.col("query_vec"), F.col(vec_col)), places).alias("cos"),
+        "query_id", id_col, _cos(vec_col, places)
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col(id_col).asc()
-    )
-    return (
-        scored.filter(F.col("query_id") != F.col(id_col))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _top_k(scored, k, id_col)
 
 
 def cosine_topk_bruteforce_vectorized(
@@ -107,7 +166,6 @@ def cosine_topk_bruteforce_vectorized(
     """
     import numpy as np
     import pandas as pd
-    from pyspark.sql import Window
 
     id_type = corpus.schema[id_col].dataType.simpleString()
     qrows = queries.select("query_id", "query_vec").collect()  # bounded batch
@@ -146,14 +204,7 @@ def cosine_topk_bruteforce_vectorized(
             )
 
     scored = corpus.select(id_col, vec_col).mapInPandas(score, out_schema)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col(id_col).asc()
-    )
-    return (
-        scored.filter(F.col("query_id") != F.col(id_col))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _top_k(scored, k, id_col)
 
 
 def make_queries(corpus: DataFrame, query_ids: list[int], id_col: str = "vec_id",
@@ -201,8 +252,6 @@ def cosine_topk_lsh(
     (query, corpus) pair still matches at most once (a corpus row has
     one bucket; the probe set is distinct buckets).
     """
-    from pyspark.sql import Window
-
     cb = corpus.withColumn("bucket", sign_bucket(F.col(vec_col), bits))
     qb = queries.withColumn("bucket", sign_bucket(F.col("query_vec"), bits))
     if multi_probe:
@@ -214,16 +263,9 @@ def cosine_topk_lsh(
             "query_id", "query_vec", F.explode(F.array(*flips)).alias("bucket")
         )
     scored = cb.join(F.broadcast(qb), "bucket").select(
-        "query_id",
-        id_col,
-        F.round(cosine(F.col("query_vec"), F.col(vec_col)), places).alias("cos"),
+        "query_id", id_col, _cos(vec_col, places)
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col(id_col).asc())
-    return (
-        scored.filter(F.col("query_id") != F.col(id_col))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _top_k(scored, k, id_col)
 
 
 def _training_sample(
@@ -250,12 +292,29 @@ def _training_sample(
     )
 
 
+def _training_matrix(
+    corpus: DataFrame, id_col: str, vec_col: str, train_fraction: float | None
+):
+    """The driver-side training matrix (n, d) of every trained index
+    (IVF, PQ, OPQ, PCA): the :func:`_training_sample` rows (the whole
+    corpus for ``train_fraction=None``), collected unsorted (no
+    shuffle) and sorted by key on the driver so partition order can't
+    leak into the seeded trainers."""
+    import numpy as np
+
+    sample = _training_sample(corpus, id_col, train_fraction)
+    rows = sorted(sample.select(id_col, vec_col).collect(), key=lambda r: r[0])
+    if not rows:
+        raise ValueError("training sample is empty — raise train_fraction")
+    return np.array([list(r[1]) for r in rows], dtype=np.float64)
+
+
 def _kmeans_np(X, k: int, seed: int, max_iter: int = 20):
-    """Seeded Lloyd's k-means on a driver-side sample (NumPy) — the
-    trainer for the ``train_fraction`` path, where the sample is
-    bounded by design (FAISS-style: codebooks/centroids are trained on
-    ~1e5-1e6 vectors regardless of corpus size, so a distributed
-    iterative fit is all scheduling overhead and no compute).
+    """Seeded Lloyd's k-means on a driver-side sample (NumPy) — every
+    k-means fit of the module. The sample is bounded by design
+    (FAISS-style: codebooks/centroids are trained on ~1e5-1e6 vectors
+    regardless of corpus size, so a distributed iterative fit is all
+    scheduling overhead and no compute).
     kmeans++ init from a seeded RNG; an empty cluster is reseeded to
     the point farthest from its centroid. Deterministic given
     (X, k, seed) — callers sort the sample by key before building X so
@@ -265,8 +324,6 @@ def _kmeans_np(X, k: int, seed: int, max_iter: int = 20):
 
     X = np.asarray(X, dtype=np.float64)
     n = X.shape[0]
-    if n == 0:
-        raise ValueError("k-means training sample is empty — raise train_fraction")
     rng = np.random.RandomState(seed)
     centers = [X[rng.randint(n)]]
     for _ in range(1, min(k, n)):
@@ -316,7 +373,7 @@ def _lit_matrix(rows: list[list[float]]) -> Column:
 def _nearest_code(vec: Column, centroids: list[list[float]]) -> Column:
     """Index of the nearest centroid (squared Euclidean) as a pure
     JVM-side expression over a literal codebook — the map-only encode/
-    assign used by the sampled-training paths. Replaces a chain of
+    assign of every trained index. Replaces a chain of
     pyspark.ml model transforms with ONE select; ties (measure-zero on
     real data) resolve to the lowest code via array_position."""
     cb = _lit_matrix(centroids)
@@ -354,38 +411,20 @@ def ivf_index(
     """IVF (inverted-file) index: k-means centroids + cluster-assigned
     corpus. Returns (assigned_corpus, centroids_df).
 
-    ``train_fraction`` switches the trainer: None fits distributed
-    pyspark.ml KMeans over the whole corpus; a fraction collects the
-    deterministic keyed sample (bounded by design — see
-    :func:`_training_sample`) and runs seeded NumPy Lloyd's on the
-    driver, which is the 100 TB shape (FAISS trains coarse quantizers
-    on a driver-scale sample; a distributed fit over ~1e5 sampled rows
-    is scheduling overhead, not compute). Either way, assignment of
-    the FULL corpus is one map-only expression pass over a broadcast/
-    literal centroid matrix; the assigned table is then written
-    partitioned by cluster so probes prune partitions.
+    Seeded NumPy Lloyd's runs on the driver over
+    :func:`_training_matrix`: the deterministic keyed sample for a
+    ``train_fraction`` (bounded by design — see
+    :func:`_training_sample`), the whole corpus for None. That is the
+    100 TB shape (FAISS trains coarse quantizers on a driver-scale
+    sample; a distributed fit over ~1e5 sampled rows is scheduling
+    overhead, not compute). Assignment of the FULL corpus is one
+    map-only expression pass over a literal centroid matrix; the
+    assigned table is then written partitioned by cluster so probes
+    prune partitions.
     """
-    train = _training_sample(corpus, id_col, train_fraction)
-    if train is not corpus:
-        # collect unsorted (no shuffle), sort driver-side: the sample is
-        # driver-scale by design and the key sort keeps partition order
-        # out of the seeded trainer
-        rows = sorted(train.select(id_col, vec_col).collect(), key=lambda r: r[0])
-        centers = _kmeans_np(
-            [list(r[1]) for r in rows], n_clusters, seed=seed
-        )
-    else:
-        from pyspark.ml.clustering import KMeans
-        from pyspark.ml.functions import array_to_vector
-
-        fitted = KMeans(
-            k=n_clusters, seed=seed, featuresCol="_features", predictionCol="cluster"
-        ).fit(
-            corpus.select(
-                array_to_vector(F.col(vec_col).cast("array<double>")).alias("_features")
-            )
-        )
-        centers = [[float(x) for x in c] for c in fitted.clusterCenters()]
+    centers = _kmeans_np(
+        _training_matrix(corpus, id_col, vec_col, train_fraction), n_clusters, seed=seed
+    )
     assigned = corpus.select(
         F.col(id_col),
         F.col(vec_col),
@@ -397,6 +436,27 @@ def ivf_index(
         "cluster int, centroid array<double>",
     )
     return assigned, centroids
+
+
+def _probes(
+    queries: DataFrame, centroids: DataFrame, n_probe: int, places: int
+) -> DataFrame:
+    """Each query's ``n_probe`` nearest centroids by rounded cosine,
+    ties to the lower cluster: (query_id, query_vec, cluster, c_cos,
+    qc_dot, p) with qc_dot = <q, centroid> for the IVF+PQ score. A
+    broadcast cross of the bounded query batch and the centroid
+    table."""
+    ranked = queries.join(F.broadcast(centroids)).select(
+        "query_id",
+        "query_vec",
+        "cluster",
+        F.round(cosine(F.col("query_vec"), F.col("centroid")), places).alias("c_cos"),
+        dot(F.col("query_vec"), F.col("centroid")).alias("qc_dot"),
+    )
+    return top_k_per_group(
+        ranked, ["query_id"], [F.col("c_cos").desc(), F.col("cluster").asc()],
+        n_probe, "p",
+    )
 
 
 def cosine_topk_ivf(
@@ -418,38 +478,17 @@ def cosine_topk_ivf(
     the cluster key. Rows-only correctness check (k-means is iterative,
     not SQL-expressible).
     """
-    from pyspark.sql import Window
-
     assigned, centroids = ivf_index(
         corpus, n_clusters=n_clusters, seed=seed, id_col=id_col, vec_col=vec_col,
         train_fraction=train_fraction,
     )
-    pw = Window.partitionBy("query_id").orderBy(
-        F.col("c_cos").desc(), F.col("cluster").asc()
-    )
-    probes = (
-        queries.join(F.broadcast(centroids))
-        .select(
-            "query_id",
-            "query_vec",
-            "cluster",
-            F.round(cosine(F.col("query_vec"), F.col("centroid")), places).alias("c_cos"),
-        )
-        .withColumn("p", F.row_number().over(pw))
-        .filter(F.col("p") <= n_probe)
-        .select("query_id", "query_vec", "cluster")
+    probes = _probes(queries, centroids, n_probe, places).select(
+        "query_id", "query_vec", "cluster"
     )
     scored = assigned.join(F.broadcast(probes), "cluster").select(
-        "query_id",
-        id_col,
-        F.round(cosine(F.col("query_vec"), F.col(vec_col)), places).alias("cos"),
+        "query_id", id_col, _cos(vec_col, places)
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col(id_col).asc())
-    return (
-        scored.filter(F.col("query_id") != F.col(id_col))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _top_k(scored, k, id_col)
 
 
 def write_ivf_index(
@@ -495,39 +534,17 @@ def cosine_topk_ivf_pruned(
     in tests). Scoring inside the pruned scan matches the in-memory
     path row-for-row.
     """
-    from pyspark.sql import Window
-
-    centroids = spark.read.parquet(f"{path}/centroids")
-    pw = Window.partitionBy("query_id").orderBy(
-        F.col("c_cos").desc(), F.col("cluster").asc()
-    )
-    probes = (
-        queries.join(F.broadcast(centroids))
-        .select(
-            "query_id",
-            "query_vec",
-            "cluster",
-            F.round(cosine(F.col("query_vec"), F.col("centroid")), places).alias("c_cos"),
-        )
-        .withColumn("p", F.row_number().over(pw))
-        .filter(F.col("p") <= n_probe)
-        .select("query_id", "query_vec", "cluster")
-    )
+    probes = _probes(
+        queries, spark.read.parquet(f"{path}/centroids"), n_probe, places
+    ).select("query_id", "query_vec", "cluster")
     probed_clusters = [r["cluster"] for r in probes.select("cluster").distinct().collect()]
     corpus = spark.read.parquet(f"{path}/corpus").filter(
         F.col("cluster").isin(probed_clusters)
     )
     scored = corpus.join(F.broadcast(probes), "cluster").select(
-        "query_id",
-        id_col,
-        F.round(cosine(F.col("query_vec"), F.col(vec_col)), places).alias("cos"),
+        "query_id", id_col, _cos(vec_col, places)
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col(id_col).asc())
-    return (
-        scored.filter(F.col("query_id") != F.col(id_col))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _top_k(scored, k, id_col)
 
 
 def near_dup_pairs_cosine(
@@ -653,12 +670,10 @@ def pq_index(
     - codebook: (subspace, code, centroid array<double>) — m·n_codes
       rows, always broadcastable.
 
-    Trainer switch mirrors :func:`ivf_index`: ``train_fraction=None``
-    fits one distributed pyspark.ml KMeans per subspace over the whole
-    corpus; a fraction collects the deterministic keyed sample ONCE
-    (sorted by key — partition order can't leak into the codebooks)
-    and trains all m codebooks with seeded NumPy Lloyd's on the driver
-    — the FAISS shape, and the 100 TB default. Encoding the FULL
+    Training collects :func:`_training_matrix` ONCE (the keyed sample
+    for a ``train_fraction``, the whole corpus for None) and fits all
+    m codebooks with seeded NumPy Lloyd's on the driver — the FAISS
+    shape, and the 100 TB default. Encoding the FULL
     corpus is a single map-only select: per subspace, a JVM expression
     argmin over the literal codebook (:func:`_nearest_code`) — no
     model-transform chain, no Python in the row path. Deterministic
@@ -667,77 +682,77 @@ def pq_index(
     (m lists of n_codes centroids, e.g. from :func:`opq_train`) to
     skip training entirely and only encode.
     """
-    spark = corpus.sparkSession
     if d is None:
         d = _probe_dim(corpus, vec_col)
     if d % m != 0:
         raise ValueError(f"dim {d} not divisible by m={m}")
     sub_d = d // m
-
-    def sub(vec: Column, s: int) -> Column:
-        return F.slice(vec, s * sub_d + 1, sub_d).cast("array<double>")
-
-    if codebooks is not None:
-        if len(codebooks) != m:
-            raise ValueError(f"expected {m} codebooks, got {len(codebooks)}")
-        codes = corpus.select(
-            F.col(id_col),
-            F.array(
-                *[_nearest_code(sub(F.col(vec_col), s), codebooks[s]) for s in range(m)]
-            ).alias("codes"),
-        )
-        codebook = spark.createDataFrame(
-            [(s, i, c) for s in range(m) for i, c in enumerate(codebooks[s])],
-            "subspace int, code int, centroid array<double>",
-        )
-        return codes, codebook
-
-    train = _training_sample(corpus, id_col, train_fraction)
-    codebooks = []
-    if train is not corpus:
-        import numpy as np
-
-        # collect unsorted (no shuffle), sort driver-side: the sample is
-        # driver-scale by design and the key sort keeps partition order
-        # out of the seeded trainer
-        rows = sorted(train.select(id_col, vec_col).collect(), key=lambda r: r[0])
-        X = np.array([list(r[1]) for r in rows], dtype=np.float64)
-        if X.ndim != 2:
-            raise ValueError("k-means training sample is empty — raise train_fraction")
-        for s in range(m):
-            codebooks.append(
-                _kmeans_np(X[:, s * sub_d : (s + 1) * sub_d], n_codes, seed=seed + s)
-            )
-    else:
-        from pyspark.ml.clustering import KMeans
-        from pyspark.ml.functions import array_to_vector
-
-        feats = corpus.select(
-            *[
-                array_to_vector(sub(F.col(vec_col), s)).alias(f"_sub{s}")
-                for s in range(m)
-            ]
-        )
-        for s in range(m):
-            fitted = KMeans(
-                k=n_codes, seed=seed + s, featuresCol=f"_sub{s}", predictionCol=f"_c{s}"
-            ).fit(feats)
-            codebooks.append([[float(x) for x in c] for c in fitted.clusterCenters()])
+    if codebooks is None:
+        X = _training_matrix(corpus, id_col, vec_col, train_fraction)
+        codebooks = [
+            _kmeans_np(X[:, s * sub_d : (s + 1) * sub_d], n_codes, seed=seed + s)
+            for s in range(m)
+        ]
+    elif len(codebooks) != m:
+        raise ValueError(f"expected {m} codebooks, got {len(codebooks)}")
+    vec = F.col(vec_col)
     codes = corpus.select(
         F.col(id_col),
         F.array(
-            *[_nearest_code(sub(F.col(vec_col), s), codebooks[s]) for s in range(m)]
+            *[
+                _nearest_code(
+                    F.slice(vec, s * sub_d + 1, sub_d).cast("array<double>"), codebooks[s]
+                )
+                for s in range(m)
+            ]
         ).alias("codes"),
     )
-    codebook = spark.createDataFrame(
-        [
-            (s, i, c)
-            for s in range(m)
-            for i, c in enumerate(codebooks[s])
-        ],
+    codebook = corpus.sparkSession.createDataFrame(
+        [(s, i, c) for s in range(m) for i, c in enumerate(codebooks[s])],
         "subspace int, code int, centroid array<double>",
     )
     return codes, codebook
+
+
+def _adc_tables(queries: DataFrame, codebook: DataFrame) -> DataFrame:
+    """PQ asymmetric-distance (ADC) lookup tables, built ONCE per query
+    (queries x codebook — broadcast-small): (query_id, lut, cn2) with
+    lut[s][c] = <query_sub_s, centroid_s,c> and cn2[s][c] =
+    ‖centroid_s,c‖², folded to per-subspace arrays, then per-query
+    matrices. A sub-vector is as long as its centroid."""
+
+    def by(key: str, val: str) -> Column:
+        return F.transform(
+            F.array_sort(F.collect_list(F.struct(key, val))), lambda e: e[val]
+        )
+
+    sub_d = F.size("centroid")
+    return (
+        queries.join(F.broadcast(codebook))
+        .select(
+            "query_id",
+            "subspace",
+            "code",
+            dot(
+                F.slice(F.col("query_vec"), F.col("subspace") * sub_d + 1, sub_d),
+                F.col("centroid"),
+            ).alias("part"),
+            dot(F.col("centroid"), F.col("centroid")).alias("cnorm2"),
+        )
+        .groupBy("query_id", "subspace")
+        .agg(by("code", "part").alias("lut_s"), by("code", "cnorm2").alias("norm_s"))
+        .groupBy("query_id")
+        .agg(by("subspace", "lut_s").alias("lut"), by("subspace", "norm_s").alias("cn2"))
+    )
+
+
+def _adc_sum(table: str, m: int) -> Column:
+    """Σ_s table[s][codes[s]] — a row-local fold over the m codes."""
+    return F.aggregate(
+        F.sequence(F.lit(0), F.lit(m - 1)),
+        F.lit(0.0),
+        lambda acc, s: acc + F.col(table)[s][F.col("codes")[s]],
+    )
 
 
 def cosine_topk_pq(
@@ -776,99 +791,20 @@ def cosine_topk_pq(
     still only ever read as codes. Rows-only correctness (k-means
     inside); recall pinned vs brute force in tests.
     """
-    from pyspark.sql import Window
-
-    if d is None:
-        d = _probe_dim(corpus, vec_col)
-    sub_d = d // m
     codes, codebook = pq_index(
         corpus, m=m, n_codes=n_codes, seed=seed, id_col=id_col, vec_col=vec_col,
         train_fraction=train_fraction, d=d, codebooks=codebooks,
     )
-    # LUT build: (query x codebook entry) -> partial dot + centroid
-    # norm^2, folded to per-subspace arrays then per-query matrices.
-    parts = (
-        queries.join(F.broadcast(codebook))
-        .select(
-            "query_id",
-            "subspace",
-            "code",
-            dot(
-                F.slice(F.col("query_vec"), F.col("subspace") * sub_d + 1, sub_d),
-                F.col("centroid"),
-            ).alias("part"),
-            dot(F.col("centroid"), F.col("centroid")).alias("cnorm2"),
-        )
-        .groupBy("query_id", "subspace")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("code", "part"))),
-                lambda e: e["part"],
-            ).alias("lut_s"),
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("code", "cnorm2"))),
-                lambda e: e["cnorm2"],
-            ).alias("norm_s"),
-        )
-        .groupBy("query_id")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("subspace", "lut_s"))),
-                lambda e: e["lut_s"],
-            ).alias("lut"),
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("subspace", "norm_s"))),
-                lambda e: e["norm_s"],
-            ).alias("cn2"),
-        )
-    )
-    q = queries.join(parts, "query_id").select(
+    q = queries.join(_adc_tables(queries, codebook), "query_id").select(
         "query_id", norm(F.col("query_vec")).alias("qnorm"), "lut", "cn2"
     )
-    idx = F.sequence(F.lit(0), F.lit(m - 1))
-    approx_dot = F.aggregate(
-        idx,
-        F.lit(0.0),
-        lambda acc, s: acc + F.col("lut")[s][F.col("codes")[s]],
+    approx_cos = _ratio(
+        _adc_sum("lut", m), F.col("qnorm") * F.sqrt(_adc_sum("cn2", m))
     )
-    approx_norm2 = F.aggregate(
-        idx,
-        F.lit(0.0),
-        lambda acc, s: acc + F.col("cn2")[s][F.col("codes")[s]],
+    scored = codes.join(F.broadcast(q)).select(
+        "query_id", id_col, F.round(approx_cos, places).alias("cos")
     )
-    scored = (
-        codes.join(F.broadcast(q))
-        .select(
-            "query_id",
-            id_col,
-            F.round(
-                approx_dot / (F.col("qnorm") * F.sqrt(approx_norm2)), places
-            ).alias("cos"),
-        )
-        .filter(F.col("query_id") != F.col(id_col))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col(id_col).asc())
-    if rerank is None:
-        return scored.withColumn("rank", F.row_number().over(w)).filter(
-            F.col("rank") <= k
-        )
-    shortlist = (
-        scored.withColumn("r", F.row_number().over(w))
-        .filter(F.col("r") <= rerank)
-        .select("query_id", id_col)
-    )
-    exact = (
-        corpus.join(F.broadcast(shortlist), id_col)
-        .join(F.broadcast(queries), "query_id")
-        .select(
-            "query_id",
-            id_col,
-            F.round(cosine(F.col("query_vec"), F.col(vec_col)), places).alias("cos"),
-        )
-    )
-    return exact.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
+    return _exact_rerank(corpus, queries, scored, k, rerank, id_col, vec_col, places)
 
 
 def _lit_vec(vals: list[float]) -> Column:
@@ -910,12 +846,12 @@ def sq_index(
     time saturating to code 0/255 by the clamp (the standard SQ
     trade). Encoding the full corpus is a map-only zip_with/fold over
     JVM expressions; a degenerate dim (hi == lo) encodes to 0 and
-    dequantizes to lo exactly."""
+    dequantizes to lo exactly. The min/max pass yields the dimension,
+    so ``d`` is never probed; it is accepted for symmetry with
+    :func:`pq_index`."""
     from pyspark.ml.functions import array_to_vector
     from pyspark.ml.stat import Summarizer
 
-    if d is None:
-        d = _probe_dim(corpus, vec_col)
     train = _training_sample(corpus, id_col, train_fraction)
     s = train.select(
         Summarizer.metrics("min", "max")
@@ -979,10 +915,6 @@ def cosine_topk_sq(
     shortlist, as in :func:`cosine_topk_pq`. Rows-only correctness
     (float-sum order makes cross-engine hashing fragile); quantization
     error and recall pinned in tests/test_sq.py."""
-    from pyspark.sql import Window
-
-    if d is None:
-        d = _probe_dim(corpus, vec_col)
     codes, lo, hi, step = sq_index(
         corpus, id_col=id_col, vec_col=vec_col,
         train_fraction=train_fraction, d=d,
@@ -1000,39 +932,11 @@ def cosine_topk_sq(
         F.lit(0.0),
         lambda acc, x: acc + x,
     )
-    scored = (
-        codes.join(F.broadcast(q))
-        .select(
-            "query_id",
-            id_col,
-            F.round(
-                approx_dot / (F.col("qnorm") * F.sqrt(F.col("anorm2"))), places
-            ).alias("cos"),
-        )
-        .filter(F.col("query_id") != F.col(id_col))
+    approx_cos = _ratio(approx_dot, F.col("qnorm") * F.sqrt(F.col("anorm2")))
+    scored = codes.join(F.broadcast(q)).select(
+        "query_id", id_col, F.round(approx_cos, places).alias("cos")
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col(id_col).asc())
-    if rerank is None:
-        return scored.withColumn("rank", F.row_number().over(w)).filter(
-            F.col("rank") <= k
-        )
-    shortlist = (
-        scored.withColumn("r", F.row_number().over(w))
-        .filter(F.col("r") <= rerank)
-        .select("query_id", id_col)
-    )
-    exact = (
-        corpus.join(F.broadcast(shortlist), id_col)
-        .join(F.broadcast(queries), "query_id")
-        .select(
-            "query_id",
-            id_col,
-            F.round(cosine(F.col("query_vec"), F.col(vec_col)), places).alias("cos"),
-        )
-    )
-    return exact.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
+    return _exact_rerank(corpus, queries, scored, k, rerank, id_col, vec_col, places)
 
 
 def ivfpq_index(
@@ -1052,8 +956,10 @@ def ivfpq_index(
     already removed. Returns (codes, centroids, codebook) where codes
     is (id, cluster, codes array<int>) — at scale written
     partitioned by cluster (see write_ivf_index) so probes prune
-    partitions AND scan only ~m bytes per row.
+    partitions AND scan only ~m bytes per row. A residual is as long
+    as its vector, so the corpus dimension is probed once, here.
     """
+    d = _probe_dim(corpus, vec_col)
     assigned, centroids = ivf_index(
         corpus, n_clusters=n_clusters, seed=seed, id_col=id_col, vec_col=vec_col,
         train_fraction=train_fraction,
@@ -1069,7 +975,7 @@ def ivfpq_index(
     )
     codes, codebook = pq_index(
         resid, m=m, n_codes=n_codes, seed=seed, id_col=id_col, vec_col="_resid",
-        train_fraction=train_fraction,
+        train_fraction=train_fraction, d=d,
     )
     codes = codes.join(resid.select(id_col, "cluster"), id_col)
     return codes, centroids, codebook
@@ -1104,89 +1010,22 @@ def cosine_topk_ivfpq(
     true neighbors in the top ``rerank``). Rows-only (two k-means
     stages); recall pinned vs brute force in tests.
     """
-    from pyspark.sql import Window
-
-    d = _probe_dim(corpus, vec_col)
-    sub_d = d // m
     codes, centroids, codebook = ivfpq_index(
         corpus, n_clusters=n_clusters, m=m, n_codes=n_codes, seed=seed,
         id_col=id_col, vec_col=vec_col, train_fraction=train_fraction,
     )
-    # probe ranking identical to cosine_topk_ivf, but keep <q, centroid>
-    pw = Window.partitionBy("query_id").orderBy(
-        F.col("c_cos").desc(), F.col("cluster").asc()
-    )
-    probes = (
-        queries.join(F.broadcast(centroids))
-        .select(
-            "query_id",
-            "query_vec",
-            "cluster",
-            F.round(cosine(F.col("query_vec"), F.col("centroid")), places).alias(
-                "c_cos"
-            ),
-            dot(F.col("query_vec"), F.col("centroid")).alias("qc_dot"),
-        )
-        .withColumn("p", F.row_number().over(pw))
-        .filter(F.col("p") <= n_probe)
+    # the residual LUT is cluster-independent (residual codebooks are
+    # shared across clusters): one per query, joined to its probes
+    probe_q = (
+        _probes(queries, centroids, n_probe, places)
         .select("query_id", "cluster", "qc_dot")
+        .join(_adc_tables(queries, codebook), "query_id")  # small x small
     )
-    # residual LUT per query (cluster-independent — residual codebooks
-    # are shared across clusters)
-    lut = (
-        queries.join(F.broadcast(codebook))
-        .select(
-            "query_id",
-            "subspace",
-            "code",
-            dot(
-                F.slice(F.col("query_vec"), F.col("subspace") * sub_d + 1, sub_d),
-                F.col("centroid"),
-            ).alias("part"),
-        )
-        .groupBy("query_id", "subspace")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("code", "part"))),
-                lambda e: e["part"],
-            ).alias("lut_s")
-        )
-        .groupBy("query_id")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("subspace", "lut_s"))),
-                lambda e: e["lut_s"],
-            ).alias("lut")
-        )
+    scored = codes.join(F.broadcast(probe_q), "cluster").select(
+        "query_id", id_col, (F.col("qc_dot") + _adc_sum("lut", m)).alias("adot")
     )
-    probe_q = probes.join(lut, "query_id")  # small x small
-    idx = F.sequence(F.lit(0), F.lit(m - 1))
-    approx_dot = F.col("qc_dot") + F.aggregate(
-        idx, F.lit(0.0), lambda acc, s: acc + F.col("lut")[s][F.col("codes")[s]]
-    )
-    shortlist_w = Window.partitionBy("query_id").orderBy(
-        F.col("adot").desc(), F.col(id_col).asc()
-    )
-    shortlist = (
-        codes.join(F.broadcast(probe_q), "cluster")
-        .select("query_id", id_col, approx_dot.alias("adot"))
-        .filter(F.col("query_id") != F.col(id_col))
-        .withColumn("r", F.row_number().over(shortlist_w))
-        .filter(F.col("r") <= rerank)
-        .select("query_id", id_col)
-    )
-    exact = (
-        corpus.join(F.broadcast(shortlist), id_col)
-        .join(F.broadcast(queries), "query_id")
-        .select(
-            "query_id",
-            id_col,
-            F.round(cosine(F.col("query_vec"), F.col(vec_col)), places).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col(id_col).asc())
-    return exact.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
+    return _exact_rerank(
+        corpus, queries, scored, k, rerank, id_col, vec_col, places, "adot"
     )
 
 
@@ -1288,17 +1127,8 @@ def opq_train(
     """
     import numpy as np
 
-    if d is None:
-        d = _probe_dim(corpus, vec_col)
-    train = _training_sample(corpus, id_col, train_fraction)
-    # collect unsorted (no shuffle), sort driver-side: the sample is
-    # driver-scale by design and the key sort keeps partition order
-    # out of the seeded trainer
-    rows = sorted(train.select(id_col, vec_col).collect(), key=lambda r: r[0])
-    X = np.array([list(r[1]) for r in rows], dtype=np.float64)
-    if X.ndim != 2 or not len(X):
-        raise ValueError("OPQ training sample is empty — raise train_fraction")
-    R = np.array(opq_rotation(d, seed=seed), dtype=np.float64)
+    X = _training_matrix(corpus, id_col, vec_col, train_fraction)
+    R = np.array(opq_rotation(d or X.shape[1], seed=seed), dtype=np.float64)
     for _ in range(iters):
         _, Q, _cb = _pq_quant_error(X, R, m, n_codes, seed)
         # max_R tr(R·XᵀQ): SVD XᵀQ = USVᵀ → R = VUᵀ
@@ -1453,15 +1283,10 @@ def pca_train(
     """
     import numpy as np
 
-    if d is None:
-        d = _probe_dim(corpus, vec_col)
+    X = _training_matrix(corpus, id_col, vec_col, train_fraction)
+    d = d or X.shape[1]
     if not 1 <= k <= d:
         raise ValueError(f"k must be in [1, {d}], got {k}")
-    train = _training_sample(corpus, id_col, train_fraction)
-    rows = sorted(train.select(id_col, vec_col).collect(), key=lambda r: r[0])
-    X = np.array([list(r[1]) for r in rows], dtype=np.float64)
-    if X.ndim != 2 or not len(X):
-        raise ValueError("PCA training sample is empty — raise train_fraction")
     mu = X.mean(axis=0)
     Xc = X - mu
     cov = (Xc.T @ Xc) / max(1, len(X) - 1)
@@ -1533,27 +1358,11 @@ def cosine_topk_pca(
     redq = pca_project(
         queries.withColumnRenamed("query_vec", vec_col), mean, W, vec_col=vec_col
     ).withColumnRenamed(vec_col, "query_vec")
-    short = cosine_topk_bruteforce(
-        red, redq, k=rerank or k, id_col=id_col, vec_col=vec_col, places=places + 2
-    ).select("query_id", id_col)
-    from pyspark.sql import Window
-
-    # exact re-rank of each query's OWN shortlist in full dimension
-    scored = (
-        corpus.join(short, id_col)
-        .join(F.broadcast(queries), "query_id")
-        .select(
-            "query_id",
-            id_col,
-            F.round(cosine(F.col("query_vec"), F.col(vec_col)), places).alias("cos"),
-        )
+    scored = red.join(F.broadcast(redq)).select(
+        "query_id", id_col, _cos(vec_col, places + 2)
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+    return _exact_rerank(
+        corpus, queries, scored, k, rerank or k, id_col, vec_col, places
     )
 
 
@@ -1586,8 +1395,6 @@ def rrf_fuse(
     """
     from functools import reduce
 
-    from pyspark.sql import Window
-
     u = reduce(
         lambda x, y: x.unionByName(y),
         [a.select(query_col, id_col, rank_col) for a in arms],
@@ -1598,11 +1405,9 @@ def rrf_fuse(
         .alias("rrf_e6"),
         F.count(F.lit(1)).cast("bigint").alias("n_arms"),
     )
-    w = Window.partitionBy(query_col).orderBy(
-        F.col("rrf_e6").desc(), F.col(id_col).asc()
-    )
-    return f.withColumn("fused_rank", F.row_number().over(w)).filter(
-        F.col("fused_rank") <= topk
+    return top_k_per_group(
+        f, [query_col], [F.col("rrf_e6").desc(), F.col(id_col).asc()], topk,
+        "fused_rank",
     )
 
 
@@ -1633,21 +1438,11 @@ def late_interaction_topk(
     double arithmetic is engine-reproducible; rounded to ``places``
     before ranking with id tiebreaks). ``dim`` must be divisible by
     ``n_sub``."""
-    from pyspark.sql import Window
-
     if dim % n_sub:
         raise ValueError(f"dim={dim} not divisible by n_sub={n_sub}")
     sd = dim // n_sub
     dv = F.col(vec_col).cast("array<double>")
     qv = F.col("query_vec").cast("array<double>")
-
-    def dot(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-
     parts = []
     for i in range(n_sub):
         qi = F.slice(qv, i * sd + 1, sd)
@@ -1660,11 +1455,4 @@ def late_interaction_topk(
     scored = corpus.join(F.broadcast(queries)).select(
         "query_id", id_col, maxsim.alias("maxsim")
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("maxsim").desc(), F.col(id_col).asc()
-    )
-    return (
-        scored.filter(F.col("query_id") != F.col(id_col))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _top_k(scored, k, id_col, "maxsim")

@@ -107,6 +107,10 @@ def test_ann_vectorized_empty_query_batch(spark):
 def test_ann_zero_norm_vector_contract(spark):
     """Zero vectors score cos=0.0 (defined contract) in BOTH scorer
     paths — NOT NaN, which would sort above every real score."""
+    from functools import reduce
+
+    from pyspark.sql import DataFrame
+
     from spark_cassandra_collabfiltering_spark.operators import similarity as sim
 
     rows = [(0, [1.0, 0.0]), (1, [0.0, 0.0]), (2, [1.0, 1.0]), (3, [-1.0, 0.0])]
@@ -119,6 +123,40 @@ def test_ann_zero_norm_vector_contract(spark):
     assert expr == vec
     assert expr[1] == 0.0  # the zero vector
     assert expr[3] == -1.0  # and it outranks genuinely negative scores
+
+    # a zero QUERY through every approximate scorer: the same rule, so
+    # no DIVIDE_BY_ZERO under ANSI in the ADC/SQ estimates — every
+    # candidate scores 0.0
+    rows = [(0, [0.0] * 4)] + [
+        (i, [float(i % 5) - 2.0, float(i % 7) - 3.0, float(i % 3) - 1.0, 1.0])
+        for i in range(1, 41)
+    ]
+    corpus = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
+    qs = sim.make_queries(corpus, [0])
+    pq = dict(m=2, n_codes=4)
+    scorers = {
+        "pq": lambda: sim.cosine_topk_pq(corpus, qs, k=3, **pq),
+        "pq_rerank": lambda: sim.cosine_topk_pq(corpus, qs, k=3, rerank=10, **pq),
+        "sq": lambda: sim.cosine_topk_sq(corpus, qs, k=3),
+        "sq_rerank": lambda: sim.cosine_topk_sq(corpus, qs, k=3, rerank=10),
+        "opq": lambda: sim.cosine_topk_opq(corpus, qs, k=3, **pq),
+        "opq_rerank": lambda: sim.cosine_topk_opq(corpus, qs, k=3, rerank=10, **pq),
+        "ivf": lambda: sim.cosine_topk_ivf(corpus, qs, k=3, n_clusters=4, n_probe=4),
+        "ivfpq": lambda: sim.cosine_topk_ivfpq(
+            corpus, qs, k=3, n_clusters=4, n_probe=4, rerank=10, **pq
+        ),
+        "pca": lambda: sim.cosine_topk_pca(corpus, qs, k=3, n_components=2, rerank=10),
+    }
+    # one action over all nine (a collect per scorer doubles the time)
+    got = {name: [] for name in scorers}
+    arms = [
+        run().select(F.lit(n).alias("scorer"), "rank", "cos") for n, run in scorers.items()
+    ]
+    for r in reduce(DataFrame.unionByName, arms).collect():
+        got[r["scorer"]].append((r["rank"], r["cos"]))
+    assert {n: sorted(v) for n, v in got.items()} == {
+        n: [(1, 0.0), (2, 0.0), (3, 0.0)] for n in scorers
+    }
 
 
 def test_foreach_batch_upsert_corrupt_target_raises(spark, tmp_path):
